@@ -739,11 +739,8 @@ def _q_corpus_curation(spark, sf_dir):
     # lazy checkpoint runs the quality→dedup→stratify chain ONCE (the
     # pack_shards offsets job materializes it) instead of once per
     # consumer; ~24 B/row, bounded at any corpus size. n_tokens is the
-    # same whitespace-word count token_counts emits (rules.WS split).
-    n_tokens = F.coalesce(
-        F.size(F.filter(F.split(F.col("text"), rules.WS),
-                        lambda w: w != F.lit(""))),
-        F.lit(0)).cast("long")
+    # same whitespace-word count token_counts emits.
+    n_tokens = rules.ws_token_count(F.col("text")).cast("long")
     tl = (s3.select("doc_id", "lang", n_tokens.alias("n_tokens"))
           .localCheckpoint(eager=False))
     packed = sampling.pack_shards(tl.select("doc_id", "n_tokens"),
@@ -855,10 +852,7 @@ def _q_corpus_mixture(spark, sf_dir):
     d = _docs(spark, sf_dir)
     t = d.select(
         "doc_id", "lang",
-        F.coalesce(
-            F.size(F.filter(F.split(F.col("text"), "[ \t\n\r]+"),
-                            lambda w: w != F.lit(""))),
-            F.lit(0)).cast("long").alias("n_tokens"))
+        rules.ws_token_count(F.col("text")).cast("long").alias("n_tokens"))
     mixed = mixing.mix_corpora({
         "en": (t.filter(F.col("lang") == "en"), MIX_BUDGET_EN),
         "other": (t.filter(F.col("lang") != "en"), MIX_BUDGET_OTHER),

@@ -55,11 +55,12 @@ def main() -> None:
     wanted = sys.argv[1:] or list(qs)
     for name in wanted:
         fn = qs[name]
-        sc.setJobDescription(f"bench_extra:{name}")
-        jobs0 = len(tracker.getJobIdsForGroup() or [])
+        group = f"bench_extra:{name}"
+        sc.setJobGroup(group, group)
         t0 = time.time()
         df = fn(spark, SF_DIR)
         build_s = time.time() - t0
+        jobs = len(tracker.getJobIdsForGroup(group))
         t0 = time.time()
         df.write.format("noop").mode("overwrite").save()
         first_s = time.time() - t0
@@ -75,8 +76,8 @@ def main() -> None:
             "build_s": round(build_s, 3),
             "first_s": round(first_s, 3),
             "best_s": round(best if best is not None else first_s, 3),
+            "jobs": jobs,
         }), flush=True)
-        sc.setJobDescription(None)
     spark.stop()
 
 

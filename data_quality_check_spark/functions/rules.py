@@ -60,17 +60,24 @@ def feature_columns(text: Column) -> dict[str, Column]:
     queries; the pipeline uses split_columns() + feature_columns_from() to
     compute the shared word/line arrays once per row.
     """
-    words = F.filter(F.split(text, WS), lambda w: w != F.lit(""))
-    lines = F.split(text, "\n")
-    return feature_columns_from(text, words, lines)
+    return feature_columns_from(text, ws_words(text), F.split(text, "\n"))
+
+
+def ws_words(text: Column) -> Column:
+    """The whitespace words of `text`: split on WS, empty pieces dropped
+    (the reference's D7 tokenizer). Every Spark-side whitespace word
+    split goes through here; the SQL twins spell the same class."""
+    return F.filter(F.split(text, WS), lambda w: w != F.lit(""))
+
+
+def ws_token_count(text: Column) -> Column:
+    """Number of whitespace words (0 for NULL text)."""
+    return F.coalesce(F.size(ws_words(text)), F.lit(0))
 
 
 def split_columns(text: Column) -> dict[str, Column]:
     """The two shared array columns, to materialize ONCE in a projection."""
-    return {
-        "_words": F.filter(F.split(text, WS), lambda w: w != F.lit("")),
-        "_lines": F.split(text, "\n"),
-    }
+    return {"_words": ws_words(text), "_lines": F.split(text, "\n")}
 
 
 def feature_columns_from(text: Column, words: Column,

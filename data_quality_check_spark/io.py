@@ -1,4 +1,4 @@
-"""Resumable batch IO: snapshot-manifest checkpointing over Parquet/Iceberg.
+"""Resumable batch IO: snapshot-manifest checkpointing over Parquet.
 
 The reference's config-producer keeps an mtime map of processed .proto files
 and only re-processes changed ones
@@ -6,8 +6,7 @@ and only re-processes changed ones
 HashMap at 258-289 is exactly checkpoint state). The batch engine
 generalizes that into snapshot-style checkpointing:
 
-  * input is a set of Parquet files (locally) or an Iceberg table's snapshot
-    file list (on a cluster);
+  * input is a set of Parquet files;
   * work is committed in CHUNKS of input files: each chunk runs as one Spark
     job writing its labeled output + its per-partition lineage/metrics rows,
     then a manifest entry for the chunk is published ATOMICALLY (temp file +
@@ -199,68 +198,6 @@ def run_job(
                      files_processed=processed)
 
 
-def run_job_iceberg(
-    spark: SparkSession,
-    input_table: str,
-    output_table: str,
-    metrics_table: str,
-    cfg: RuleSet = DEFAULT_RULESET,
-    *,
-    with_models: bool = True,
-    bc_models=None,
-    output_partitions: int | None = None,
-    checkpoint_table: str | None = None,
-) -> None:
-    """Cluster path: Iceberg catalog tables end-to-end.
-
-    Requires iceberg-spark-runtime on the cluster classpath (not available
-    in this sandbox — the parquet+manifest twin run_job() above executes the
-    IDENTICAL labeling plan and carries the tests; this function only swaps
-    the IO endpoints, per SURVEY §7 "Iceberg absence locally").
-
-    Resume model: the processed high-water mark is the input table's
-    snapshot id, recorded in `checkpoint_table` (conv-free control table
-    `(input_table string, snapshot_id long, ruleset_version string)`).
-    On restart, only rows appended after that snapshot are read via
-    Iceberg's incremental scan (`start-snapshot-id`) — the catalog-native
-    equivalent of the local file manifest.
-    """
-    last_snapshot = None
-    if checkpoint_table is not None:
-        try:
-            row = (spark.read.table(checkpoint_table)
-                   .filter(F.col("input_table") == input_table)
-                   .agg(F.max("snapshot_id")).first())
-            last_snapshot = row[0] if row else None
-        except Exception:
-            last_snapshot = None  # first run: control table absent
-
-    current = (spark.sql(
-        f"SELECT snapshot_id FROM {input_table}.snapshots "
-        f"ORDER BY committed_at DESC LIMIT 1").first() or [None])[0]
-    if last_snapshot is not None:
-        if current == last_snapshot:
-            return
-        df = (spark.read.format("iceberg")
-              .option("start-snapshot-id", str(last_snapshot))
-              .option("end-snapshot-id", str(current))
-              .table(input_table))
-    else:
-        df = spark.read.table(input_table)
-
-    labeled = pipeline.label_turns(
-        df, cfg, with_models=with_models, bc_models=bc_models)
-    out = pipeline.stable_order(labeled, output_partitions)
-    out.writeTo(output_table).append()
-    pipeline.metrics_table(labeled, cfg, with_models=with_models) \
-        .writeTo(metrics_table).append()
-    if checkpoint_table is not None and current is not None:
-        spark.createDataFrame(
-            [(input_table, current, cfg.version)],
-            "input_table string, snapshot_id long, ruleset_version string",
-        ).writeTo(checkpoint_table).append()
-
-
 def _read_committed(spark: SparkSession, output_dir: str,
                     sub: str) -> DataFrame:
     """Read ONLY manifest-committed chunk directories — orphan dirs from a
@@ -287,15 +224,10 @@ def read_latency(spark: SparkSession, output_dir: str) -> DataFrame:
     written only when measure_latency AND with_models were set for a
     chunk, so a mixed run (resume with different flags, CLI without
     --measure-latency) must not make the reader fail on missing paths.
-    Manifest entries record `has_latency`; pre-flag manifests fall back
-    to a directory-existence probe."""
-    entries = read_manifest(output_dir)
+    Manifest entries record `has_latency`."""
     base = os.path.join(output_dir, "latency")
-    ids = [
-        e["chunk_id"] for e in entries
-        if e.get("has_latency",
-                 os.path.isdir(os.path.join(base, f"chunk={e['chunk_id']}")))
-    ]
+    ids = [e["chunk_id"] for e in read_manifest(output_dir)
+           if e["has_latency"]]
     if not ids:
         raise FileNotFoundError(
             f"no committed chunks with latency data under {output_dir} "
@@ -347,18 +279,15 @@ def write_index_nonce(spark: SparkSession, path: str) -> str:
 
 def check_index_nonce(spark: SparkSession, path: str,
                       meta_nonce: str | None) -> None:
-    """Verify the data-dir nonce matches the one recorded in meta.
-    Pre-r5 saves carry neither → skip (nothing to verify). Any mismatch
-    means an interrupted save: fail loudly instead of reading data files
-    under the wrong metadata."""
+    """Verify the data-dir nonce matches the one recorded in meta. Any
+    mismatch means an interrupted save: fail loudly instead of reading
+    data files under the wrong metadata."""
     try:
         row = spark.read.schema("nonce string").json(
             os.path.join(path, "nonce")).first()
         dir_nonce = row["nonce"] if row else None
     except Exception:
         dir_nonce = None
-    if meta_nonce is None and dir_nonce is None:
-        return
     if meta_nonce != dir_nonce:
         raise ValueError(
             f"index at {path} is from an interrupted save "
@@ -367,17 +296,8 @@ def check_index_nonce(spark: SparkSession, path: str,
 
 
 def read_index_meta(spark: SparkSession, path: str, schema: str):
-    """Read index metadata; falls back to the legacy driver-local
-    meta.json format (pre-r4 saves) with absent fields left NULL."""
-    try:
-        return spark.read.schema(schema).json(
-            os.path.join(path, "meta")).first()
-    except Exception:
-        with open(os.path.join(path, "meta.json")) as fh:
-            legacy = json.load(fh)
-        fields = [f.split()[0] for f in schema.split(",")]
-        from pyspark.sql import Row
-        return Row(**{f: legacy.get(f) for f in fields})
+    """Read the one-row index metadata written by write_index_meta."""
+    return spark.read.schema(schema).json(os.path.join(path, "meta")).first()
 
 
 def write_bucketed(df: DataFrame, table: str, buckets: int,

@@ -38,8 +38,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.rules import WS, ws_words
+
 EOW = "</w>"
-WS = "[ \t\n\r]+"
 # truncate pathological "words" (base64 blobs, minified JS) before
 # spelling them out: a 10^4-char token would explode into a 10^4-symbol
 # sequence and dominate every iteration for zero vocab value
@@ -50,10 +51,9 @@ _CHECKPOINT_EVERY = 8
 def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
     """(word, cnt) over the lowercased whitespace-token corpus — the one
     corpus-wide pass; everything after runs on the vocabulary."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), WS),
-                     lambda w: w != F.lit(""))
     return (
-        docs.select(F.explode(words).alias("word"))
+        docs.select(F.explode(ws_words(F.lower(F.col(text_col))))
+                    .alias("word"))
         .filter(F.length("word") <= MAX_WORD_CHARS)
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -222,8 +222,7 @@ def learned_token_counts(docs: DataFrame, merges: list[dict],
     word-keyed shuffle otherwise; either way the corpus text never
     carries the chain.
     """
-    words = F.filter(F.split(F.lower(F.col(text_col)), WS),
-                     lambda w: w != F.lit(""))
+    words = ws_words(F.lower(F.col(text_col)))
     tok = (docs.select("doc_id", F.explode(words).alias("word"))
            .withColumn("word", F.substring("word", 1, MAX_WORD_CHARS)))
     vocab = tok.select("word").distinct()

@@ -27,7 +27,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.rules import WS, ws_words
 from ..models import hashing
+from .guards import barrier_filter, warn_window_cap
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -36,7 +38,7 @@ from ..models import hashing
 def normalize_text(col):
     """Canonical normalization for fingerprinting: lowercase + collapse
     whitespace + trim. Same expression exists in DuckDB (entry oracle)."""
-    return F.regexp_replace(F.regexp_replace(F.lower(col), "[ \t\n\r]+", " "),
+    return F.regexp_replace(F.regexp_replace(F.lower(col), WS, " "),
                             "^ | $", "")
 
 
@@ -69,9 +71,8 @@ def shingle_set(docs: DataFrame, n: int = 3) -> DataFrame:
     inlining the split+filter expression into every slice (what
     CollapseProject does to a single-projection form) makes the explode
     O(words²) per doc — measured ~12x slower (CLAUDE.md perf notes)."""
-    wdf = docs.select("doc_id", F.filter(
-        F.split(F.lower(F.col("text")), "[ \t\n\r]+"),
-        lambda w: w != F.lit("")).alias("_ws"))
+    wdf = docs.select("doc_id",
+                      ws_words(F.lower(F.col("text"))).alias("_ws"))
     words = F.col("_ws")
     nw = F.size(words)
     # shingle strings via zip_with over n SHIFTED slices of the words
@@ -267,12 +268,14 @@ def resolve_groups(pairs: DataFrame, a_col: str = "doc_a",
         if len(pdf) <= driver_max_edges:
             labels = _union_find_min_labels(
                 list(zip(pdf["src"].tolist(), pdf["dst"].tolist())))
-            import pandas as _pd
-            out = _pd.DataFrame(sorted(labels.items()),
-                                columns=["doc_id", "group_id"])
-            spark = pairs.sparkSession
-            return spark.createDataFrame(out.astype("int64"),
-                                         "doc_id long, group_id long")
+            # typed like the input ids (long, int, string, ...), the
+            # same schema the distributed path below produces
+            id_type = edges.schema["src"].dataType.simpleString()
+            out = pd.DataFrame(sorted(labels.items()),
+                               columns=["doc_id", "group_id"])
+            return pairs.sparkSession.createDataFrame(
+                out.astype(pdf["src"].dtype),
+                f"doc_id {id_type}, group_id {id_type}")
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -418,8 +421,6 @@ def _capped_band_pairs(bands_df: DataFrame, keys: list[str],
     the same mem/probe split as the ANN scorers and their SQL twins)."""
     from pyspark.sql import Window
 
-    from .guards import warn_window_cap
-
     warn_window_cap("max_members", max_members)
     w = Window.partitionBy(*keys).orderBy("doc_id")
     mem = (bands_df.withColumn("_rk", F.row_number().over(w))
@@ -434,6 +435,32 @@ def _capped_band_pairs(bands_df: DataFrame, keys: list[str],
                 F.greatest("a.doc_id", "b.doc_id").alias("doc_b"))
         .distinct()
     )
+
+
+def _agreeing_pairs(cand: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame,
+                    ids: tuple[str, str], k: int,
+                    threshold: float) -> DataFrame:
+    """Score candidate pairs by MinHash signature agreement and keep those
+    with est_jaccard >= threshold: `ids` names cand's (a, b) id columns,
+    whose signatures join back from sigs_a / sigs_b (doc_id, sig). The
+    barrier keeps the threshold filter from re-running the interpreted
+    zip_with/aggregate fold for every surviving pair."""
+    a, b = ids
+    sa = sigs_a.select(F.col("doc_id").alias(a), F.col("sig").alias("sig_a"))
+    sb = sigs_b.select(F.col("doc_id").alias(b), F.col("sig").alias("sig_b"))
+    scored = (
+        cand.join(sa, a).join(sb, b)
+        .select(
+            a, b,
+            (F.aggregate(
+                F.zip_with("sig_a", "sig_b",
+                           lambda x, y: (x == y).cast("int")),
+                F.lit(0), lambda acc, v: acc + v,
+            ).cast("double") / k).alias("est_jaccard"),
+        )
+    )
+    return (barrier_filter(scored, F.col("est_jaccard") >= threshold)
+            .select(a, b, "est_jaccard"))
 
 
 def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.7,
@@ -468,30 +495,8 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.7,
     )
     cand = _capped_band_pairs(bands_df, ["band", "band_hash"],
                               max_band_members)
-    sa = sig_df.select(F.col("doc_id").alias("doc_a"),
-                       F.col("sig").alias("sig_a"))
-    sb = sig_df.select(F.col("doc_id").alias("doc_b"),
-                       F.col("sig").alias("sig_b"))
-    scored = (
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            (F.aggregate(
-                F.zip_with("sig_a", "sig_b",
-                           lambda x, y: (x == y).cast("int")),
-                F.lit(0), lambda acc, v: acc + v,
-            ).cast("double") / k).alias("est_jaccard"),
-        )
-        # pushdown barrier (see plans/pipeline.ruleset_diff): without it
-        # the threshold filter is pushed below this projection with the
-        # whole interpreted zip_with/aggregate fold substituted in, so
-        # every surviving pair pays the 32-element HOF twice
-        .withColumn("_nd", F.spark_partition_id())
-    )
-    return (scored.filter(
-        F.when(F.col("_nd") >= 0, F.col("est_jaccard") >= threshold)
-        .otherwise(F.lit(False)))
-        .select("doc_a", "doc_b", "est_jaccard"))
+    return _agreeing_pairs(cand, sig_df, sig_df, ("doc_a", "doc_b"), k,
+                           threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -636,9 +641,7 @@ def dedup_spans(docs: DataFrame, text_col: str = "text",
 
     words = docs.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.col(text_col), "[ \t\n\r]+"),
-                     lambda w: w != F.lit(""))).alias("pos", "word"),
+        F.posexplode(ws_words(F.col(text_col))).alias("pos", "word"),
     )
     brk = (F.substring(F.md5(F.lower(F.col("word"))), 1, 1)
            == SPAN_BP_HEX).cast("int")
@@ -848,8 +851,7 @@ def minhash_load(spark, path: str) -> MinHashIndex:
     """Load a saved index; a bucketed save is read through its catalog
     table (zero-exchange join-back), falling back to the plain parquet
     files when the catalog doesn't know it (fresh session, no shared
-    metastore). Pre-r4 saves (driver-local meta.json) load via the
-    legacy fallback in io.read_index_meta."""
+    metastore)."""
     import os
 
     from .. import io as dq_io
@@ -879,8 +881,6 @@ def incremental_dedup_pairs(index: MinHashIndex, new_docs: DataFrame,
     rank-capped per band bucket (hot-band guard: a boilerplate class in
     the corpus otherwise multiplies every matching new doc by its whole
     population); signatures join back on the candidate pairs only."""
-    from .guards import warn_window_cap
-
     warn_window_cap("max_band_members", max_band_members)
     new_sig = _sig_table(new_docs, index.k, index.n_bands).localCheckpoint()
     new_bands = new_sig.select(
@@ -896,27 +896,8 @@ def incremental_dedup_pairs(index: MinHashIndex, new_docs: DataFrame,
                 F.col("c.doc_id").alias("corpus_doc"))
         .distinct()
     )
-    sa = new_sig.select(F.col("doc_id").alias("new_doc"),
-                        F.col("sig").alias("sig_a"))
-    sb = index.sigs.select(F.col("doc_id").alias("corpus_doc"),
-                           F.col("sig").alias("sig_b"))
-    scored = (
-        cand.join(sa, "new_doc").join(sb, "corpus_doc")
-        .select(
-            "new_doc", "corpus_doc",
-            (F.aggregate(
-                F.zip_with("sig_a", "sig_b",
-                           lambda x, y: (x == y).cast("int")),
-                F.lit(0), lambda acc, v: acc + v,
-            ).cast("double") / index.k).alias("est_jaccard"),
-        )
-        # pushdown barrier — see minhash_lsh_pairs
-        .withColumn("_nd", F.spark_partition_id())
-    )
-    return (scored.filter(
-        F.when(F.col("_nd") >= 0, F.col("est_jaccard") >= threshold)
-        .otherwise(F.lit(False)))
-        .select("new_doc", "corpus_doc", "est_jaccard"))
+    return _agreeing_pairs(cand, new_sig, index.sigs,
+                           ("new_doc", "corpus_doc"), index.k, threshold)
 
 
 def incremental_minhash_sql(corpus_where: str, new_where: str,
@@ -1040,8 +1021,6 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
         compute, schema="doc_id long, simhash long, band int, band_key long"
     ).localCheckpoint()  # probe + member-rank consumers
     from pyspark.sql import Window
-
-    from .guards import warn_window_cap
 
     warn_window_cap("max_band_members", max_band_members)
     w = Window.partitionBy("band", "band_key").orderBy("doc_id")

@@ -1,4 +1,5 @@
-"""Shared skew-guard plumbing for rank-cap operators.
+"""Shared plan guards: the predicate-pushdown barrier and the skew-guard
+plumbing for rank-cap operators.
 
 The repo's hot-key discipline (CLAUDE.md) rests on Catalyst's PARTIAL
 WindowGroupLimit: a `row_number() <= cap` filter gets a map-side
@@ -12,6 +13,8 @@ threshold is loud (r4 ADVICE)."""
 from __future__ import annotations
 
 import warnings
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 WINDOW_GROUP_LIMIT_THRESHOLD = 1000
 
@@ -27,3 +30,26 @@ def warn_window_cap(param: str, value: int,
             "spark.sql.optimizer.windowGroupLimitThreshold to match, or "
             f"keep {param} <= {threshold}",
             stacklevel=3)
+
+
+def barrier_filter(df: DataFrame, cond: Column) -> DataFrame:
+    """`df.filter(cond)`, pinned ABOVE df's projections.
+
+    PushDownPredicates substitutes aliases while it pushes a filter below
+    a Project, so a condition over a column computed from heavy
+    expressions (split/translate features, an interpreted zip_with fold,
+    a Python UDF) is re-expanded inline and every surviving row pays that
+    work twice — qf_ruleset_diff measured 58 split() occurrences vs 2.
+    A predicate, even a non-deterministic one, still pushes through any
+    all-deterministic Project: the rule only checks the PROJECT FIELDS.
+    So the barrier is a non-deterministic project field, `_nd =
+    spark_partition_id()` (identically >= 0), that the filter references:
+    the projection holding it can never host a pushed-through predicate,
+    the filter stays on top, and every upstream expression evaluates once
+    per row. Nothing here wants scan-level pushdown (the callers' inputs
+    are derived columns), so the barrier costs one int per row.
+
+    The returned frame still carries `_nd`; callers select their columns.
+    """
+    return (df.withColumn("_nd", F.spark_partition_id())
+            .filter(F.when(F.col("_nd") >= 0, cond).otherwise(F.lit(False))))

@@ -20,12 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.rules import WS  # ONE whitespace class repo-wide
-
-
-def _words(text_col):
-    return F.filter(F.split(F.lower(text_col), WS),
-                    lambda w: w != F.lit(""))
+from ..functions.rules import WS, ws_words  # ONE whitespace class
 
 
 def ngram_counts(docs: DataFrame, n: int = 2, text_col: str = "text",
@@ -38,7 +33,7 @@ def ngram_counts(docs: DataFrame, n: int = 2, text_col: str = "text",
     # transform lambda indexes it per n-gram, and CollapseProject would
     # otherwise inline the split+filter expression into every access —
     # O(words²) per doc, measured 12x slower (CLAUDE.md perf notes).
-    wdf = docs.select(_words(F.col(text_col)).alias("_ws"))
+    wdf = docs.select(ws_words(F.lower(F.col(text_col))).alias("_ws"))
     ws = F.col("_ws")
     nw = F.size(ws)
     grams = F.when(nw >= n, F.transform(
@@ -60,7 +55,7 @@ def bigram_model(docs: DataFrame, text_col: str = "text",
     bigram CONTEXT (its occurrences as the first word), so probabilities
     per context sum to ~1. Two map-side-combinable aggregates + one
     context-keyed join; integer-scaled for engine-exact comparison."""
-    wdf = docs.select(_words(F.col(text_col)).alias("_ws"))
+    wdf = docs.select(ws_words(F.lower(F.col(text_col))).alias("_ws"))
     ws = F.col("_ws")
     nw = F.size(ws)
     pairs = F.when(nw >= 2, F.transform(

@@ -3,17 +3,17 @@ language ID — the document-corpus views of the transcript rules.
 
 All native expressions (whole-stage codegen); langid is the broadcast-model
 pandas UDF from functions/udfs.py. Fingerprints use md5 (identical builtin
-in Spark and DuckDB) plus a numpy rolling-hash variant for tests.
+in Spark and DuckDB).
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_RULESET, RuleSet
 from ..functions import rules
 from ..operators.dedup import normalize_text
+from ..operators.guards import barrier_filter
 
 
 # BPE-ish subword estimate: BPE pre-tokenizes into letter runs / digit
@@ -33,10 +33,7 @@ _PIECES_RE = "([A-Za-zÀ-ÖØ-öø-ÿ]+|[0-9]+|[^A-Za-z0-9À-ÖØ-öø-ÿ \t\n\r
 
 
 def _pieces(text):
-    return F.filter(
-        F.split(F.regexp_replace(text, _PIECES_RE, " $1 "), "[ \t\n\r]+"),
-        lambda w: w != F.lit(""),
-    )
+    return rules.ws_words(F.regexp_replace(text, _PIECES_RE, " $1 "))
 
 
 # The piece classes are HOMOGENEOUS BY CONSTRUCTION (the segmentation
@@ -101,14 +98,12 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     runs / digit runs / single symbols), and the subword-token estimate
     (bpe_token_estimate) — the budget unit for shard packing."""
     text = F.col(text_col)
-    words = F.filter(F.split(text, rules.WS), lambda w: w != F.lit(""))
     # one segmentation pass shared by n_pieces and the subword estimate
     # (the pieces regexp is the expensive part — own projection, same
     # rule as shingle_set)
     pre = docs.select("doc_id", text.alias("_t"),
                       _pieces(text).alias("_p"),
-                      F.coalesce(F.size(words), F.lit(0))
-                      .alias("n_tokens"))
+                      rules.ws_token_count(text).alias("n_tokens"))
     return pre.select(
         "doc_id",
         F.coalesce(F.length("_t"), F.lit(0)).alias("n_chars"),
@@ -151,15 +146,11 @@ def quality_pass_ids(docs: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
 
     `quality_scores(...).filter("passes")` lets PushDownPredicates
     substitute the whole reasons expression into the filter, re-expanding
-    every feature inline (the text re-splits ~9x per row — same blowup
-    as plans/pipeline.ruleset_diff, where it measured 58 split()
-    occurrences). The non-deterministic `_nd` projection field pins the
-    filter above the shared feature projections so the split/translate
-    work runs once per row."""
-    q = (quality_scores(docs, cfg, text_col)
-         .withColumn("_nd", F.spark_partition_id()))
-    return (q.filter(F.when(F.col("_nd") >= 0, F.col("passes"))
-                     .otherwise(F.lit(False)))
+    every feature inline (the text re-splits ~9x per row);
+    guards.barrier_filter keeps the filter above the shared feature
+    projections so the split/translate work runs once per row."""
+    return (barrier_filter(quality_scores(docs, cfg, text_col),
+                           F.col("passes"))
             .select("doc_id"))
 
 
@@ -170,20 +161,6 @@ def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.md5(normalize_text(F.col(text_col))).alias("fingerprint"),
     )
-
-
-def rolling_fingerprint_np(texts: list, window: int = 16) -> np.ndarray:
-    """Numpy rolling-hash fingerprint (min-of-window polynomial hashes) —
-    winnowing-style; used in tests as the non-cryptographic variant."""
-    from ..models import hashing
-
-    n = len(texts)
-    buf, starts, _ = hashing.encode_batch(texts, max_bytes=4096)
-    h, seg = hashing.ngram_hashes(buf, starts, min(window, 8))
-    out = np.full(n, (1 << 61) - 1, dtype=np.int64)
-    if h.size:
-        np.minimum.at(out, seg, h.astype(np.int64) * 2654435761 % ((1 << 61) - 1))
-    return out
 
 
 def langid_table(docs: DataFrame, bc_models, text_col: str = "text") -> DataFrame:
@@ -280,9 +257,8 @@ def chunk_documents(docs: DataFrame, max_tokens: int = 128,
     # words materialized in its own projection: the window transform
     # slices it per chunk, and an inlined split would re-run per slice
     # (see shingle_set — measured ~12x)
-    wdf = docs.select("doc_id", F.filter(
-        F.split(F.col(text_col), rules.WS),
-        lambda w: w != F.lit("")).alias("_ws"))
+    wdf = docs.select("doc_id",
+                      rules.ws_words(F.col(text_col)).alias("_ws"))
     words = F.col("_ws")
     n = F.size(words)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(step))
@@ -338,10 +314,7 @@ def vocab_topk(docs: DataFrame, k: int = 100,
     vocabulary)."""
     text = F.col(text_col)
     tokens = docs.select(
-        F.explode(
-            F.filter(F.split(F.lower(text), rules.WS),
-                     lambda w: w != F.lit(""))
-        ).alias("token"))
+        F.explode(rules.ws_words(F.lower(text))).alias("token"))
     counts = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     return counts.orderBy(F.desc("n"), F.asc("token")).limit(k)
 

@@ -53,6 +53,7 @@ def curate_corpus(
     heuristic stage, the CCNet/FineWeb gate order (cheap rules first,
     model score second, dedup last)."""
     from ..operators import dedup, domains, sampling, textstats
+    from ..operators.guards import barrier_filter
 
     q = textstats.quality_pass_ids(docs, cfg)
     cur = docs.join(q, "doc_id")
@@ -60,13 +61,10 @@ def curate_corpus(
     if quality_model_bc is not None:
         qm = textstats.quality_model_table(
             cur, quality_model_bc, threshold=min_quality)
-        # pushdown barrier (guide §4.4 shape): a filter on the UDF-derived
-        # keep_quality column otherwise gets pushed below the projection
-        # with the scoring UDF substituted in — every surviving row would
-        # pay the quality model twice
-        qm = qm.withColumn("_nd", F.spark_partition_id())
-        keep = (qm.filter(F.when(F.col("_nd") >= 0, F.col("keep_quality"))
-                          .otherwise(F.lit(False)))
+        # barrier: the keep_quality filter stays above the scoring
+        # projection, so the model runs once per doc (pinned by
+        # test_plans.py::test_barrier_keeps_heavy_expr_once)
+        keep = (barrier_filter(qm, F.col("keep_quality"))
                 .select("doc_id"))
         cur = cur.join(keep, "doc_id")
 

@@ -21,12 +21,13 @@ Scale design (100 TB / 10^12 turns):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_RULESET, RuleSet
 from ..functions import rules
 from ..functions.scrub import scrub_column
 from ..functions.udfs import broadcast_models, make_scores_udf
+from ..operators.guards import barrier_filter
 
 FEATURE_NAMES = (
     "n_chars", "n_words", "n_lines", "mean_word_len", "max_word_len",
@@ -40,17 +41,13 @@ def dup_flag_column(df: DataFrame, strategy: str = "broadcast"):
 
     strategy='broadcast' (default, the 100 TB path): aggregate a 2-column
     projection — the shuffle carries only (conv_id, turn_idx), never text —
-    then broadcast-join the (rare) duplicated keys back. Falls back to
-    strategy='window' (full-row shuffle) when duplicate keys are expected to
-    be a large fraction of the input and would not fit in a broadcast.
+    then broadcast-join the (rare) duplicated keys back.
+    strategy='none' (streaming): no dup detection, every count is 1.
     """
     if strategy == "none":
         # streaming path: no global view per micro-batch — dup handling is
         # dropDuplicates-within-watermark upstream or a batch sweep later
         return df, F.lit(1)
-    if strategy == "window":
-        return df, F.count(F.lit(1)).over(
-            Window.partitionBy("conv_id", "turn_idx"))
     dup_keys = (
         df.groupBy("conv_id", "turn_idx")
         .agg(F.count(F.lit(1)).alias("_dup_count"))
@@ -58,7 +55,7 @@ def dup_flag_column(df: DataFrame, strategy: str = "broadcast"):
         .select(F.col("conv_id").alias("_dk_conv"),
                 F.col("turn_idx").alias("_dk_idx"), "_dup_count")
     )
-    # null-safe keys: the window/DuckDB/oracle twins group NULL keys together
+    # null-safe keys: the DuckDB/oracle twins group NULL keys together
     joined = df.join(
         F.broadcast(dup_keys),
         F.col("conv_id").eqNullSafe(F.col("_dk_conv"))
@@ -66,6 +63,24 @@ def dup_flag_column(df: DataFrame, strategy: str = "broadcast"):
         "left",
     )
     return joined, F.coalesce(F.col("_dup_count"), F.lit(1))
+
+
+def _featurize(df: DataFrame, dup_strategy: str = "broadcast"):
+    """The prelude label_turns and ruleset_diff share: dup flag, the shared
+    word/line arrays and every feature, each materialized ONCE per row in
+    its own projection (CollapseProject keeps multi-referenced non-cheap
+    aliases there, so split/translate run once instead of once per
+    consuming rule). Returns (df', dup_count, feats, input_cols)."""
+    text = F.col("text")
+    out, dup_count = dup_flag_column(df, dup_strategy)
+    out = out.withColumns(rules.split_columns(text))
+    feat_exprs = rules.feature_columns_from(
+        text, F.col("_words"), F.col("_lines"))
+    out = out.withColumns({f"_f_{k}": v for k, v in feat_exprs.items()})
+    feats = {k: F.col(f"_f_{k}") for k in feat_exprs}
+    cols = {c: F.col(c) for c in ("conv_id", "turn_idx", "role", "text",
+                                  "tool", "ts")}
+    return out, dup_count, feats, cols
 
 
 def label_turns(
@@ -97,20 +112,7 @@ def label_turns(
     which is why the gate keeps the eager default."""
     text = F.col("text")
     in_cols = df.columns
-
-    out, dup_count = dup_flag_column(df, dup_strategy)
-
-    # materialize shared arrays + feature values ONCE per row (CollapseProject
-    # keeps multi-referenced non-cheap aliases in their own projection, so
-    # split/translate run once instead of once per consuming rule)
-    out = out.withColumns(rules.split_columns(text))
-    feat_exprs = rules.feature_columns_from(
-        text, F.col("_words"), F.col("_lines"))
-    out = out.withColumns({f"_f_{k}": v for k, v in feat_exprs.items()})
-    feats = {k: F.col(f"_f_{k}") for k in feat_exprs}
-
-    cols = {c: F.col(c) for c in ("conv_id", "turn_idx", "role", "text",
-                                  "tool", "ts")}
+    out, dup_count, feats, cols = _featurize(df, dup_strategy)
     flags = rules.validation_flags(cols, cfg, dup_count)
     flags += rules.heuristic_flags(feats, text, cfg)
 
@@ -283,8 +285,8 @@ def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
     return metrics
 
 
-def ruleset_diff(df: DataFrame, cfg_old: RuleSet, cfg_new: RuleSet,
-                 *, with_models: bool = False) -> DataFrame:
+def ruleset_diff(df: DataFrame, cfg_old: RuleSet,
+                 cfg_new: RuleSet) -> DataFrame:
     """Ruleset-migration impact: label the SAME rows under two ruleset
     versions in ONE pass and report every turn whose keep decision flips,
     with both reason lists.
@@ -295,47 +297,19 @@ def ruleset_diff(df: DataFrame, cfg_old: RuleSet, cfg_new: RuleSet,
     exactly what changes. ONE pass: one scan, one dup-key detection, one
     feature derivation — only the threshold comparisons run twice. No
     self-join (which would also mis-multiply duplicated composite keys).
+    Heuristic rules only: model-score thresholds diff by comparing the
+    scored lang_conf/ppl columns of one label_turns pass.
     """
     text = F.col("text")
-    out, dup_count = dup_flag_column(df)
-    out = out.withColumns(rules.split_columns(text))
-    feat_exprs = rules.feature_columns_from(
-        text, F.col("_words"), F.col("_lines"))
-    out = out.withColumns({f"_f_{k}": v for k, v in feat_exprs.items()})
-    feats = {k: F.col(f"_f_{k}") for k in feat_exprs}
-    cols = {c: F.col(c) for c in ("conv_id", "turn_idx", "role", "text",
-                                  "tool", "ts")}
-    if with_models:
-        raise NotImplementedError(
-            "model thresholds diff fine too, but the oracle twin is "
-            "heuristic-only; score once and compare lang_conf/ppl "
-            "thresholds on the scored columns if needed")
-    sides = {}
+    out, dup_count, feats, cols = _featurize(df)
     for tag, cfg in (("old", cfg_old), ("new", cfg_new)):
         flags = rules.validation_flags(cols, cfg, dup_count)
         flags += rules.heuristic_flags(feats, text, cfg)
-        reasons = rules.reasons_array(flags)
-        sides[tag] = reasons
-    out = out.withColumn("_r_old", sides["old"])
-    out = out.withColumn("_r_new", sides["new"])
-    # The flip filter must NOT be pushed below the _r_/_f_ projections:
-    # PushDownPredicates substitutes aliases while pushing, so the pushed
-    # condition re-expands EVERY feature (split/translate/HOF) inline —
-    # measured 58 split() occurrences vs 2 in the unfiltered plan, i.e.
-    # the text re-splits ~20x per row inside one filter. Predicates (even
-    # non-deterministic ones) push through any all-deterministic Project,
-    # so the barrier must live in the PROJECT FIELDS: `_nd` is a
-    # non-deterministic column (spark_partition_id, identically >= 0)
-    # that the filter references — the projection holding it can then
-    # never host a pushed-through predicate, the filter stays on top,
-    # and every feature evaluates once per row from its shared
-    # projection. Nothing downstream needs scan-level pushdown (the
-    # derivation is narrow and reads every row regardless).
-    out = out.withColumn("_nd", F.spark_partition_id())
+        out = out.withColumn(f"_r_{tag}", rules.reasons_array(flags))
+    # barrier: a pushed-down flip filter would re-expand every feature
     flips = (F.size("_r_old") == 0) != (F.size("_r_new") == 0)
     return (
-        out.filter(F.when(F.col("_nd") >= 0, flips)
-                   .otherwise(F.lit(False)))
+        barrier_filter(out, flips)
         .select(
             "conv_id", "turn_idx",
             (F.size("_r_old") == 0).alias("keep_old"),

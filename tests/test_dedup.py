@@ -159,6 +159,21 @@ def test_resolve_groups_driver_path_matches_distributed(spark):
     assert (22, 0) in fast and (30, 30) in fast and (31, 30) in fast
 
 
+def test_resolve_groups_driver_path_keeps_string_ids(spark):
+    """String doc ids: the driver union-find fast path must return the
+    same (doc_id, group_id) rows, typed like the input ids, as the
+    distributed label propagation — not crash or coerce to long."""
+    edges = [("d03", "d10"), ("d10", "d07"), ("b", "a"), ("x9", "x10")]
+    pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
+    fast_df = dedup.resolve_groups(pairs)
+    fast = {tuple(r) for r in fast_df.collect()}
+    dist = {tuple(r) for r in dedup.resolve_groups(
+        pairs, driver_max_edges=None).collect()}
+    assert fast == dist
+    assert dict(fast_df.dtypes) == {"doc_id": "string", "group_id": "string"}
+    assert ("d10", "d03") in fast and ("x9", "x10") in fast
+
+
 def test_resolve_groups_probe_cap_falls_back_to_distributed(spark):
     """An edge list larger than driver_max_edges must take the
     distributed path and still label correctly (the probe collects at

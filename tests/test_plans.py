@@ -212,3 +212,65 @@ def test_quality_pass_ids_equals_filtered_scores(spark):
     ref = {r[0] for r in textstats.quality_scores(docs)
            .filter("passes").select("doc_id").collect()}
     assert fast == ref and len(fast) > 0
+
+
+def _barrier_cases():
+    """(id, build(spark, bc_models) -> DataFrame, heavy-expression regex)
+    for every guards.barrier_filter caller."""
+    import dataclasses
+    import re
+
+    from data_quality_check_spark.config import DEFAULT_RULESET
+    from data_quality_check_spark.functions.rules import WS
+    from data_quality_check_spark.operators import dedup, textstats
+    from data_quality_check_spark.plans import curation
+
+    word_split = r"split\(text#\d+, " + re.escape(WS)
+
+    def docs(spark):
+        return spark.read.parquet(f"{SF}/documents.parquet")
+
+    def diff(spark, bc):
+        v2 = dataclasses.replace(DEFAULT_RULESET, version="v2", min_words=1)
+        return pipeline.ruleset_diff(transcripts.load(spark, SF),
+                                     DEFAULT_RULESET, v2)
+
+    def incremental(spark, bc):
+        d = docs(spark)
+        index = dedup.minhash_build(d.filter("doc_id % 2 = 0"),
+                                    persist=False)
+        return dedup.incremental_dedup_pairs(index,
+                                             d.filter("doc_id % 2 = 1"))
+
+    return [
+        ("ruleset_diff", diff, word_split),
+        ("quality_pass_ids",
+         lambda spark, bc: textstats.quality_pass_ids(docs(spark)),
+         word_split),
+        ("minhash_lsh_pairs",
+         lambda spark, bc: dedup.minhash_lsh_pairs(docs(spark)),
+         r"zip_with\("),
+        ("incremental_dedup_pairs", incremental, r"zip_with\("),
+        ("curate_corpus",
+         lambda spark, bc: curation.curate_corpus(
+             docs(spark), span_dedup=False, quality_model_bc=bc),
+         "ArrowEvalPython"),
+    ]
+
+
+_BARRIER_CASES = _barrier_cases()
+
+
+@pytest.mark.parametrize("build,heavy", [c[1:] for c in _BARRIER_CASES],
+                         ids=[c[0] for c in _BARRIER_CASES])
+def test_barrier_keeps_heavy_expr_once(spark, bc_models, build, heavy):
+    """Every guards.barrier_filter caller: the filter stays above the
+    projection that computes its heavy input, so the optimized plan holds
+    that expression exactly once. Without the barrier the split and
+    zip_with cases push the filter down with the expression substituted
+    in a second time."""
+    import re
+
+    df = build(spark, bc_models)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(heavy, plan)) == 1, plan
