@@ -95,6 +95,8 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.time()
 
     if args.mode == "curate":
+        from pyspark.sql import Observation, functions as F
+
         from .plans import curation
 
         docs = spark.read.parquet(args.input)
@@ -106,15 +108,19 @@ def main(argv: list[str] | None = None) -> int:
             docs, blocked_hosts=blocked, domain_cap=args.domain_cap,
             span_dedup=not args.no_span_dedup, budget=args.budget,
             quality_model_bc=q_bc, min_quality=args.min_quality)
-        out.write.mode("overwrite").parquet(args.output)
-        kept = spark.read.parquet(args.output).count()
+        # counted in the write's result stage instead of a re-read
+        kept = Observation("curate")
+        (out.observe(kept, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(args.output))
         print(json.dumps({
             "mode": "curate",
             "input_docs": docs.count(),
-            "kept_docs": kept,
+            "kept_docs": kept.get["n"],
             "sec": round(time.time() - t0, 2),
         }))
         return 0
+    # fail before any work on an output dir whose manifest lacks counts
+    dq_io.committed_turns(args.output)
     bc = None if args.no_models else broadcast_models(spark)
     report = dq_io.run_job(
         spark, args.input, args.output,
@@ -124,11 +130,10 @@ def main(argv: list[str] | None = None) -> int:
         measure_latency=args.measure_latency,
         models_on_survivors=args.lazy_scoring,
     )
-    n = dq_io.read_output(spark, args.output).count()
     print(json.dumps({
         "chunks_run": report.chunks_run,
         "chunks_skipped": report.chunks_skipped,
-        "output_turns": n,
+        "output_turns": dq_io.committed_turns(args.output),
         "sec": round(time.time() - t0, 2),
     }))
     return 0

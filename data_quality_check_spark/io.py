@@ -7,10 +7,12 @@ HashMap at 258-289 is exactly checkpoint state). The batch engine
 generalizes that into snapshot-style checkpointing:
 
   * input is a set of Parquet files;
-  * work is committed in CHUNKS of input files: each chunk runs as one Spark
-    job writing its labeled output + its per-partition lineage/metrics rows,
-    then a manifest entry for the chunk is published ATOMICALLY (temp file +
-    os.replace — the local stand-in for an Iceberg snapshot commit);
+  * work is committed in CHUNKS of input files: each chunk is labeled ONCE
+    into a cache that feeds its labeled-turns write and its per-partition
+    lineage/metrics write; the turns write observes the chunk's turn and
+    keep/drop counts in flight, and a manifest entry carrying them is then
+    published ATOMICALLY (temp file + os.replace — the local stand-in for
+    an Iceberg snapshot commit, whose summary carries `added-records`);
   * on restart, committed chunks are skipped by reading the manifest — so a
     killed job resumes with no duplicated and no missing (conv_id, turn_idx)
     rows (tests/test_resume.py).
@@ -46,10 +48,13 @@ def normalize_file_uri(p: str) -> str:
 
 
 def list_input_files(spark: SparkSession, input_path: str) -> list[str]:
-    """Deterministic sorted list of the input's parquet part files."""
-    df = spark.read.parquet(input_path)
-    return sorted(normalize_file_uri(r[0]) for r in df.select(
-        F.input_file_name()).distinct().collect())
+    """Deterministic sorted list of the input's parquet part files, taken
+    from the file index without running a Spark job. The declared schema
+    is never read: it only skips the footer-reading schema-inference job
+    a bare read starts. An empty part file is listed too; it is chunked
+    and committed like any other and produces no metrics rows."""
+    df = spark.read.schema("_unused int").parquet(input_path)
+    return sorted(normalize_file_uri(f) for f in df.inputFiles())
 
 
 def _manifest_path(output_dir: str) -> str:
@@ -71,6 +76,19 @@ def read_manifest(output_dir: str) -> list[dict]:
 
 def processed_files(output_dir: str) -> set[str]:
     return {f for e in read_manifest(output_dir) for f in e["input_files"]}
+
+
+def committed_turns(output_dir: str) -> int:
+    """Turns in the committed output, summed from the manifest entries'
+    `n_turns` — no Spark job."""
+    entries = read_manifest(output_dir)
+    stale = [e["chunk_id"] for e in entries if "n_turns" not in e]
+    if stale:
+        raise ValueError(
+            f"{output_dir} has chunks committed without turn counts "
+            f"({', '.join(stale)}) by an older build: re-run with "
+            "--no-resume")
+    return sum(e["n_turns"] for e in entries)
 
 
 def _commit_manifest(output_dir: str, entry: dict) -> None:
@@ -112,7 +130,10 @@ def run_job(
     Output layout:
       output_dir/turns/chunk=<id>/   labeled + scrubbed turns (parquet)
       output_dir/metrics/chunk=<id>/ per-partition lineage + metrics rows
-      output_dir/_manifest/<id>.json committed-chunk manifest (atomic)
+      output_dir/latency/chunk=<id>/ scoring-latency percentiles (timed)
+      output_dir/_manifest/<id>.json committed-chunk manifest (atomic),
+                                     with the chunk's n_turns/n_kept/
+                                     n_dropped
 
     Exactly-once across EVERY crash window: the chunk_id is derived from
     the chunk's sorted input-file list, so a crash BETWEEN the parquet
@@ -140,55 +161,60 @@ def run_job(
         chunk_id = hashlib.sha256("\n".join(chunk).encode()).hexdigest()[:16]
         df = spark.read.parquet(*chunk)
         timed = measure_latency and with_models
-        labeled = pipeline.label_turns(
+        # ONE labeling pass per chunk: the latency, turns and metrics writes
+        # all read this cache, so scan, features, scrub and the scoring UDF
+        # run once (and batch_us describes the run that produced the
+        # committed output)
+        labeled = pipeline.with_input_file(pipeline.label_turns(
             df, cfg, with_models=with_models, bc_models=bc_models,
             measure_latency=timed,
-            models_on_survivors=models_on_survivors)
-        persisted = None
-        if timed:
-            # Persist across the three consumers (latency, turns, metrics):
-            # without it the latency write triggers a SEPARATE scoring pass
-            # whose batch_us values would not correspond to the run that
-            # produced the committed output.
-            persisted = labeled.persist()
-            labeled = persisted
-            # D10 duration histogram: per-chunk scoring-latency percentiles
-            # (metrics.rs:22-25 analog) written next to the metrics table
-            from .operators import latency as lat
+            models_on_survivors=models_on_survivors)).persist()
+        try:
+            if timed:
+                # D10 duration histogram: per-chunk scoring-latency
+                # percentiles (metrics.rs:22-25 analog) written next to the
+                # metrics table
+                from .operators import latency as lat
 
-            lat_rows = lat.percentiles(
-                labeled.select(F.spark_partition_id().alias("partition_id"),
-                               "batch_us"),
-                "batch_us", ("partition_id",))
-            lat_rows.write.mode("overwrite").parquet(
-                os.path.join(output_dir, "latency", f"chunk={chunk_id}"))
-            labeled = labeled.drop("batch_us")
-        out = pipeline.stable_order(labeled, output_partitions)
-        w = out.write.mode("overwrite")
-        if max_records_per_file:
-            # compaction control: output_partitions bounds file count from
-            # below (parallelism), maxRecordsPerFile from above (no
-            # gigantic files for downstream range readers)
-            w = w.option("maxRecordsPerFile", str(max_records_per_file))
-        w.parquet(
-            os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
-        metrics = pipeline.metrics_table(
-            labeled, cfg, with_models=with_models)
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(output_dir, "metrics", f"chunk={chunk_id}"))
-        if persisted is not None:
-            persisted.unpersist()
-        if fail_before_commit is not None and ran + 1 >= fail_before_commit:
-            raise RuntimeError(
-                f"injected failure before manifest commit of chunk {ran + 1}")
-        _commit_manifest(output_dir, {
-            "chunk_id": chunk_id,
-            "input_files": chunk,
-            "ruleset_version": cfg.version,
-            # latency/chunk=<id>/ exists only for timed chunks; readers
-            # filter on this so a mixed-flags output dir stays readable
-            "has_latency": timed,
-        })
+                lat_rows = lat.percentiles(
+                    labeled.select(
+                        F.spark_partition_id().alias("partition_id"),
+                        "batch_us"),
+                    "batch_us", ("partition_id",))
+                lat_rows.write.mode("overwrite").parquet(
+                    os.path.join(output_dir, "latency", f"chunk={chunk_id}"))
+            # counted after the shuffle, in the write's result stage
+            out, counts = pipeline.observe_labels(pipeline.stable_order(
+                labeled.drop("input_file", "batch_us"), output_partitions))
+            w = out.write.mode("overwrite")
+            if max_records_per_file:
+                # compaction control: output_partitions bounds file count
+                # from below (parallelism), maxRecordsPerFile from above
+                # (no gigantic files for downstream range readers)
+                w = w.option("maxRecordsPerFile", str(max_records_per_file))
+            w.parquet(
+                os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
+            metrics = pipeline.metrics_table(
+                labeled, cfg, with_models=with_models)
+            metrics.write.mode("overwrite").parquet(
+                os.path.join(output_dir, "metrics", f"chunk={chunk_id}"))
+            if (fail_before_commit is not None
+                    and ran + 1 >= fail_before_commit):
+                raise RuntimeError(
+                    "injected failure before manifest commit of chunk "
+                    f"{ran + 1}")
+            _commit_manifest(output_dir, {
+                "chunk_id": chunk_id,
+                "input_files": chunk,
+                "ruleset_version": cfg.version,
+                # latency/chunk=<id>/ exists only for timed chunks; readers
+                # filter on this so a mixed-flags output dir stays readable
+                "has_latency": timed,
+                # n_turns, n_kept, n_dropped
+                **counts.get,
+            })
+        finally:
+            labeled.unpersist()
         ran += 1
         processed.extend(chunk)
         if fail_after_chunks is not None and ran >= fail_after_chunks:

@@ -167,9 +167,12 @@ def label_turns(
 def observe_labels(labeled: DataFrame, name: str = "qf"):
     """Attach a Spark Observation to the labeled stream: keep/drop counts
     collected DURING the job's own pass (no second action) — the in-flight
-    form of the reference's request counter (metrics.rs:17-21), complementing
-    the persisted metrics_table. Returns (df, observation); read
-    `observation.get` after an action completes."""
+    form of the reference's request counter (metrics.rs:17-21). io.run_job
+    attaches it after stable_order, so it counts in the turns write's
+    result stage (accumulator updates apply exactly once only in result
+    tasks; a pre-shuffle observe can double-count on executor loss).
+    Returns (df, observation); read `observation.get` after an action
+    completes."""
     from pyspark.sql import Observation
 
     obs = Observation(name)
@@ -244,6 +247,15 @@ def salted_repartition(df: DataFrame, buckets: int, turns_per_chunk: int = 4096,
     return parted
 
 
+def with_input_file(df: DataFrame) -> DataFrame:
+    """Add the `input_file` lineage column (the scan's
+    `_metadata.file_path`) that metrics_table(input_files=True) reads.
+    Add it BEFORE a persist(): `_metadata` does not resolve against a
+    cached relation, so a later select that re-resolves it silently
+    falls off the cache and recomputes the whole plan."""
+    return df.withColumn("input_file", F.col("_metadata.file_path"))
+
+
 def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
                   *, with_models: bool = True,
                   input_files: bool = True) -> DataFrame:
@@ -253,13 +265,14 @@ def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
 
     One row per (partition, input file): turn counts, keep/drop counts and a
     per-reason histogram map, tagged with the ruleset version.
+    `input_files=True` reads the lineage column with_input_file adds;
+    `input_files=False` tags every row "<memory>".
     """
     from ..config import REASONS
 
     reasons = [r for r in REASONS
                if with_models or r not in ("lang_conf", "perplexity")]
-    file_col = (F.col("_metadata.file_path") if input_files
-                else F.lit("<memory>"))
+    file_col = F.col("input_file") if input_files else F.lit("<memory>")
     base = labeled.select(
         F.spark_partition_id().alias("partition_id"),
         file_col.alias("input_file"),

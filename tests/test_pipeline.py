@@ -114,7 +114,8 @@ def test_lineage_covers_input_files(spark, tmp_path):
     ).repartition(3).write.parquet(src)
     df = spark.read.parquet(src)
     lab = pipeline.label_turns(df, with_models=False)
-    m = pipeline.metrics_table(lab, with_models=False, input_files=True)
+    m = pipeline.metrics_table(pipeline.with_input_file(lab),
+                               with_models=False, input_files=True)
     files = {r[0] for r in m.select("input_file").collect()}
     assert files  # real file paths captured via _metadata
     assert all(f.startswith("file:") or f.startswith("/") for f in files)

@@ -120,3 +120,110 @@ def test_max_records_per_file_bounds_output_files(spark, tmp_path, src):
     # 200 rows / <=50 per file -> at least 4 files even at 1 partition
     assert len(files) >= 4
     assert dq_io.read_output(spark, out).count() == 200
+
+
+def test_list_input_files_starts_no_job(spark, src):
+    """The listing comes from the file index: the same sorted paths the
+    input_file_name() scan finds, without a Spark job."""
+    sc = spark.sparkContext
+    scanned = sorted(
+        dq_io.normalize_file_uri(r[0]) for r in spark.read.parquet(src)
+        .select(F.input_file_name()).distinct().collect())
+    group = "test-list-input-files"
+    sc.setJobGroup(group, "list_input_files")
+    try:
+        files = dq_io.list_input_files(spark, src)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(files) == 8
+    assert files == scanned
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _last_execution_id(spark) -> int:
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def _scored_rows(spark, after: int) -> int:
+    """Rows out of every ArrowEvalPython node (the scoring UDF) in the SQL
+    executions started after execution id `after`, from the session's SQL
+    status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    total = 0
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid <= after:
+            continue
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for j in range(nodes.size()):
+            node = nodes.apply(j)
+            if node.name() != "ArrowEvalPython":
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    total += int(v.get().replace(",", ""))
+    return total
+
+
+@pytest.mark.parametrize("measure_latency", [False, True])
+def test_run_job_scores_each_chunk_once(spark, tmp_path, src, bc_models,
+                                        measure_latency):
+    """One labeling pass per chunk: the turns, metrics (and latency)
+    writes all read the chunk's cache, so the scoring UDF sees each
+    input row exactly once."""
+    out = str(tmp_path / "out")
+    before = _last_execution_id(spark)
+    dq_io.run_job(spark, src, out, bc_models=bc_models, files_per_chunk=4,
+                  measure_latency=measure_latency)
+    assert len(dq_io.read_manifest(out)) == 2
+    assert _scored_rows(spark, before) == 200
+
+
+def test_manifest_counts_match_metrics(spark, tmp_path):
+    import os
+
+    src = str(tmp_path / "src")
+    rows = [(f"c{i % 5}", i // 5, "user",
+             "ok" if i % 3 == 0 else f"turn number {i} with ordinary words",
+             None, None) for i in range(120)]
+    (spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+     .repartition(6).write.parquet(src))
+    out = str(tmp_path / "out")
+    dq_io.run_job(spark, src, out, with_models=False, files_per_chunk=3)
+    entries = dq_io.read_manifest(out)
+    assert len(entries) == 2
+    for e in entries:
+        m = spark.read.parquet(
+            os.path.join(out, "metrics", f"chunk={e['chunk_id']}"))
+        sums = m.agg(*(F.sum(c).alias(c) for c in (
+            "n_turns", "n_kept", "n_dropped"))).first().asDict()
+        assert {k: e[k] for k in sums} == sums
+    assert sum(e["n_turns"] for e in entries) == 120
+    assert sum(e["n_dropped"] for e in entries) > 0
+    assert dq_io.committed_turns(out) == 120
+
+
+def test_failed_chunk_releases_its_cache(spark, tmp_path, src):
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="before manifest commit"):
+        dq_io.run_job(spark, src, str(tmp_path / "out"), with_models=False,
+                      files_per_chunk=2, fail_before_commit=1)
+    assert jsc.getPersistentRDDs().size() <= before
+
+
+def test_committed_turns_rejects_entries_without_counts(tmp_path):
+    dq_io._commit_manifest(str(tmp_path), {
+        "chunk_id": "0123abcd", "input_files": ["/x.parquet"],
+        "ruleset_version": "v1", "has_latency": False})
+    with pytest.raises(ValueError, match="--no-resume"):
+        dq_io.committed_turns(str(tmp_path))
