@@ -2,25 +2,37 @@
 against exact brute-force truth, with wall time per setting.
 
 Usage: python BENCH/ann_recall.py [sf_dir] [cpus]
+  cpus: Spark local threads; default: the CPUs this process may run on.
 Appends a markdown table to stdout; paste into BENCH/BASELINE.md.
+The repo root is the parent of this script's directory.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import numpy as np
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    cpus = sys.argv[2] if len(sys.argv) > 2 else "32"
+    cpus = (sys.argv[2] if len(sys.argv) > 2
+            else str(len(os.sched_getaffinity(0))))
 
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
     from data_quality_check_spark.operators import similarity
+
+    # Spark's Python workers inherit the JVM's environment, not this
+    # sys.path: without this they import the package from the working
+    # directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")

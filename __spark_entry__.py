@@ -24,7 +24,7 @@ surfaces are closed two ways:
   * MinHash/SimHash signatures and the LSH/IVF approximate paths have
     generated SQL twins that re-derive the integer hash mixes, banding,
     caps and tie order in BIGINT (minhash_pairs_sql, simhash_pairs_sql,
-    lsh_top1_sql, ivf_top1_sql).
+    lsh_topk_sql, ivf_topk_sql).
 The stubbed media decode (multimodal.real_decode) remains the single
 honest environment stub; its plumbing gates are oracled via the
 deterministic payload arithmetic.
@@ -574,25 +574,27 @@ def _q_ann_top1(spark, sf_dir):
 def _q_ann_lsh_top1(spark, sf_dir):
     """LSH top-1 under the FULL oracle (r02 #2): hyperplanes are an
     integer-mix formula both engines evaluate exactly, posting rides int8
-    codes, and lsh_top1_sql reproduces buckets/cap/tie order in DuckDB."""
+    codes, and lsh_topk_sql(k=1) reproduces buckets/cap and the exact
+    integer re-rank in DuckDB."""
     top = similarity.lsh_topk(_emb(spark, sf_dir), k=1)
     return top.select("vec_id", "neighbor_id")
 
 
 def _q_ann_lsh_top5(spark, sf_dir):
     """ANN top-k for k>1 (r4 verdict #4): the k-row ranking users
-    actually consume, under the EXACT tie rule — integer int8-code dot
-    products + one IEEE sqrt/divide, so rank boundaries are engine-
+    actually consume — the same exact-integer re-rank as top-1 (int8-code
+    dot products + one IEEE sqrt/divide), so rank boundaries are engine-
     identical with no float-margin assumption (lsh_topk_sql twin)."""
-    top = similarity.lsh_topk(_emb(spark, sf_dir), k=5, exact_ties=True)
+    top = similarity.lsh_topk(_emb(spark, sf_dir), k=5)
     return top.select("vec_id", "rank", "neighbor_id")
 
 
 def _q_ann_ivf_top1(spark, sf_dir):
     """IVF top-1 under the FULL oracle: fixed SQL-reproducible quantizer
     (init='by_id', iters=0 — the 16 smallest-id vectors), real posting/
-    probe/score plumbing; the k-means quality path stays covered by the
-    recall sweep + determinism tests."""
+    probe/score plumbing and the exact-integer re-rank (ivf_topk_sql(k=1)
+    twin); the k-means quality path stays covered by the recall sweep +
+    determinism tests."""
     top = similarity.ivf_topk(_emb(spark, sf_dir), k=1, n_cells=16,
                               nprobe=4, iters=0, init="by_id")
     return top.select("vec_id", "neighbor_id")
@@ -617,11 +619,10 @@ DOMAIN_CAP = 20
 
 
 def _q_ann_ivf_top5(spark, sf_dir):
-    """IVF k-row ranking under the exact integer tie rule (extra-coverage
-    twin of ann_ivf_top1 — same candidates, ivf_topk_sql re-rank)."""
+    """IVF k-row ranking (extra-coverage twin of ann_ivf_top1 — same
+    candidates and exact-integer re-rank, k=5 rows per query)."""
     top = similarity.ivf_topk(_emb(spark, sf_dir), k=5, n_cells=16,
-                              nprobe=4, iters=0, init="by_id",
-                              exact_ties=True)
+                              nprobe=4, iters=0, init="by_id")
     return top.select("vec_id", "rank", "neighbor_id")
 
 
@@ -1157,7 +1158,7 @@ def _q_multimodal_frames(spark, sf_dir):
 #   qf_scrub           ⊂ qf_pipeline.text_scrubbed (+ tri-engine fuzz)
 #   dedup_groups       ⊂ dedup_apply / dedup_embedding_groups (same CC CTE)
 #   dedup_embedding    ⊂ dedup_embedding_groups (same pairs CTE)
-#   emb_quantize       ⊂ ann_lsh_top1 / ann_ivf_top1 (_DEQ_CTE formula)
+#   emb_quantize       ⊂ ann_lsh_top1 / ann_ivf_top1 (`codes` CTE formula)
 #   text_fingerprint   ⊂ dedup_exact / corpus_curation (same md5(norm))
 #   lang_stats         ⊂ corpus_drift (per-language counts/shares)
 #   events_window      ⊂ stream_window_counts (windowed agg) + event_sessions
@@ -1457,7 +1458,7 @@ SELECT conv_id, count(*) AS n_turns,
 FROM lab GROUP BY conv_id
 """
 
-    norm = ("regexp_replace(regexp_replace(lower(text), '[ \t\n\r]+', ' ',"
+    norm = (f"regexp_replace(regexp_replace(lower(text), '{rules.WS}', ' ',"
             " 'g'), '^ | $', '', 'g')")
     dedup_exact = f"""
 WITH fx AS ({DEDUP_FIXTURE_SQL})
@@ -1470,9 +1471,7 @@ GROUP BY 1 HAVING count(*) > 1
     decontaminate = f"""
 WITH fx AS ({DEDUP_FIXTURE_SQL}),
 words AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-                w -> w <> '') AS ws
+  SELECT doc_id, {rules.ws_words_sql('lower(text)')} AS ws
   FROM fx
 ),
 sh0 AS (
@@ -1496,11 +1495,9 @@ FROM tr JOIN ev USING (shingle)
 GROUP BY 1, 2 HAVING count(*) >= 3
 """
 
-    ngram_pairs_template = """words AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-                w -> w <> '') AS ws
-  FROM {src}
+    ngram_pairs_template = f"""words AS (
+  SELECT doc_id, {rules.ws_words_sql('lower(text)')} AS ws
+  FROM {{src}}
 ),
 sh0 AS (
   SELECT DISTINCT doc_id, unnest(shingles) AS shingle FROM (
@@ -1513,7 +1510,7 @@ sh0 AS (
   )
 ),
 hot AS (SELECT shingle FROM sh0 GROUP BY shingle
-        HAVING count(*) > {max_df}),
+        HAVING count(*) > {{max_df}}),
 sh AS (SELECT sh0.* FROM sh0 ANTI JOIN hot USING (shingle)),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
 shared AS (
@@ -1626,14 +1623,12 @@ SELECT vec_id, neighbor_id FROM (
 """
 
     pieces_re = "([A-Za-zÀ-ÖØ-öø-ÿ]+|[0-9]+|[^A-Za-z0-9À-ÖØ-öø-ÿ \t\n\r])"
+    spaced = f"regexp_replace(text, '{pieces_re}', ' \\1 ', 'g')"
     text_tokens = f"""
 SELECT doc_id,
   coalesce(length(text), 0) AS n_chars,
-  coalesce(len(list_filter(string_split_regex(text, '[ \t\n\r]+'),
-           w -> w <> '')), 0) AS n_tokens,
-  coalesce(len(list_filter(string_split_regex(
-    regexp_replace(text, '{pieces_re}', ' \\1 ', 'g'), '[ \t\n\r]+'),
-    w -> w <> '')), 0) AS n_pieces,
+  coalesce(len({rules.ws_words_sql('text')}), 0) AS n_tokens,
+  coalesce(len({rules.ws_words_sql(spaced)}), 0) AS n_pieces,
   {textstats.bpe_token_estimate_sql('text')} AS n_tokens_bpe
 FROM documents
 """
@@ -1687,8 +1682,8 @@ s3 AS (
 ),
 t AS (
   SELECT doc_id, lang,
-    CAST(coalesce(len(list_filter(string_split_regex(text, '[ \t\n\r]+'),
-         w -> w <> '')), 0) AS BIGINT) AS n_tokens
+    CAST(coalesce(len({rules.ws_words_sql('text')}), 0) AS BIGINT)
+      AS n_tokens
   FROM s3
 )
 SELECT doc_id, n_tokens,
@@ -1741,8 +1736,8 @@ FROM t
     # compare all recomputed in SQL by the generated per-source twins
     from data_quality_check_spark.operators import mixing as mixing_mod
 
-    tok_sql = ("SELECT doc_id, lang, CAST(coalesce(len(list_filter("
-               "string_split_regex(text, '[ \t\n\r]+'), w -> w <> '')), 0)"
+    tok_sql = ("SELECT doc_id, lang, CAST(coalesce(len("
+               f"{rules.ws_words_sql('text')}), 0)"
                " AS BIGINT) AS n_tokens FROM documents")
     src_en = f"SELECT * FROM ({tok_sql}) WHERE lang = 'en'"
     src_ot = f"SELECT * FROM ({tok_sql}) WHERE lang <> 'en'"
@@ -1918,9 +1913,13 @@ GROUP BY 1, 2
         "dedup_embedding_groups": dedup_embedding_groups,
         "emb_quantize": similarity.QUANTIZE_SQL,
         "ann_top1": ann_top1,
-        "ann_lsh_top1": similarity.lsh_top1_sql(),
+        "ann_lsh_top1": (
+            "SELECT vec_id, neighbor_id FROM ("
+            f"{similarity.lsh_topk_sql(k=1)})"),
         "ann_lsh_top5": similarity.lsh_topk_sql(k=5),
-        "ann_ivf_top1": similarity.ivf_top1_sql(n_cells=16, nprobe=4),
+        "ann_ivf_top1": (
+            "SELECT vec_id, neighbor_id FROM ("
+            f"{similarity.ivf_topk_sql(k=1, n_cells=16, nprobe=4)})"),
         "ann_ivf_top5": similarity.ivf_topk_sql(k=5, n_cells=16,
                                                 nprobe=4),
         "domain_caps": domains_mod.domain_caps_sql(
@@ -1939,8 +1938,7 @@ GROUP BY 1, 2
         "corpus_curation_web": corpus_curation_web,
         "pack_shards": sampling.pack_shards_sql(
             PACK_BUDGET,
-            "coalesce(len(list_filter(string_split_regex(text,"
-            " '[ \t\n\r]+'), w -> w <> '')), 0)"),
+            f"coalesce(len({rules.ws_words_sql('text')}), 0)"),
         "pack_shards_bpe": sampling.pack_shards_sql(
             PACK_BUDGET, textstats.bpe_token_estimate_sql("text")),
         "vocab_topk": vocab_topk,

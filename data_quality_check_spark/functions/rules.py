@@ -66,8 +66,14 @@ def feature_columns(text: Column) -> dict[str, Column]:
 def ws_words(text: Column) -> Column:
     """The whitespace words of `text`: split on WS, empty pieces dropped
     (the reference's D7 tokenizer). Every Spark-side whitespace word
-    split goes through here; the SQL twins spell the same class."""
+    split goes through here; every DuckDB twin goes through
+    ws_words_sql."""
     return F.filter(F.split(text, WS), lambda w: w != F.lit(""))
+
+
+def ws_words_sql(expr: str) -> str:
+    """DuckDB twin of ws_words over the SQL expression `expr`."""
+    return f"list_filter(string_split_regex({expr}, '{WS}'), w -> w <> '')"
 
 
 def ws_token_count(text: Column) -> Column:
@@ -225,8 +231,7 @@ def reasons_array(flags: list[tuple[str, Column]]) -> Column:
 def feature_sql(text: str = "text") -> dict[str, str]:
     """DuckDB SQL expression per feature, matching feature_columns()."""
     stops = ", ".join(f"'{s}'" for s in _stops())
-    words = (f"list_filter(string_split_regex({text}, '{WS}'),"
-             f" w -> w <> '')")
+    words = ws_words_sql(text)
     lines = f"string_split({text}, chr(10))"
     n_words = f"coalesce(len({words}), 0)"
     n_lines = f"coalesce(len({lines}), 0)"

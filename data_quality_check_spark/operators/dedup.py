@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.rules import WS, ws_words
+from ..functions.rules import WS, ws_words, ws_words_sql
 from ..models import hashing
 from .guards import barrier_filter, warn_window_cap
 
@@ -91,6 +91,17 @@ def shingle_set(docs: DataFrame, n: int = 3) -> DataFrame:
         .distinct()
 
 
+def _drop_hot_shingles(sh: DataFrame, max_df: int) -> DataFrame:
+    """Hot-shingle posting-list cap: count documents per shingle (map-side
+    partial agg), broadcast the tiny set of shingles above `max_df`, and
+    anti-join it away BEFORE a quadratic co-shingle join."""
+    hot = (sh.groupBy("shingle")
+           .agg(F.count(F.lit(1)).alias("df"))
+           .filter(F.col("df") > max_df)
+           .select("shingle"))
+    return sh.join(F.broadcast(hot), "shingle", "left_anti")
+
+
 def cross_contamination(train_docs: DataFrame, eval_docs: DataFrame,
                         n: int = 3, min_shared: int = 1,
                         max_shingle_df: int | None = None) -> DataFrame:
@@ -109,12 +120,7 @@ def cross_contamination(train_docs: DataFrame, eval_docs: DataFrame,
     if max_shingle_df is not None:
         # two consumers of the train shingles (df count + join) —
         # materialize once, same as ngram_jaccard_pairs
-        tr = tr.localCheckpoint()
-        hot = (tr.groupBy("shingle")
-               .agg(F.count(F.lit(1)).alias("df"))
-               .filter(F.col("df") > max_shingle_df)
-               .select("shingle"))
-        tr = tr.join(F.broadcast(hot), "shingle", "left_anti")
+        tr = _drop_hot_shingles(tr.localCheckpoint(), max_shingle_df)
     ev = shingle_set(eval_docs, n)
     return (
         tr.alias("t").join(ev.alias("e"), "shingle")
@@ -150,14 +156,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     # distinct set ONCE before anything fans out.
     sh = shingle_set(docs, n).localCheckpoint()
     if max_shingle_df is not None:
-        # hot-shingle posting-list cap: count per shingle (map-side partial
-        # agg over the materialized set), broadcast the tiny hot set,
-        # anti-join it away BEFORE the quadratic join
-        hot = (sh.groupBy("shingle")
-               .agg(F.count(F.lit(1)).alias("df"))
-               .filter(F.col("df") > max_shingle_df)
-               .select("shingle"))
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
+        sh = _drop_hot_shingles(sh, max_shingle_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -705,8 +704,7 @@ def dedup_spans_sql(
     return f"""
 WITH src AS ({source_sql}),
 w0 AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(text, '[ \t\n\r]+'), x -> x <> '') AS ws
+  SELECT doc_id, {ws_words_sql('text')} AS ws
   FROM src
 ),
 words AS (

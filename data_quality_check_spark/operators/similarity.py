@@ -8,7 +8,10 @@ Paths, per the scale plan:
     baseline, not the scale default.
   * lsh_topk / ivf_topk — approximate, the 100 TB path: random-hyperplane
     buckets / k-means cells key the shuffle; work is quadratic only within
-    buckets; shuffle volume is O(N·tables), never O(N·M).
+    buckets; shuffle volume is O(N·tables), never O(N·M). Both re-rank
+    their candidates through ONE tail (_ann_rank) by the exact-integer key
+    d/sqrt(nb2) over int8 codes, for every k — the key the DuckDB twins
+    (lsh_topk_sql / ivf_topk_sql) compute identically.
   * pairs_above — exact pairs via the declarative zip_with/aggregate form
     (JVM-side, Catalyst-visible; the order-matched DuckDB twin).
 
@@ -169,41 +172,21 @@ def _bounded_groups(members: DataFrame, probes: DataFrame,
     return mem.unionByName(pr)
 
 
-def _score_group_fn(id_col: str):
-    """applyInPandas scorer for one (key..., salt) group: cosine of every
-    (probe, member) pair via one matmul over dequantized int8 codes.
-    Both sides are pre-bounded by _bounded_groups, so the group — and the
-    matmul — is constant-sized."""
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        members = pdf[pdf["probe"] == 0]
-        probes = pdf[pdf["probe"] == 1]
-        if not len(members) or not len(probes):
-            return pd.DataFrame({id_col: [], "neighbor_id": [], "cos": []})
-        mv = _norm_rows(_dequant_rows(members["code"],
-                                      members["scale"].to_numpy()))
-        qv = _norm_rows(_dequant_rows(probes["code"],
-                                      probes["scale"].to_numpy()))
-        mids = members[id_col].to_numpy()
-        qids = probes[id_col].to_numpy()
-        sims = qv @ mv.T
-        iu, ju = np.nonzero(qids[:, None] != mids[None, :])
-        return pd.DataFrame({
-            id_col: qids[iu], "neighbor_id": mids[ju], "cos": sims[iu, ju],
-        })
-    return score
-
-
 def _score_group_int_fn(id_col: str):
-    """applyInPandas scorer emitting EXACT integers: for every
-    (probe, member) pair, the int8-code dot product (int64 matmul —
-    every partial sum ≤ dim·127², exact) and the member's squared code
-    norm. The cosine ordering of dequantized vectors reduces to
-    d / sqrt(nb2) per probe (scales cancel: cos = d·s_a·s_b/127² /
-    (s_a/127·√a2 · s_b/127·√b2) = d/√(a2·b2), and a2 is probe-constant)
-    — so ranking needs only ONE correctly-rounded IEEE sqrt + divide on
-    exact integer inputs: NO reduction-order dependence, any engine
-    computes the identical key (the r4-verdict #4 epsilon-free tie
-    rule)."""
+    """applyInPandas scorer for one (key..., salt) group, emitting EXACT
+    integers: for every (probe, member) pair, the int8-code dot product
+    and the member's squared code norm. The cosine ordering of
+    dequantized vectors reduces to d / sqrt(nb2) per probe (scales
+    cancel: cos = d·s_a·s_b/127² / (s_a/127·√a2 · s_b/127·√b2) =
+    d/√(a2·b2), and a2 is probe-constant) — so ranking needs only ONE
+    correctly-rounded IEEE sqrt + divide on exact integer inputs: NO
+    reduction-order dependence, any engine computes the identical key.
+
+    The matmul runs in float64 so it stays on BLAS (numpy's int64 matmul
+    has no BLAS kernel) and is cast back to int64 — still exact: every
+    partial sum is an integer of size ≤ dim·127², far below 2^53, in any
+    summation order, with or without FMA. Both sides are pre-bounded by
+    _bounded_groups, so the group — and the matmul — is constant-sized."""
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
         members = pdf[pdf["probe"] == 0]
         probes = pdf[pdf["probe"] == 1]
@@ -211,13 +194,13 @@ def _score_group_int_fn(id_col: str):
             return pd.DataFrame({id_col: [], "neighbor_id": [],
                                  "dot": [], "nb2": []})
         mq = np.stack([np.frombuffer(b, dtype=np.int8)
-                       for b in members["code"]]).astype(np.int64)
+                       for b in members["code"]]).astype(np.float64)
         qq = np.stack([np.frombuffer(b, dtype=np.int8)
-                       for b in probes["code"]]).astype(np.int64)
+                       for b in probes["code"]]).astype(np.float64)
         mids = members[id_col].to_numpy()
         qids = probes[id_col].to_numpy()
-        d = qq @ mq.T
-        b2 = (mq * mq).sum(axis=1)
+        d = (qq @ mq.T).astype(np.int64)
+        b2 = (mq * mq).sum(axis=1).astype(np.int64)
         iu, ju = np.nonzero(qids[:, None] != mids[None, :])
         return pd.DataFrame({
             id_col: qids[iu], "neighbor_id": mids[ju],
@@ -226,11 +209,24 @@ def _score_group_int_fn(id_col: str):
     return score
 
 
+def _ann_rank(members: DataFrame, probes: DataFrame, keys: list[str],
+              id_col: str, k: int, max_group: int) -> DataFrame:
+    """The ANN re-rank tail shared by LSH (keys: table, bucket) and IVF
+    (keys: cell): bound both sides (_bounded_groups), score every
+    (keys..., salt) group in exact integers (_score_group_int_fn), then
+    dedup + rank (_rank_exact). Output: (id, neighbor_id, rank)."""
+    grouped = _bounded_groups(members, probes, keys, id_col, max_group)
+    scored = grouped.groupBy(*keys, "salt").applyInPandas(
+        _score_group_int_fn(id_col),
+        schema=f"{id_col} long, neighbor_id long, dot long, nb2 long")
+    return _rank_exact(scored, id_col, k)
+
+
 def _rank_exact(scored: DataFrame, id_col: str, k: int) -> DataFrame:
-    """Shared exact-integer re-rank tail for the ANN top-k paths: dedup
-    pairs (identical exact integers from any table/cell), rank by
-    d/sqrt(nb2) (one correctly-rounded IEEE sqrt+divide on exact ints;
-    zero-norm members rank last), tie-break by neighbor_id.
+    """Dedup + rank stage of _ann_rank: dedup pairs (identical exact
+    integers from any table/cell), rank by d/sqrt(nb2) (one
+    correctly-rounded IEEE sqrt+divide on exact ints; zero-norm members
+    rank last), tie-break by neighbor_id.
 
     ONE exchange, not two: repartitioning by the probe id up front lets
     both the pair-dedup aggregate (clustered-by (id, neighbor) is
@@ -268,14 +264,6 @@ def _quantize_np(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     q = np.floor(v / safe[:, None] * 127).astype(np.int8)
     q[s == 0] = 0
     return q, s
-
-
-def _dequant_rows(codes, scales: np.ndarray) -> np.ndarray:
-    """int8 code bytes + scales → float64 matrix ((q·s)/127 — the order the
-    SQL twins use: c * s / 127)."""
-    q = np.stack([np.frombuffer(b, dtype=np.int8) for b in codes]) \
-        .astype(np.float64)
-    return q * scales[:, None] / 127.0
 
 
 def _unpack(items) -> tuple[np.ndarray, np.ndarray]:
@@ -493,7 +481,7 @@ def ivf_build(emb: DataFrame, id_col: str = "vec_id",
 
     init='by_id' seeds the quantizer with the n_cells smallest-id vectors
     (normalized, in id order); with iters=0 the quantizer is then a pure
-    function of the data that the DuckDB twin (ivf_top1_sql) reproduces —
+    function of the data that the DuckDB twin (ivf_topk_sql) reproduces —
     the fully oracled gate form. init='sample' + iters>0 is the quality
     path (k-means), covered by the recall sweep.
 
@@ -621,14 +609,13 @@ def ivf_load(spark, path: str) -> IvfIndex:
 
 
 def ivf_query(index: IvfIndex, queries: DataFrame, k: int = 1,
-              nprobe: int = 4, max_group: int = MAX_GROUP,
-              exact_ties: bool = False) -> DataFrame:
+              nprobe: int = 4, max_group: int = MAX_GROUP) -> DataFrame:
     """Approximate top-k against a built index: each query probes its
-    `nprobe` nearest cells, exact cosine re-rank inside (cell × salt)
-    groups. The member pool is capped (smallest `max_group` ids) and the
-    probe side salted BEFORE the applyInPandas shuffle (_bounded_groups),
-    so even a degenerate cell — billions of identical embeddings — never
-    materializes as one group.
+    `nprobe` nearest cells, exact-integer re-rank inside (cell × salt)
+    groups (_ann_rank). The member pool is capped (smallest `max_group`
+    ids) and the probe side salted BEFORE the applyInPandas shuffle
+    (_bounded_groups), so even a degenerate cell — billions of identical
+    embeddings — never materializes as one group.
 
     SIDE EFFECT (r4 ADVICE): building this plan runs an EAGER Spark
     job (default-eager localCheckpoint of the multi-consumer
@@ -644,41 +631,14 @@ def ivf_query(index: IvfIndex, queries: DataFrame, k: int = 1,
     probed = queries.select(id_col, vec_col).mapInPandas(
         _post_fn(index.centroids_bc, id_col, vec_col, nprobe),
         schema=schema).localCheckpoint()
-    return _ivf_rank(index.posted, probed, id_col, k, max_group,
-                     exact_ties)
-
-
-def _ivf_rank(posted: DataFrame, probed: DataFrame, id_col: str, k: int,
-              max_group: int, exact_ties: bool) -> DataFrame:
-    """Shared IVF scoring tail: bound both sides, score per (cell, salt)
-    group, dedup + rank."""
-    grouped = _bounded_groups(posted, probed, ["cell"], id_col,
-                              max_group)
-    if exact_ties:
-        scored = grouped.groupBy("cell", "salt").applyInPandas(
-            _score_group_int_fn(id_col),
-            schema=f"{id_col} long, neighbor_id long, dot long, nb2 long")
-        return _rank_exact(scored, id_col, k)
-    cand = (
-        grouped.groupBy("cell", "salt")
-        .applyInPandas(_score_group_fn(id_col),
-                       schema=f"{id_col} long, neighbor_id long, cos double")
-        .repartition(id_col)  # one exchange serves dedup-agg AND window
-        .groupBy(id_col, "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
-    )
-    from pyspark.sql import Window
-    w = (Window.partitionBy(id_col)
-         .orderBy(F.col("cos").desc(), F.col("neighbor_id")))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _ann_rank(index.posted, probed, ["cell"], id_col, k, max_group)
 
 
 def ivf_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
              vec_col: str = "embedding", n_cells: int | None = None,
              nprobe: int = 4, sample: int = 100_000,
              max_group: int = MAX_GROUP, iters: int = 10,
-             init: str = "sample", exact_ties: bool = False) -> DataFrame:
+             init: str = "sample") -> DataFrame:
     """One-shot IVF self-query: build the index over `emb` and query it
     with the same rows (the gate/bench form of ivf_build + ivf_query).
 
@@ -698,7 +658,7 @@ def ivf_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
         schema=schema).localCheckpoint()
     posted = pr.filter(F.col("cell_rank") == 0).drop("cell_rank")
     probed = pr.drop("cell_rank")
-    return _ivf_rank(posted, probed, id_col, k, max_group, exact_ties)
+    return _ann_rank(posted, probed, ["cell"], id_col, k, max_group)
 
 
 N_TABLES = 8
@@ -746,11 +706,10 @@ def n_planes_for(n_vectors: int, target_bucket: int = TARGET_BUCKET) -> int:
 def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
              vec_col: str = "embedding", tables: int = N_TABLES,
              planes: int | None = None,
-             max_group: int = MAX_GROUP,
-             exact_ties: bool = False) -> DataFrame:
+             max_group: int = MAX_GROUP) -> DataFrame:
     """Approximate top-k: random-hyperplane buckets × `tables` hash tables;
-    candidates = bucket collisions in any table; cosine re-rank over
-    dequantized int8 codes.
+    candidates = bucket collisions in any table; cosine re-rank over int8
+    codes by the exact-integer key d/sqrt(nb2) (_ann_rank).
 
     Scale shape: each row emits `tables` (bucket, id, int8 code, scale)
     tuples — the bucket exchange carries dim BYTES + one double per row
@@ -759,14 +718,9 @@ def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
     bucket-equality, so shuffle is linear in N and work is quadratic only
     within buckets (≈ N²/2^planes per table). Fully oracle-checkable:
     hyperplanes, planes-from-count schedule, quantization, member cap and
-    tie order are all reproduced by lsh_top1_sql()/lsh_topk_sql().
-
-    exact_ties=True ranks by the REDUCTION-ORDER-FREE key
-    d/sqrt(nb2) over exact int8-code integers (_score_group_int_fn) —
-    identical candidate set and cosine ORDER as the default float path
-    (scales cancel), but every arithmetic step is exact-int or one
-    correctly-rounded IEEE op, so k>1 rank boundaries cannot drift
-    between engines; this is the mode the ann_lsh_top5 gate pins.
+    tie order are all reproduced by lsh_topk_sql(). Every step of the
+    re-rank is exact-int or one correctly-rounded IEEE op, so rank
+    boundaries cannot drift between engines for any k.
 
     SIDE EFFECT (r4 ADVICE): building this plan runs an EAGER Spark
     job (default-eager localCheckpoint of the multi-consumer
@@ -814,28 +768,8 @@ def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
     # capped pool (smallest max_group ids per bucket, the SQL twin's
     # `mem` CTE), bounded BEFORE the group shuffle so an adversarial hot
     # bucket can never materialize as one applyInPandas group
-    grouped = _bounded_groups(bucketed, bucketed, ["table", "bucket"],
-                              id_col, max_group)
-    from pyspark.sql import Window
-
-    if exact_ties:
-        scored = grouped.groupBy("table", "bucket", "salt").applyInPandas(
-            _score_group_int_fn(id_col),
-            schema=f"{id_col} long, neighbor_id long, dot long, nb2 long")
-        return _rank_exact(scored, id_col, k)
-
-    cand = (
-        grouped.groupBy("table", "bucket", "salt")
-        .applyInPandas(_score_group_fn(id_col),
-                       schema=f"{id_col} long, neighbor_id long, cos double")
-        .repartition(id_col)  # one exchange serves dedup-agg AND window
-        .groupBy(id_col, "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
-    )
-    w = (Window.partitionBy(id_col)
-         .orderBy(F.col("cos").desc(), F.col("neighbor_id")))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _ann_rank(bucketed, bucketed, ["table", "bucket"], id_col, k,
+                     max_group)
 
 
 def quantize_embeddings(emb: DataFrame, id_col: str = "vec_id",
@@ -869,57 +803,30 @@ def quantize_embeddings(emb: DataFrame, id_col: str = "vec_id",
 
 
 # FLOAT-ORDER ASSUMPTION (documented, by design): the Spark side computes
-# bucket sign bits and the cosine re-rank via BLAS matmuls while the DuckDB
-# twins fold list_dot_product/list_cosine_similarity sequentially — two
-# different float64 reduction ORDERS. The twins hash-match because no dot
-# product in the fixture lands within rounding distance of a sign/tie
-# boundary (pinned by tests/test_similarity.py::test_decision_margins_are_wide,
-# which asserts a wide margin on every decision at every sf). This is an
-# intentional exception to the bit-identity invariant that model scores
-# carry, and since r5 it applies ONLY to the bucket/cell ASSIGNMENT bits:
-# the top-k RANK comparison is closed exactly by the exact_ties path
-# (lsh_topk(exact_ties=True) / lsh_topk_sql) — int8-code dot products and
-# squared norms are exact integers (≤ dim·127² per partial sum, exact in
-# any fold order) and the ranking key d/sqrt(nb2) is one correctly-rounded
-# IEEE sqrt+divide, so no margin assumption remains on rank boundaries.
-# A FIXTURE change that narrows a sign-bit margin must still widen the
-# fixture, not the twin. Approximation QUALITY is covered engine-free by
-# BENCH/ann_recall.
+# LSH bucket sign bits and IVF cell assignments via BLAS matmuls while the
+# DuckDB twins fold list_dot_product/list_cosine_similarity sequentially —
+# two different float64 reduction ORDERS. The twins hash-match because no
+# dot product in the fixture lands within rounding distance of a sign or
+# cell-assignment boundary (pinned by
+# tests/test_similarity.py::test_decision_margins_are_wide, which asserts a
+# wide margin on every decision at every sf). This is an intentional
+# exception to the bit-identity invariant that model scores carry, and it
+# applies ONLY to the bucket/cell ASSIGNMENT bits: the top-k RANK is exact
+# for every k (lsh_topk / ivf_topk ↔ lsh_topk_sql / ivf_topk_sql) —
+# int8-code dot products and squared norms are exact integers (≤ dim·127²
+# per partial sum, exact in any fold order) and the ranking key
+# d/sqrt(nb2) is one correctly-rounded IEEE sqrt+divide, so no margin
+# assumption remains on rank boundaries. A FIXTURE change that narrows a
+# sign-bit margin must widen the fixture, not the twin. Approximation
+# QUALITY is covered engine-free by BENCH/ann_recall.
 
-# shared DuckDB CTE: raw double vectors + their int8-dequantized twins
-# (same floor(x/s*127) codes the Spark posting carries, dequantized in the
-# same c*s/127 order)
-_DEQ_CTE = """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-dq AS (
-  SELECT vec_id, CASE WHEN s > 0
-    THEN list_transform(v, x -> floor(x / s * 127) * s / 127)
-    ELSE list_transform(v, x -> 0.0) END AS w
-  FROM (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS s
-        FROM e)
-)"""
-
-# guarded cosine over dequantized vectors (zero vector → 0.0, never
-# NaN/-1: DuckDB's list_cosine_similarity returns junk on zero norms)
-_COS_SCORED = """scored AS (
-  SELECT c.qid, c.nid,
-    CASE WHEN list_dot_product(qa.w, qa.w) = 0
-           OR list_dot_product(qb.w, qb.w) = 0 THEN 0.0
-         ELSE list_cosine_similarity(qa.w, qb.w) END AS cos
-  FROM cand c
-  JOIN dq qa ON qa.vec_id = c.qid
-  JOIN dq qb ON qb.vec_id = c.nid
-)
-SELECT vec_id, neighbor_id FROM (
-  SELECT qid AS vec_id, nid AS neighbor_id,
-    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rnk
-  FROM scored
-) WHERE rnk = 1"""
+# shared DuckDB CTE: the raw embeddings as double vectors
+_EMB_CTE = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
 
 
 def _lsh_cand_sql(tables: int, target_bucket: int, max_group: int) -> str:
     """Shared candidate-generation CTEs (hyperplanes → buckets → capped
-    members → collision pairs) for the LSH twins — one generator, so
-    lsh_top1_sql and lsh_topk_sql cannot drift."""
+    members → collision pairs) for lsh_topk_sql."""
     return f"""par AS (SELECT count(*) AS n, max(len(embedding)) AS dim
              FROM embeddings),
 pl AS (
@@ -943,7 +850,7 @@ hp AS (
   FROM pl, range(0, {tables}) ts(t), range(0, {MAX_PLANES}) ps(p)
   WHERE p < pl.planes
 ),
-{_DEQ_CTE},
+{_EMB_CTE},
 bkt AS (
   SELECT e.vec_id, hp.t,
     CAST(sum(CASE WHEN list_dot_product(e.v, hp.hv) > 0
@@ -962,29 +869,17 @@ cand AS (
 )"""
 
 
-def lsh_top1_sql(tables: int = N_TABLES,
-                 target_bucket: int = TARGET_BUCKET,
-                 max_group: int = MAX_GROUP) -> str:
-    """DuckDB twin of lsh_topk(k=1): evaluates the SAME integer-mix
-    hyperplanes, planes-from-count schedule, bucket bits from the raw
-    float vector, int8 member codes, member cap and (cos DESC, id) tie
-    order — so the gate hash-checks the approximate path end to end."""
-    return f"""
-WITH {_lsh_cand_sql(tables, target_bucket, max_group)},
-{_COS_SCORED}
-"""
-
-
 def lsh_topk_sql(k: int = 5, tables: int = N_TABLES,
                  target_bucket: int = TARGET_BUCKET,
                  max_group: int = MAX_GROUP) -> str:
-    """DuckDB twin of lsh_topk(k, exact_ties=True): same candidate CTEs,
-    then the EXACT integer re-rank — int8-code dot products and squared
+    """DuckDB twin of lsh_topk(k): evaluates the SAME integer-mix
+    hyperplanes, planes-from-count schedule, bucket bits from the raw
+    float vector, member cap and candidate pairs, then the EXACT integer
+    re-rank over the int8 codes — int8-code dot products and squared
     norms are integer-valued sums ≤ dim·127² per element (exact in
     float64 regardless of fold order), and the ranking key d/sqrt(nb2)
     is one correctly-rounded sqrt + divide, so the k-boundary and tie
-    order are engine-identical with NO margin assumption (retires the
-    float-order caveat for the rank comparison)."""
+    order are engine-identical with NO margin assumption."""
     return f"""
 WITH {_lsh_cand_sql(tables, target_bucket, max_group)},
 {_INT_SCORED}
@@ -994,8 +889,8 @@ WITH {_lsh_cand_sql(tables, target_bucket, max_group)},
 
 def _ivf_cand_sql(n_cells: int, nprobe: int, max_group: int) -> str:
     """Shared candidate CTEs (by-id quantizer → cell assignment → capped
-    members → probe pairs) for the IVF twins."""
-    return f"""{_DEQ_CTE},
+    members → probe pairs) for ivf_topk_sql."""
+    return f"""{_EMB_CTE},
 cent AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS cv
   FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT {n_cells})
@@ -1019,6 +914,9 @@ cand AS (
 )"""
 
 
+# exact-integer scoring CTEs: `codes` re-derives the int8 codes the Spark
+# posting carries (_quantize_np's floor(x/s*127)) — a posting-format
+# change must land in both
 _INT_SCORED = """codes AS (
   SELECT vec_id, CASE WHEN s > 0
     THEN list_transform(v, x -> CAST(floor(x / s * 127) AS BIGINT))
@@ -1049,23 +947,13 @@ SELECT vec_id, rank, neighbor_id FROM (
 """
 
 
-def ivf_top1_sql(n_cells: int = 16, nprobe: int = 4,
-                 max_group: int = MAX_GROUP) -> str:
-    """DuckDB twin of ivf_topk(k=1, init='by_id', iters=0): the quantizer
-    is the n_cells smallest-id vectors in id order, so cell assignment
-    (rank by cosine-vs-centroid, ties to the lower cell), nprobe probing,
-    the member cap and the final re-rank are all SQL-reproducible."""
-    return f"""
-WITH {_ivf_cand_sql(n_cells, nprobe, max_group)},
-{_COS_SCORED}
-"""
-
-
 def ivf_topk_sql(k: int = 5, n_cells: int = 16, nprobe: int = 4,
                  max_group: int = MAX_GROUP) -> str:
-    """DuckDB twin of ivf_topk(k, init='by_id', iters=0,
-    exact_ties=True): same candidates, exact-integer re-rank (see
-    lsh_topk_sql for the arithmetic argument)."""
+    """DuckDB twin of ivf_topk(k, init='by_id', iters=0): the quantizer
+    is the n_cells smallest-id vectors in id order, so cell assignment
+    (rank by cosine-vs-centroid, ties to the lower cell), nprobe probing,
+    the member cap and the exact-integer re-rank (see lsh_topk_sql for
+    the arithmetic argument) are all SQL-reproducible."""
     return f"""
 WITH {_ivf_cand_sql(n_cells, nprobe, max_group)},
 {_INT_SCORED}

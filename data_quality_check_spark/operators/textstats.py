@@ -80,9 +80,8 @@ def bpe_token_estimate(text) -> object:
 def bpe_token_estimate_sql(text_expr: str = "text") -> str:
     """DuckDB twin of bpe_token_estimate, generated from the same
     constants — the engines cannot drift."""
-    pieces = (f"list_filter(string_split_regex(regexp_replace({text_expr},"
-              f" '{_PIECES_RE}', ' \\1 ', 'g'), '[ \t\n\r]+'),"
-              " w -> w <> '')")
+    pieces = rules.ws_words_sql(
+        f"regexp_replace({text_expr}, '{_PIECES_RE}', ' \\1 ', 'g')")
     return f"""coalesce(CAST(list_sum(list_transform({pieces}, p ->
   CASE WHEN regexp_matches(p, '^[0-9]+$')
        THEN CAST(floor((length(p) + {BPE_DIGIT_CHARS - 1})
@@ -283,9 +282,7 @@ def chunk_documents_sql(max_tokens: int = 128, overlap: int = 0,
     step = max_tokens - overlap
     return f"""
 WITH words AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(text, '[ \t\n\r]+'),
-                w -> w <> '') AS ws
+  SELECT doc_id, {rules.ws_words_sql('text')} AS ws
   FROM documents
 ),
 chunks AS (
@@ -323,8 +320,7 @@ def vocab_topk_sql(k: int = 100) -> str:
     """DuckDB twin over the `documents` view."""
     return f"""
 SELECT token, count(*) AS n FROM (
-  SELECT unnest(list_filter(
-    string_split_regex(lower(text), '[ \t\n\r]+'), w -> w <> '')) AS token
+  SELECT unnest({rules.ws_words_sql('lower(text)')}) AS token
   FROM documents
 )
 GROUP BY token

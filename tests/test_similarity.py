@@ -63,39 +63,36 @@ def test_lsh_topk_recall(emb, np_corpus):
     assert len(got) >= 0.8 * len(expected)  # most queries get a candidate
 
 
-def test_lsh_exact_ties_order_equals_float_path(emb):
-    """exact_ties=True must produce the SAME ranked neighbor lists as
-    the float-cosine path over the same candidates (scales cancel in the
-    cosine of dequantized codes; the key only changes the ARITHMETIC,
-    never the order) — and be rank-complete per query."""
-    a = similarity.lsh_topk(emb, k=5).collect()
-    b = similarity.lsh_topk(emb, k=5, exact_ties=True).collect()
-    fa, fb = {}, {}
-    for r in a:
-        fa.setdefault(r["vec_id"], []).append((r["rank"], r["neighbor_id"]))
-    for r in b:
-        fb.setdefault(r["vec_id"], []).append((r["rank"], r["neighbor_id"]))
-    assert fa.keys() == fb.keys()
-    for q in fa:
-        assert sorted(fa[q]) == sorted(fb[q])
-        ranks = sorted(x[0] for x in fb[q])
-        assert ranks == list(range(1, len(ranks) + 1))
+def test_int_scorer_exact_at_max_partial_sums():
+    """The scorer's float64 (BLAS) matmul must return the EXACT integer
+    dot products and squared norms: dim 4096 with codes at ±127 puts
+    every partial sum at its largest magnitude (≤ dim·127²). Compared
+    against a pure-Python integer reference, pair by pair. One probe is
+    all-127 but for a single 126, so its dot with the all-127 member is
+    an odd 26-bit integer — a narrower float type would round it."""
+    import pandas as pd
 
-
-def test_ivf_exact_ties_order_equals_float_path(emb):
-    """IVF twin of the LSH exact-ties parity: same ranked neighbor lists
-    as the float path over the same candidates."""
-    kw = dict(k=3, n_cells=16, nprobe=4, iters=0, init="by_id")
-    a = similarity.ivf_topk(emb, **kw).collect()
-    b = similarity.ivf_topk(emb, exact_ties=True, **kw).collect()
-    fa, fb = {}, {}
-    for r in a:
-        fa.setdefault(r["vec_id"], []).append((r["rank"], r["neighbor_id"]))
-    for r in b:
-        fb.setdefault(r["vec_id"], []).append((r["rank"], r["neighbor_id"]))
-    assert fa.keys() == fb.keys()
-    for q in fa:
-        assert sorted(fa[q]) == sorted(fb[q])
+    dim = 4096
+    rng = np.random.RandomState(5)
+    odd = np.full(dim, 127, np.int8)
+    odd[0] = 126
+    codes = [np.full(dim, 127, np.int8), np.full(dim, -127, np.int8)]
+    codes += [(rng.choice([-127, 127], dim)).astype(np.int8)
+              for _ in range(4)]
+    codes += [rng.randint(-127, 128, dim).astype(np.int8), odd]
+    ids = list(range(len(codes)))
+    probe = [0, 1, 0, 1, 0, 1, 1, 1]
+    pdf = pd.DataFrame({"vec_id": ids, "code": [c.tobytes() for c in codes],
+                        "scale": 1.0, "probe": probe})
+    out = similarity._score_group_int_fn("vec_id")(pdf)
+    ints = [[int(x) for x in c] for c in codes]
+    expected = {(q, m): (sum(a * b for a, b in zip(ints[q], ints[m])),
+                         sum(b * b for b in ints[m]))
+                for q in ids if probe[q] for m in ids if not probe[m]}
+    got = {(int(r.vec_id), int(r.neighbor_id)): (int(r.dot), int(r.nb2))
+           for r in out.itertuples()}
+    assert got == expected
+    assert max(abs(d) for d, _ in expected.values()) == dim * 127 * 127
 
 
 def test_ivf_topk_recall(emb, np_corpus):
@@ -346,15 +343,13 @@ def test_ivf_index_build_once_query_many(emb, np_corpus):
 
 def test_ivf_topk_selfquery_equals_build_then_query(emb):
     """The r6 single-posting-pass self-query (ivf_topk) must produce the
-    exact rows of the two-pass ivf_build + ivf_query composition, in both
-    tie modes (posting = rank-0 slice of the probe table; argsort is
-    stable, so the slices are identical by construction — pinned here)."""
-    for exact in (False, True):
-        one = {tuple(r) for r in similarity.ivf_topk(
-            emb, k=3, n_cells=8, nprobe=3, iters=0, init="by_id",
-            exact_ties=exact).collect()}
-        index = similarity.ivf_build(emb, n_cells=8, iters=0, init="by_id")
-        two = {tuple(r) for r in similarity.ivf_query(
-            index, emb, k=3, nprobe=3, exact_ties=exact).collect()}
-        index.posted.unpersist()
-        assert one == two
+    exact rows of the two-pass ivf_build + ivf_query composition
+    (posting = rank-0 slice of the probe table; argsort is stable, so the
+    slices are identical by construction — pinned here)."""
+    one = {tuple(r) for r in similarity.ivf_topk(
+        emb, k=3, n_cells=8, nprobe=3, iters=0, init="by_id").collect()}
+    index = similarity.ivf_build(emb, n_cells=8, iters=0, init="by_id")
+    two = {tuple(r) for r in similarity.ivf_query(
+        index, emb, k=3, nprobe=3).collect()}
+    index.posted.unpersist()
+    assert one == two
