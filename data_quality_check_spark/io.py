@@ -13,9 +13,14 @@ generalizes that into snapshot-style checkpointing:
     keep/drop counts in flight, and a manifest entry carrying them is then
     published ATOMICALLY (temp file + os.replace — the local stand-in for
     an Iceberg snapshot commit, whose summary carries `added-records`);
+  * two chunks are in flight at once — the driver builds one chunk's plan
+    while the other's jobs run — but manifest entries are committed by the
+    calling thread in chunk order, so the committed chunks are always a
+    prefix of the job's chunk list;
   * on restart, committed chunks are skipped by reading the manifest — so a
     killed job resumes with no duplicated and no missing (conv_id, turn_idx)
-    rows (tests/test_resume.py).
+    rows (tests/test_resume.py): the remaining files re-chunk into the same
+    chunk ids, whose uncommitted (orphan) dirs are overwritten.
 
 At 100 TB scale the chunk is the unit of fault recovery ABOVE Spark's own
 task retry: a lost executor re-runs tasks (spark.task.maxFailures), a lost
@@ -28,8 +33,10 @@ import hashlib
 import json
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import DEFAULT_RULESET, RuleSet
@@ -62,7 +69,8 @@ def _manifest_path(output_dir: str) -> str:
 
 
 def read_manifest(output_dir: str) -> list[dict]:
-    """Committed chunk entries, ordered by commit sequence."""
+    """Committed chunk entries, ordered by manifest file name — the chunk
+    id, a hash of the chunk's files — not by commit sequence."""
     mdir = _manifest_path(output_dir)
     if not os.path.isdir(mdir):
         return []
@@ -109,6 +117,79 @@ class JobReport:
     files_processed: list[str]
 
 
+def _label_chunk(
+    spark: SparkSession,
+    chunk: list[str],
+    output_dir: str,
+    cfg: RuleSet,
+    *,
+    with_models: bool,
+    bc_models,
+    output_partitions: int | None,
+    measure_latency: bool,
+    max_records_per_file: int | None,
+    models_on_survivors: bool,
+) -> dict:
+    """Label one chunk and write its latency, turns and metrics dirs;
+    return its manifest entry, uncommitted. Runs on a pool thread, so the
+    description set here names every job of the chunk in the UI and the
+    event log without touching the caller's job group."""
+    chunk_id = hashlib.sha256("\n".join(chunk).encode()).hexdigest()[:16]
+    spark.sparkContext.setLocalProperty("spark.job.description",
+                                        f"chunk {chunk_id}")
+    df = spark.read.parquet(*chunk)
+    timed = measure_latency and with_models
+    # ONE labeling pass per chunk: the latency, turns and metrics writes
+    # all read this cache, so scan, features, scrub and the scoring UDF
+    # run once (and batch_us describes the run that produced the
+    # committed output)
+    labeled = pipeline.with_input_file(pipeline.label_turns(
+        df, cfg, with_models=with_models, bc_models=bc_models,
+        measure_latency=timed,
+        models_on_survivors=models_on_survivors)).persist()
+    try:
+        if timed:
+            # D10 duration histogram: per-chunk scoring-latency
+            # percentiles (metrics.rs:22-25 analog) written next to the
+            # metrics table
+            from .operators import latency as lat
+
+            lat_rows = lat.percentiles(
+                labeled.select(
+                    F.spark_partition_id().alias("partition_id"),
+                    "batch_us"),
+                "batch_us", ("partition_id",))
+            lat_rows.write.mode("overwrite").parquet(
+                os.path.join(output_dir, "latency", f"chunk={chunk_id}"))
+        # counted after the shuffle, in the write's result stage
+        out, counts = pipeline.observe_labels(pipeline.stable_order(
+            labeled.drop("input_file", "batch_us"), output_partitions),
+            name=f"qf-{chunk_id}")
+        w = out.write.mode("overwrite")
+        if max_records_per_file:
+            # compaction control: output_partitions bounds file count
+            # from below (parallelism), maxRecordsPerFile from above
+            # (no gigantic files for downstream range readers)
+            w = w.option("maxRecordsPerFile", str(max_records_per_file))
+        w.parquet(os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
+        metrics = pipeline.metrics_table(
+            labeled, cfg, with_models=with_models)
+        metrics.write.mode("overwrite").parquet(
+            os.path.join(output_dir, "metrics", f"chunk={chunk_id}"))
+    finally:
+        labeled.unpersist()
+    return {
+        "chunk_id": chunk_id,
+        "input_files": chunk,
+        "ruleset_version": cfg.version,
+        # latency/chunk=<id>/ exists only for timed chunks; readers
+        # filter on this so a mixed-flags output dir stays readable
+        "has_latency": timed,
+        # n_turns, n_kept, n_dropped
+        **counts.get,
+    }
+
+
 def run_job(
     spark: SparkSession,
     input_path: str,
@@ -135,16 +216,28 @@ def run_job(
                                      with the chunk's n_turns/n_kept/
                                      n_dropped
 
+    Two chunks are in flight at once: each chunk's body (`_label_chunk`)
+    runs on a 2-thread pool with the caller's local properties (job
+    group, scheduler pool) and session tags, so the driver builds chunk
+    i+1's plan while chunk i's jobs run. This thread commits the entries
+    in chunk order, each only after every earlier chunk committed, so the
+    committed chunks are always a prefix of the chunk list.
+
     Exactly-once across EVERY crash window: the chunk_id is derived from
-    the chunk's sorted input-file list, so a crash BETWEEN the parquet
-    writes and the manifest commit leaves an orphan directory that the
-    re-run overwrites (same id, mode=overwrite) — and read_output()/
-    read_metrics() read only manifest-committed chunk dirs anyway, so an
-    orphan is never visible to readers even before the re-run.
+    the chunk's sorted input-file list, and a re-run re-chunks the files
+    after that prefix into the same ids, so a crash BETWEEN the parquet
+    writes and the manifest commit leaves orphan directories (up to the
+    two chunks in flight) that the re-run overwrites (same id,
+    mode=overwrite) — and read_output()/read_metrics() read only
+    manifest-committed chunk dirs anyway, so an orphan is never visible
+    to readers even before the re-run. On any failure the chunk still in
+    flight finishes (releasing its cache) before the error propagates,
+    and no later chunk starts.
 
     `fail_after_chunks` / `fail_before_commit` are test-only fault
-    injection: raise after N chunk commits, or after the Nth chunk's data
-    writes but BEFORE its manifest commit, to exercise both resume windows.
+    injection, checked on this thread: raise right after the Nth commit
+    (N chunks committed), or right before it, once the Nth chunk's data
+    writes are done (N-1 committed), to exercise both resume windows.
     """
     files = list_input_files(spark, input_path)
     done = processed_files(output_dir)
@@ -155,71 +248,37 @@ def run_job(
 
     chunks = [todo[i:i + files_per_chunk]
               for i in range(0, len(todo), files_per_chunk)]
-    ran = 0
     processed: list[str] = []
-    for chunk in chunks:
-        chunk_id = hashlib.sha256("\n".join(chunk).encode()).hexdigest()[:16]
-        df = spark.read.parquet(*chunk)
-        timed = measure_latency and with_models
-        # ONE labeling pass per chunk: the latency, turns and metrics writes
-        # all read this cache, so scan, features, scrub and the scoring UDF
-        # run once (and batch_us describes the run that produced the
-        # committed output)
-        labeled = pipeline.with_input_file(pipeline.label_turns(
-            df, cfg, with_models=with_models, bc_models=bc_models,
-            measure_latency=timed,
-            models_on_survivors=models_on_survivors)).persist()
-        try:
-            if timed:
-                # D10 duration histogram: per-chunk scoring-latency
-                # percentiles (metrics.rs:22-25 analog) written next to the
-                # metrics table
-                from .operators import latency as lat
+    # double buffering: one chunk's plan build overlaps the other's jobs
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        def submit(chunk):
+            # wrapped per chunk: the wrapper copies the caller's properties
+            # once, and each chunk's description and SQL execution ids are
+            # then set on its own copy, never on the other chunk's
+            return pool.submit(
+                inheritable_thread_target(spark)(_label_chunk),
+                spark, chunk, output_dir, cfg, with_models=with_models,
+                bc_models=bc_models, output_partitions=output_partitions,
+                measure_latency=measure_latency,
+                max_records_per_file=max_records_per_file,
+                models_on_survivors=models_on_survivors)
 
-                lat_rows = lat.percentiles(
-                    labeled.select(
-                        F.spark_partition_id().alias("partition_id"),
-                        "batch_us"),
-                    "batch_us", ("partition_id",))
-                lat_rows.write.mode("overwrite").parquet(
-                    os.path.join(output_dir, "latency", f"chunk={chunk_id}"))
-            # counted after the shuffle, in the write's result stage
-            out, counts = pipeline.observe_labels(pipeline.stable_order(
-                labeled.drop("input_file", "batch_us"), output_partitions))
-            w = out.write.mode("overwrite")
-            if max_records_per_file:
-                # compaction control: output_partitions bounds file count
-                # from below (parallelism), maxRecordsPerFile from above
-                # (no gigantic files for downstream range readers)
-                w = w.option("maxRecordsPerFile", str(max_records_per_file))
-            w.parquet(
-                os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
-            metrics = pipeline.metrics_table(
-                labeled, cfg, with_models=with_models)
-            metrics.write.mode("overwrite").parquet(
-                os.path.join(output_dir, "metrics", f"chunk={chunk_id}"))
-            if (fail_before_commit is not None
-                    and ran + 1 >= fail_before_commit):
+        # chunk n+2 is submitted once chunk n has committed, so no chunk
+        # ever waits in the pool's queue, and on any exception leaving
+        # this block waits only for the one chunk still in flight
+        futures = [submit(chunk) for chunk in chunks[:2]]
+        for n, chunk in enumerate(chunks, 1):
+            entry = futures[n - 1].result()
+            if fail_before_commit is not None and n >= fail_before_commit:
                 raise RuntimeError(
-                    "injected failure before manifest commit of chunk "
-                    f"{ran + 1}")
-            _commit_manifest(output_dir, {
-                "chunk_id": chunk_id,
-                "input_files": chunk,
-                "ruleset_version": cfg.version,
-                # latency/chunk=<id>/ exists only for timed chunks; readers
-                # filter on this so a mixed-flags output dir stays readable
-                "has_latency": timed,
-                # n_turns, n_kept, n_dropped
-                **counts.get,
-            })
-        finally:
-            labeled.unpersist()
-        ran += 1
-        processed.extend(chunk)
-        if fail_after_chunks is not None and ran >= fail_after_chunks:
-            raise RuntimeError(f"injected failure after {ran} chunks")
-    return JobReport(chunks_run=ran,
+                    f"injected failure before manifest commit of chunk {n}")
+            _commit_manifest(output_dir, entry)
+            processed.extend(chunk)
+            if fail_after_chunks is not None and n >= fail_after_chunks:
+                raise RuntimeError(f"injected failure after {n} chunks")
+            if n + 1 < len(chunks):
+                futures.append(submit(chunks[n + 1]))
+    return JobReport(chunks_run=len(chunks),
                      chunks_skipped=len(files) - len(todo),
                      files_processed=processed)
 

@@ -171,6 +171,8 @@ def observe_labels(labeled: DataFrame, name: str = "qf"):
     attaches it after stable_order, so it counts in the turns write's
     result stage (accumulator updates apply exactly once only in result
     tasks; a pre-shuffle observe can double-count on executor loss).
+    Observations that are live at the same time need distinct names:
+    run_job's two in-flight chunks each pass `qf-<chunk_id>`.
     Returns (df, observation); read `observation.get` after an action
     completes."""
     from pyspark.sql import Observation

@@ -87,10 +87,11 @@ def test_resume_after_crash_before_manifest_commit(spark, tmp_path, src):
     with pytest.raises(RuntimeError, match="before manifest commit"):
         dq_io.run_job(spark, src, out, with_models=False,
                       files_per_chunk=2, fail_before_commit=2)
-    # one chunk committed, one orphaned on disk
+    # one chunk committed, at least one orphaned on disk (the next chunk
+    # may have been in flight too)
     assert len(dq_io.read_manifest(out)) == 1
     import os
-    assert len(os.listdir(os.path.join(out, "turns"))) == 2
+    assert len(os.listdir(os.path.join(out, "turns"))) >= 2
     # readers see only the committed chunk
     assert len(_keys(spark, out)) == 50  # 1 chunk × 2 files × 25 rows
 
@@ -101,6 +102,10 @@ def test_resume_after_crash_before_manifest_commit(spark, tmp_path, src):
             for r in _keys(spark, out)]
     assert len(keys) == 200
     assert len(set(keys)) == 200  # orphan overwritten, not double-counted
+    # every orphan dir was overwritten by its chunk, none left beside them
+    ids = {f"chunk={e['chunk_id']}" for e in dq_io.read_manifest(out)}
+    for sub in ("turns", "metrics"):
+        assert set(os.listdir(os.path.join(out, sub))) == ids
     # metrics lineage also exactly-once
     files_in = set(dq_io.list_input_files(spark, src))
     metric_files = {
@@ -227,3 +232,130 @@ def test_committed_turns_rejects_entries_without_counts(tmp_path):
         "ruleset_version": "v1", "has_latency": False})
     with pytest.raises(ValueError, match="--no-resume"):
         dq_io.committed_turns(str(tmp_path))
+
+
+def _jobs(spark, after: int = -1) -> list[dict]:
+    """Every job with an id above `after`, from the app status store:
+    id, job group, description and submission/completion times (ms)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+
+    def opt(o, conv=lambda v: v):
+        return conv(o.get()) if o.isDefined() else None
+
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() <= after:
+            continue
+        out.append({
+            "id": j.jobId(), "group": opt(j.jobGroup()),
+            "desc": opt(j.description()),
+            "submitted": opt(j.submissionTime(), lambda d: d.getTime()),
+            "completed": opt(j.completionTime(), lambda d: d.getTime())})
+    return out
+
+
+def _last_job_id(spark) -> int:
+    return max((j["id"] for j in _jobs(spark)), default=-1)
+
+
+def _chunk_ids(spark, src, files_per_chunk):
+    """The chunk ids run_job derives, in chunk order."""
+    import hashlib
+
+    files = dq_io.list_input_files(spark, src)
+    return [hashlib.sha256("\n".join(files[i:i + files_per_chunk])
+                           .encode()).hexdigest()[:16]
+            for i in range(0, len(files), files_per_chunk)]
+
+
+def test_next_chunk_runs_while_previous_writes(spark, tmp_path, src):
+    """Pipelined chunks: a job of chunk 2 is submitted before chunk 1's
+    last job completes (jobs mapped to chunks by their description)."""
+    before = _last_job_id(spark)
+    dq_io.run_job(spark, src, str(tmp_path / "out"), with_models=False,
+                  files_per_chunk=2)
+    jobs = _jobs(spark, before)
+    first, second = _chunk_ids(spark, src, 2)[:2]
+    done_first = [j["completed"] for j in jobs
+                  if j["desc"] == f"chunk {first}"]
+    start_second = [j["submitted"] for j in jobs
+                    if j["desc"] == f"chunk {second}"]
+    assert done_first and start_second
+    assert min(start_second) < max(done_first)
+
+
+def test_chunk_jobs_keep_callers_job_group(spark, tmp_path, src):
+    """Chunk bodies run on pool threads but every job they start stays in
+    the caller's job group; ≥ 2 jobs per chunk, each named by its chunk."""
+    sc = spark.sparkContext
+    group = "test-run-job-group"
+    before = _last_job_id(spark)
+    sc.setJobGroup(group, "run_job")
+    try:
+        dq_io.run_job(spark, src, str(tmp_path / "out"), with_models=False,
+                      files_per_chunk=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = _jobs(spark, before)
+    assert jobs and all(j["group"] == group for j in jobs)
+    ids = _chunk_ids(spark, src, 2)
+    assert len(ids) == 4
+    for cid in ids:
+        assert sum(j["desc"] == f"chunk {cid}" for j in jobs) >= 2
+
+
+def _metric_sums(spark, out):
+    sums: dict = {}
+    for r in dq_io.read_metrics(spark, out).collect():
+        s = sums.setdefault(dq_io.normalize_file_uri(r["input_file"]), {})
+        for k in ("n_turns", "n_kept", "n_dropped"):
+            s[k] = s.get(k, 0) + r[k]
+        for reason, n in r["reason_counts"].items():
+            s[reason] = s.get(reason, 0) + n
+    return sums
+
+
+def test_pipelined_chunks_equal_one_chunk(spark, tmp_path, src, bc_models):
+    """4 pipelined chunks and 1 chunk give the same turns rows (every
+    column, as a multiset), the same per-file metrics and 200 turns in
+    the manifest."""
+    from collections import Counter
+
+    outs = {}
+    for per in (2, 100):
+        out = str(tmp_path / f"out{per}")
+        dq_io.run_job(spark, src, out, bc_models=bc_models,
+                      files_per_chunk=per)
+        outs[per] = out
+    entries = dq_io.read_manifest(outs[2])
+    assert len(entries) == 4
+    assert sum(e["n_turns"] for e in entries) == 200
+    assert dq_io.committed_turns(outs[100]) == 200
+
+    def rows(out):
+        df = dq_io.read_output(spark, out).drop("chunk")
+        return Counter(tuple(tuple(v) if isinstance(v, list) else v
+                             for v in r) for r in df.collect())
+
+    assert rows(outs[2]) == rows(outs[100])
+    assert _metric_sums(spark, outs[2]) == _metric_sums(spark, outs[100])
+
+
+def test_failing_chunk_stops_pipeline_cleanly(spark, tmp_path, src):
+    """A real Spark error in chunk 2 while chunk 3 runs: run_job raises
+    it, the manifest holds only chunk 1, and no chunk cache survives."""
+    files = dq_io.list_input_files(spark, src)
+    with open(files[3], "wb") as fh:  # second file of chunk 2
+        fh.write(b"not a parquet file")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    out = str(tmp_path / "out")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        dq_io.run_job(spark, src, out, with_models=False, files_per_chunk=2)
+    assert [e["chunk_id"] for e in dq_io.read_manifest(out)] == \
+        _chunk_ids(spark, src, 2)[:1]
+    assert jsc.getPersistentRDDs().size() <= before
