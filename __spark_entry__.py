@@ -340,8 +340,8 @@ def _q_qf_ruleset_diff(spark, sf_dir):
 # Deterministic pseudo-duration (µs) for the latency-rollup gate: a pure
 # function of the row, identical in Spark and DuckDB, so the histogram +
 # cumulative-percentile MATH is hash-checked; measured wall-clock batch
-# durations flow through the SAME rollup (operators/latency.timed_scores,
-# tests/test_latency.py).
+# durations flow through the SAME rollup (pipeline.label_turns'
+# measure_latency=True `batch_us`, tests/test_latency.py).
 _LAT_DUR = "coalesce(length(text), 0) * 3 + 17"
 
 
@@ -528,11 +528,10 @@ def _q_dedup_incremental(spark, sf_dir):
     """INCREMENTAL dedup (daily-ingestion shape): the odd-doc_id half of
     the corpus queried against a MinHash index built over the even half —
     band collisions verified by signature agreement; fully oracled
-    (incremental_minhash_sql). The index is localCheckpointed (one-shot
-    gate form) — production builds persist + minhash_save it."""
+    (incremental_minhash_sql). minhash_build localCheckpoints the
+    index; production builds minhash_save it for later batches."""
     docs = _docs(spark, sf_dir)
-    index = dedup.minhash_build(docs.filter(F.col("doc_id") % 2 == 0),
-                                persist=False)
+    index = dedup.minhash_build(docs.filter(F.col("doc_id") % 2 == 0))
     pairs = dedup.incremental_dedup_pairs(
         index, docs.filter(F.col("doc_id") % 2 == 1), threshold=0.5)
     return pairs.select(
@@ -1054,8 +1053,7 @@ def _q_stream_incremental_dedup(spark, sf_dir):
     if not _os.path.exists(_os.path.join(src, "_SUCCESS")):
         (docs.filter(F.col("doc_id") % 2 == 1).repartition(4)
          .write.mode("overwrite").parquet(src))
-    index = dedup.minhash_build(docs.filter(F.col("doc_id") % 2 == 0),
-                                persist=False)
+    index = dedup.minhash_build(docs.filter(F.col("doc_id") % 2 == 0))
     run = _uuid.uuid4().hex[:8]
     out = f"/tmp/dqcs_gate_docstream_out/{run}"
     ck = f"/tmp/dqcs_gate_docstream_ck/{run}"

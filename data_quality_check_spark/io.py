@@ -322,29 +322,23 @@ def read_latency(spark: SparkSession, output_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shared index-persistence plumbing (minhash_save/ivf_save use these)
+# index persistence (minhash_save/load and ivf_save/load call these)
 # ---------------------------------------------------------------------------
 
-def index_table_name(prefix: str, path: str) -> str:
+# meta fields every saved index carries after its own leading fields
+_INDEX_META_TAIL = "buckets int, table string, nonce string"
+
+
+def _index_table_name(prefix: str, path: str) -> str:
     """Catalog table name for a bucketed index saved at `path`: a short
     sanitized path tail for readability + an md5 tail for UNIQUENESS —
     a suffix-only derivation lets two different paths share a name, and
     saveAsTable(mode='overwrite') would then silently repoint the first
     index at the second's files."""
-    import hashlib
     import re
 
     tail = re.sub(r"\W+", "_", path).strip("_")[-24:]
     return f"{prefix}_{tail}_{hashlib.md5(path.encode()).hexdigest()[:12]}"
-
-
-def write_index_meta(spark: SparkSession, path: str, row: tuple,
-                     schema: str) -> None:
-    """Index metadata as a one-row Spark JSON dataset — written through
-    the same storage layer as the index tables, so save/load works
-    wherever the data does (s3://, hdfs://, ...)."""
-    (spark.createDataFrame([row], schema).coalesce(1)
-     .write.mode("overwrite").json(os.path.join(path, "meta")))
 
 
 def write_index_nonce(spark: SparkSession, path: str) -> str:
@@ -354,46 +348,80 @@ def write_index_nonce(spark: SparkSession, path: str) -> str:
     disagreeing, so a load can never silently pair stale metadata (e.g.
     an old bucket spec) with freshly rewritten data files — the failure
     mode of the meta-last-only protocol."""
-    import uuid
-
     nonce = uuid.uuid4().hex
     (spark.createDataFrame([(nonce,)], "nonce string").coalesce(1)
      .write.mode("overwrite").json(os.path.join(path, "nonce")))
     return nonce
 
 
-def check_index_nonce(spark: SparkSession, path: str,
-                      meta_nonce: str | None) -> None:
-    """Verify the data-dir nonce matches the one recorded in meta. Any
-    mismatch means an interrupted save: fail loudly instead of reading
-    data files under the wrong metadata."""
+def save_index(df: DataFrame, path: str, data: str, meta: tuple,
+               meta_schema: str, *, buckets: int | None, table: str | None,
+               key: tuple[str, ...], sort: tuple[str, ...],
+               extra: dict[str, DataFrame] | None = None) -> None:
+    """Save an index under `path`: the nonce, then `df` at path/<data>,
+    then each `extra` table at path/<name>, then the meta — `meta`
+    (fields per `meta_schema`) plus buckets, table and nonce, as a
+    one-row Spark JSON dataset written through the same storage layer as
+    the index tables, so save/load works wherever the data does (s3://,
+    hdfs://, ...). With `buckets`, `df` is written bucketed on `key` and
+    sorted on `sort` as an external table registered as `table` (default
+    derived from `data` and the path)."""
+    spark = df.sparkSession
+    nonce = write_index_nonce(spark, path)
+    data_path = os.path.join(path, data)
+    name = ""
+    if buckets:
+        name = table or _index_table_name(data, path)
+        write_bucketed(df, name, data_path, buckets, key, sort)
+    else:
+        df.write.mode("overwrite").parquet(data_path)
+    for sub, extra_df in (extra or {}).items():
+        extra_df.write.mode("overwrite").parquet(os.path.join(path, sub))
+    (spark.createDataFrame([(*meta, buckets or 0, name, nonce)],
+                           f"{meta_schema}, {_INDEX_META_TAIL}")
+     .coalesce(1).write.mode("overwrite").json(os.path.join(path, "meta")))
+
+
+def load_index(spark: SparkSession, path: str, data: str,
+               meta_schema: str):
+    """Read an index saved by save_index: returns (meta row, table). A
+    nonce that disagrees with the meta's means an interrupted save, and
+    the load fails loudly instead of reading data files under the wrong
+    metadata. A bucketed save is read through its catalog table (zero
+    exchange on its key), falling back to the plain parquet files when
+    the catalog doesn't know it (fresh session, no shared metastore).
+    The table is returned unpersisted: callers select their columns
+    first, since unpersisting a projection of a cached table is a no-op
+    and would leak the cache."""
+    meta = (spark.read.schema(f"{meta_schema}, {_INDEX_META_TAIL}")
+            .json(os.path.join(path, "meta")).first())
     try:
         row = spark.read.schema("nonce string").json(
             os.path.join(path, "nonce")).first()
         dir_nonce = row["nonce"] if row else None
     except Exception:
         dir_nonce = None
-    if meta_nonce != dir_nonce:
+    if meta["nonce"] != dir_nonce:
         raise ValueError(
             f"index at {path} is from an interrupted save "
-            f"(meta nonce {meta_nonce!r} != data nonce {dir_nonce!r}) — "
+            f"(meta nonce {meta['nonce']!r} != data nonce {dir_nonce!r}) — "
             "re-run the save")
+    if meta["table"]:
+        try:
+            return meta, spark.read.table(meta["table"])
+        except Exception:
+            pass
+    return meta, spark.read.parquet(os.path.join(path, data))
 
 
-def read_index_meta(spark: SparkSession, path: str, schema: str):
-    """Read the one-row index metadata written by write_index_meta."""
-    return spark.read.schema(schema).json(os.path.join(path, "meta")).first()
-
-
-def write_bucketed(df: DataFrame, table: str, buckets: int,
-                   key: tuple[str, ...] = ("conv_id",),
-                   sort: tuple[str, ...] = ("conv_id", "turn_idx")) -> None:
-    """Bucketed managed table: pre-shuffled + pre-sorted on `key`, so
-    repeated joins/aggregations on that key run with ZERO exchanges
-    (SortMergeJoin directly over bucket files — plan-asserted in
-    tests/test_plans.py). The 100 TB pattern for dimension co-location:
-    pay the shuffle once at write time, never again per query. Bucket
-    count should match the downstream parallelism target (one task per
-    bucket per join)."""
-    (df.write.bucketBy(buckets, *key).sortBy(*sort)
+def write_bucketed(df: DataFrame, table: str, path: str, buckets: int,
+                   key: tuple[str, ...], sort: tuple[str, ...]) -> None:
+    """Bucketed external table at `path`, registered as `table`:
+    pre-shuffled + pre-sorted on `key`, so repeated joins/aggregations on
+    that key run with ZERO exchanges (SortMergeJoin directly over bucket
+    files — plan-asserted in tests/test_plans.py). The 100 TB pattern for
+    dimension co-location: pay the shuffle once at write time, never
+    again per query. Bucket count should match the downstream
+    parallelism target (one task per bucket per join)."""
+    (df.write.bucketBy(buckets, *key).sortBy(*sort).option("path", path)
      .mode("overwrite").format("parquet").saveAsTable(table))

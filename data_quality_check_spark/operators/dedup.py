@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.rules import WS, ws_words, ws_words_sql
 from ..models import hashing
-from .guards import barrier_filter, warn_window_cap
+from .guards import barrier_filter, rank_cap
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -418,12 +418,7 @@ def _capped_band_pairs(bands_df: DataFrame, keys: list[str],
     """(doc_a < doc_b) candidate pairs from band-bucket collisions, with
     the member side rank-capped per bucket (probe side stays whole —
     the same mem/probe split as the ANN scorers and their SQL twins)."""
-    from pyspark.sql import Window
-
-    warn_window_cap("max_members", max_members)
-    w = Window.partitionBy(*keys).orderBy("doc_id")
-    mem = (bands_df.withColumn("_rk", F.row_number().over(w))
-           .filter(F.col("_rk") <= max_members).drop("_rk"))
+    mem = rank_cap(bands_df, keys, "doc_id", max_members, "max_members")
     a, b = bands_df.alias("a"), mem.alias("b")
     cond = (F.col("a.doc_id") != F.col("b.doc_id"))
     for kcol in keys:
@@ -502,6 +497,42 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.7,
 # line-level corpus dedup (C4-style: drop lines duplicated across docs)
 # ---------------------------------------------------------------------------
 
+def _keep_first(pieces: DataFrame, hash_col: str, eligible, pos_col: str,
+                piece_col: str, sep: str, count_col: str,
+                dropped_col: str) -> DataFrame:
+    """First-occurrence keep + reassembly shared by dedup_lines and
+    dedup_spans. `pieces` holds (doc_id, pos_col, piece_col, hash_col)
+    rows; an `eligible` piece (boolean Column) survives only at the
+    min (doc_id, pos_col) of its hash, an ineligible one always. Returns
+    (doc_id, text_deduped, count_col, dropped_col), pieces rejoined with
+    `sep` in position order.
+
+    First occurrences come from groupBy(hash).min(struct(doc_id, pos))
+    joined back on the hash — NOT a rank window: the most-duplicated
+    piece (the boilerplate these operators target) is one hot key, and a
+    window would serialize all its copies into a single partition's
+    sort, while the min-struct aggregate is map-side combinable (each
+    input partition contributes one candidate per distinct hash) and the
+    join-back is a skew-splittable SMJ under AQE. Reassembly shuffles on
+    doc_id; a doc's collected pieces total ≤ its original text, which
+    already existed as one row — no new giant-row failure mode."""
+    firsts = (pieces.filter(eligible).groupBy(hash_col)
+              .agg(F.min(F.struct("doc_id", pos_col)).alias("_first")))
+    kept = (pieces.join(firsts, hash_col, "left")
+            .withColumn("_keep", (~eligible)
+                        | (F.struct("doc_id", pos_col) == F.col("_first"))))
+    return kept.groupBy("doc_id").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(
+                    F.when(F.col("_keep"), F.struct(pos_col, piece_col)))),
+                lambda s: s[piece_col]),
+            sep).alias("text_deduped"),
+        F.count(F.lit(1)).alias(count_col),
+        F.count_if(~F.col("_keep")).alias(dropped_col),
+    )
+
+
 def dedup_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """C4-style line-level dedup: a line occurring in MORE than one place
     across the corpus survives only at its FIRST occurrence (min doc_id,
@@ -509,19 +540,11 @@ def dedup_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (doc_id, text_deduped, n_lines, n_lines_dropped) with original line
     order preserved.
 
-    Plan: posexplode lines (narrow) → normalized-line md5 → FIRST
-    OCCURRENCE per hash via groupBy(hash).min(struct(doc_id, pos)) joined
-    back on the hash — NOT a rank window: the most-duplicated boilerplate
-    line (exactly what this operator targets) is one hot key, and a
-    window would serialize all its copies into a single partition's sort,
-    while the min-struct aggregate is map-side combinable (each input
-    partition contributes one candidate per distinct line) and the
-    join-back is a skew-splittable SMJ under AQE — → re-assemble per doc
-    (shuffle on doc_id). Deterministic under any partitioning;
-    empty/whitespace lines are never dropped (they carry no content and
-    would all collide). Reassembly memory is bounded by the INPUT row: a
-    doc's collected lines total ≤ its original text, which already
-    existed as one row — no new giant-row failure mode.
+    Plan: posexplode lines (narrow) → normalized-line md5 → first
+    occurrence per hash and per-doc reassembly (_keep_first: a
+    map-side-combinable min-struct aggregate, not a rank window).
+    Deterministic under any partitioning; empty/whitespace lines are
+    never dropped (they carry no content and would all collide).
 
     SIDE EFFECT (r4 ADVICE): building this plan runs an EAGER Spark
     job — the multi-consumer intermediate is localCheckpointed, which
@@ -541,26 +564,8 @@ def dedup_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # explode+normalize+md5 work once instead of re-scanning the corpus
     hashed = lines.withColumn("_blank", norm == "") \
         .withColumn("_h", F.md5(norm)).localCheckpoint()
-    firsts = (hashed.filter(~F.col("_blank"))
-              .groupBy("_h")
-              .agg(F.min(F.struct("doc_id", "pos")).alias("_first")))
-    ranked = (hashed.join(firsts, "_h", "left")
-              .withColumn("_keep", F.col("_blank")
-                          | (F.struct("doc_id", "pos") == F.col("_first"))))
-    return (
-        ranked.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(
-                        F.when(F.col("_keep"),
-                               F.struct("pos", "line")))),
-                    lambda s: s["line"]),
-                "\n").alias("text_deduped"),
-            F.count(F.lit(1)).alias("n_lines"),
-            F.count_if(~F.col("_keep")).alias("n_lines_dropped"),
-        )
-    )
+    return _keep_first(hashed, "_h", ~F.col("_blank"), "pos", "line", "\n",
+                       "n_lines", "n_lines_dropped")
 
 
 def dedup_lines_sql(
@@ -623,10 +628,8 @@ def dedup_spans(docs: DataFrame, text_col: str = "text",
     Plan and skew shape (same discipline as dedup_lines): posexplode
     words (narrow) → per-doc window cumsum for the chunk id (partitioned
     by doc_id — bounded by the doc, never a corpus-wide key) → span
-    assembly (doc-keyed shuffle) → first occurrence per span hash via
-    map-side-combinable groupBy(hash).min(struct(doc_id, start_pos)) +
-    join-back (NOT a rank window: the hottest boilerplate span is one hot
-    key) → reassembly keyed by doc_id. Output text is whitespace-
+    assembly (doc-keyed shuffle) → first occurrence per span hash and
+    reassembly keyed by doc_id (_keep_first). Output text is whitespace-
     normalized (single spaces) — span removal has no faithful byte-level
     splice anyway. Returns (doc_id, text_deduped, n_spans,
     n_spans_dropped) for EVERY input doc (empty docs pass through).
@@ -666,25 +669,8 @@ def dedup_spans(docs: DataFrame, text_col: str = "text",
         # minhash signature table
         .localCheckpoint()
     )
-    firsts = (spans.filter(F.col("_elig")).groupBy("_fp")
-              .agg(F.min(F.struct("doc_id", "start_pos")).alias("_first")))
-    kept = (spans.join(firsts, "_fp", "left")
-            .withColumn("_keep", (~F.col("_elig"))
-                        | (F.struct("doc_id", "start_pos")
-                           == F.col("_first"))))
-    out = (
-        kept.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(
-                        F.when(F.col("_keep"),
-                               F.struct("start_pos", "span")))),
-                    lambda s: s["span"]), " ").alias("text_deduped"),
-            F.count(F.lit(1)).alias("n_spans"),
-            F.count_if(~F.col("_keep")).alias("n_spans_dropped"),
-        )
-    )
+    out = _keep_first(spans, "_fp", F.col("_elig"), "start_pos", "span", " ",
+                      "n_spans", "n_spans_dropped")
     return (docs.select("doc_id").join(out, "doc_id", "left")
             .select(
                 "doc_id",
@@ -762,10 +748,11 @@ from dataclasses import dataclass, field
 class MinHashIndex:
     """A built corpus index for INCREMENTAL dedup (the daily-ingestion
     shape: dedup each new batch against everything already kept without
-    re-sweeping the corpus). `sigs` is the persisted signature table;
-    `bands` derives from it lazily. Caller owns sigs.unpersist()."""
+    re-sweeping the corpus). `sigs` is the materialized signature table
+    (minhash_build: localCheckpointed; minhash_load: persisted, so the
+    loader owns sigs.unpersist()); `bands` derives from it lazily."""
 
-    sigs: DataFrame          # (doc_id, sig, band_hashes), persisted
+    sigs: DataFrame          # (doc_id, sig, band_hashes)
     k: int
     n_bands: int
     _capped: dict = field(default_factory=dict, repr=False, compare=False)
@@ -783,29 +770,24 @@ class MinHashIndex:
         queried batch) instead of re-running the explode + window rank
         over the whole corpus band table for EVERY incremental batch —
         the build-once/query-many shape the index exists for."""
-        from pyspark.sql import Window
-
         if max_members not in self._capped:
-            w = Window.partitionBy("band", "band_hash").orderBy("doc_id")
-            cb = (self.bands.withColumn("_rk", F.row_number().over(w))
-                  .filter(F.col("_rk") <= max_members).drop("_rk")
-                  ).localCheckpoint(eager=False)
-            self._capped[max_members] = cb
+            self._capped[max_members] = rank_cap(
+                self.bands, ["band", "band_hash"], "doc_id", max_members,
+                "max_band_members").localCheckpoint(eager=False)
         return self._capped[max_members]
 
 
 def minhash_build(docs: DataFrame, k: int = MINHASH_K,
-                  bands: int = LSH_BANDS,
-                  persist: bool = True) -> MinHashIndex:
+                  bands: int = LSH_BANDS) -> MinHashIndex:
     """Signature the corpus once; the index is reused for every batch.
-    persist=False uses localCheckpoint instead (reclaimed with lineage
-    GC — the one-shot gate/bench form that cannot leak executor cache)."""
-    sig = _sig_table(docs, k, bands)
-    sig = sig.persist() if persist else sig.localCheckpoint()
-    return MinHashIndex(sig, k, bands)
+    The table is localCheckpointed: reclaimed with its lineage, so a
+    build can never leak executor cache."""
+    return MinHashIndex(_sig_table(docs, k, bands).localCheckpoint(), k,
+                        bands)
 
 
-_META_SCHEMA = "k int, n_bands int, buckets int, table string, nonce string"
+# the meta fields of a MinHash index; io.save_index appends its own
+_META_SCHEMA = "k int, n_bands int"
 
 
 def minhash_save(index: MinHashIndex, path: str,
@@ -823,26 +805,11 @@ def minhash_save(index: MinHashIndex, path: str,
     session catalog — on a cluster that is the shared metastore; loading
     from a catalog that lacks the table falls back to a plain parquet
     read of the same files (correct, just re-shuffled per join)."""
-    import os
-
     from .. import io as dq_io
 
-    spark = index.sigs.sparkSession
-    # crash-atomicity protocol (io.write_index_nonce): nonce, data, meta
-    nonce = dq_io.write_index_nonce(spark, path)
-    if buckets:
-        name = table or dq_io.index_table_name("mh_sigs", path)
-        (index.sigs.write.bucketBy(buckets, "doc_id").sortBy("doc_id")
-         .option("path", os.path.join(path, "sigs"))
-         .mode("overwrite").format("parquet").saveAsTable(name))
-    else:
-        name = None
-        index.sigs.write.mode("overwrite").parquet(
-            os.path.join(path, "sigs"))
-    dq_io.write_index_meta(
-        spark, path,
-        (index.k, index.n_bands, buckets or 0, name or "", nonce),
-        _META_SCHEMA)
+    dq_io.save_index(index.sigs, path, "sigs", (index.k, index.n_bands),
+                     _META_SCHEMA, buckets=buckets, table=table,
+                     key=("doc_id",), sort=("doc_id",))
 
 
 def minhash_load(spark, path: str) -> MinHashIndex:
@@ -850,20 +817,9 @@ def minhash_load(spark, path: str) -> MinHashIndex:
     table (zero-exchange join-back), falling back to the plain parquet
     files when the catalog doesn't know it (fresh session, no shared
     metastore)."""
-    import os
-
     from .. import io as dq_io
 
-    meta = dq_io.read_index_meta(spark, path, _META_SCHEMA)
-    dq_io.check_index_nonce(spark, path, meta["nonce"])
-    sigs = None
-    if meta["table"]:
-        try:
-            sigs = spark.read.table(meta["table"])
-        except Exception:
-            sigs = None
-    if sigs is None:
-        sigs = spark.read.parquet(os.path.join(path, "sigs"))
+    meta, sigs = dq_io.load_index(spark, path, "sigs", _META_SCHEMA)
     return MinHashIndex(sigs.persist(), meta["k"], meta["n_bands"])
 
 
@@ -879,7 +835,6 @@ def incremental_dedup_pairs(index: MinHashIndex, new_docs: DataFrame,
     rank-capped per band bucket (hot-band guard: a boilerplate class in
     the corpus otherwise multiplies every matching new doc by its whole
     population); signatures join back on the candidate pairs only."""
-    warn_window_cap("max_band_members", max_band_members)
     new_sig = _sig_table(new_docs, index.k, index.n_bands).localCheckpoint()
     new_bands = new_sig.select(
         "doc_id", F.posexplode("band_hashes").alias("band", "band_hash"))
@@ -1018,12 +973,8 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     sig = docs.select("doc_id", "text").mapInPandas(
         compute, schema="doc_id long, simhash long, band int, band_key long"
     ).localCheckpoint()  # probe + member-rank consumers
-    from pyspark.sql import Window
-
-    warn_window_cap("max_band_members", max_band_members)
-    w = Window.partitionBy("band", "band_key").orderBy("doc_id")
-    mem = (sig.withColumn("_rk", F.row_number().over(w))
-           .filter(F.col("_rk") <= max_band_members).drop("_rk"))
+    mem = rank_cap(sig, ["band", "band_key"], "doc_id", max_band_members,
+                   "max_band_members")
     a, b = sig.alias("a"), mem.alias("b")
     pairs = (
         a.join(b, (F.col("a.band") == F.col("b.band"))

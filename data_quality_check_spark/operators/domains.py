@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .guards import rank_cap
+
 # scheme://[userinfo@]host[:port]/... → host. Evasion-hardened (review
 # r4): userinfo is skipped via a non-capturing group (a URL like
 # https://x@spam.example.net would otherwise extract 'x@spam.example.net'
@@ -157,20 +159,13 @@ def domain_caps(df: DataFrame, max_per_host: int,
     max_per_host · n_map_tasks rows per host. That pre-trim exists ONLY
     while max_per_host ≤ spark.sql.optimizer.windowGroupLimitThreshold
     (1000) — a larger cap warns (operators/guards.py)."""
-    from pyspark.sql import Window
-
-    from .guards import warn_window_cap
-
-    warn_window_cap("max_per_host", max_per_host)
     if key == "registered":
         cap_key = registered_domain_expr(F.col(host_col))
     elif key == "host":
         cap_key = F.col(host_col)
     else:
         raise ValueError(f"domain_caps: unknown key={key!r}")
-    w = Window.partitionBy(cap_key).orderBy(id_col)
-    return (df.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= max_per_host).drop("_rk"))
+    return rank_cap(df, [cap_key], id_col, max_per_host, "max_per_host")
 
 
 def domain_stats(df: DataFrame, host_col: str = "host",

@@ -1,20 +1,20 @@
-"""Shared plan guards: the predicate-pushdown barrier and the skew-guard
-plumbing for rank-cap operators.
+"""Shared plan guards: the predicate-pushdown barrier and the one rank cap.
 
 The repo's hot-key discipline (CLAUDE.md) rests on Catalyst's PARTIAL
 WindowGroupLimit: a `row_number() <= cap` filter gets a map-side
 pre-trim ONLY while cap <= spark.sql.optimizer.windowGroupLimitThreshold
 (default 1000). Above it, the optimization silently disappears and every
 hot key ships (and sorts) its whole population in one partition — the
-exact failure mode the caps exist to avoid. Operators that accept a
-user-supplied cap call warn_window_cap() so an override past the
-threshold is loud (r4 ADVICE)."""
+exact failure mode the caps exist to avoid. Every rank-capped operator
+(domain caps, the MinHash/SimHash band joins, the ANN member pools) goes
+through rank_cap(), which warns when a cap passes the threshold (r4
+ADVICE), so that discipline lives in one function."""
 
 from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 WINDOW_GROUP_LIMIT_THRESHOLD = 1000
 
@@ -29,7 +29,19 @@ def warn_window_cap(param: str, value: int,
             "ships its full population to one partition's sort — raise "
             "spark.sql.optimizer.windowGroupLimitThreshold to match, or "
             f"keep {param} <= {threshold}",
-            stacklevel=3)
+            stacklevel=4)
+
+
+def rank_cap(df: DataFrame, keys, order_col: str, cap: int,
+             param: str) -> DataFrame:
+    """Keep the `cap` first rows by `order_col` within each `keys` group
+    (names or Columns): a `row_number() <= cap` filter, which Catalyst
+    pre-trims map-side while cap stays within the threshold. `param`
+    names the caller's cap option in the over-threshold warning."""
+    warn_window_cap(param, cap)
+    w = Window.partitionBy(*keys).orderBy(order_col)
+    return (df.withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") <= cap).drop("_rk"))
 
 
 def barrier_filter(df: DataFrame, cond: Column) -> DataFrame:

@@ -5,17 +5,19 @@ duration histogram `validate_json_duration_seconds`, dimensioned by
 (message_name, field_check)
 (/root/reference/data-quality-server/src/metrics.rs:22-25, emission
 json_validation.rs:62-83). The Spark analog measures the same thing at
-Spark's natural request grain — the Arrow BATCH: `timed_scores` stamps
-every row with the wall-clock microseconds its batch took inside the
-scoring UDF, and the histogram/percentile rollup below aggregates those
-into fixed power-of-two µs buckets, exactly Prometheus-style.
+Spark's natural request grain — the Arrow BATCH:
+`pipeline.label_turns(measure_latency=True)` stamps every row with the
+wall-clock microseconds (`batch_us`) its batch took inside the scoring
+UDF, and the histogram/percentile rollup below aggregates those into
+fixed power-of-two µs buckets, exactly Prometheus-style (`io.run_job`
+writes them per chunk).
 
 Oracle discipline: wall-clock values are not reproducible across engines,
 so the gate query (`qf_latency`) feeds this SAME rollup a DETERMINISTIC
 pseudo-duration (a documented function of the row) to hash-check the
 bucketization + cumulative-percentile MATH against DuckDB; the measured
-path (`timed_scores` → same rollup) is covered rows-only plus sanity
-tests (tests/test_latency.py). Percentiles are EXACT over the bucketed
+path (`batch_us` → same rollup) is covered rows-only plus sanity tests
+(tests/test_latency.py). Percentiles are EXACT over the bucketed
 values — smallest bucket whose cumulative count reaches ceil(q·total) —
 not percentile_approx, so both engines agree bit-for-bit.
 """
@@ -99,19 +101,3 @@ SELECT {dim_list}, CAST(max(total) AS BIGINT) AS n, {p_cols}
 FROM cum GROUP BY {dim_list}
 """
 
-
-def timed_scores(df: DataFrame, text_col: str, bc_models) -> DataFrame:
-    """Measured path: adds `lang`, `lang_conf`, `ppl` AND `batch_us` — the
-    wall-clock microseconds the row's Arrow batch spent in the fused
-    scoring pass (every row of a batch carries its batch's duration, the
-    way every request carries its own duration in the reference). Same
-    scoring UDF as the pipeline (bit-identical values), timed form."""
-    from ..functions.udfs import make_scores_udf
-
-    scored = make_scores_udf(bc_models, timed=True)
-    out = df.withColumn("_ts", scored(F.col(text_col)))
-    return (out.withColumn("lang", F.col("_ts.lang"))
-            .withColumn("lang_conf", F.col("_ts.lang_conf"))
-            .withColumn("ppl", F.col("_ts.ppl"))
-            .withColumn("batch_us", F.col("_ts.batch_us"))
-            .drop("_ts"))

@@ -26,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .guards import rank_cap
+
 
 def _cosine_col(a, b):
     """Declarative cosine similarity between two array<double> columns —
@@ -130,14 +132,14 @@ def _bounded_groups(members: DataFrame, probes: DataFrame,
     group materialization (the r3-verdict OOM fix):
 
       * member side — rank by id within each key and keep the `max_group`
-        smallest (the SAME deterministic pool the SQL twins' `mem` CTE
-        caps with rk <= max_group, so gate hashes are unchanged). With
-        max_group ≤ the optimizer's windowGroupLimitThreshold (why
-        MAX_GROUP is 1000), Catalyst inserts a PARTIAL WindowGroupLimit:
-        each map task pre-trims to its local max_group smallest ids, so
-        a degenerate key ships ≤ max_group · n_map_tasks rows instead of
-        its whole population; the residual reduce-side sort spills if it
-        must.
+        smallest (guards.rank_cap; the SAME deterministic pool the SQL
+        twins' `mem` CTE caps with rk <= max_group, so gate hashes are
+        unchanged). With max_group ≤ the optimizer's
+        windowGroupLimitThreshold (why MAX_GROUP is 1000), Catalyst
+        inserts a PARTIAL WindowGroupLimit: each map task pre-trims to
+        its local max_group smallest ids, so a degenerate key ships ≤
+        max_group · n_map_tasks rows instead of its whole population;
+        the residual reduce-side sort spills if it must.
       * probe side — salted into ceil(n_probes/salt_target) sub-groups
         per key (n from a map-side-combined count agg), with the capped
         member pool replicated into every salt. Each probe lands in
@@ -150,14 +152,7 @@ def _bounded_groups(members: DataFrame, probes: DataFrame,
     probe side is empty are dropped (nothing to score), which also skips
     scoring unprobed cells. Rows carry probe=0 (member) / probe=1.
     """
-    from pyspark.sql import Window
-
-    from .guards import warn_window_cap
-
-    warn_window_cap("max_group", max_group)
-    w = Window.partitionBy(*keys).orderBy(id_col)
-    mem = (members.withColumn("_rk", F.row_number().over(w))
-           .filter(F.col("_rk") <= max_group).drop("_rk"))
+    mem = rank_cap(members, keys, id_col, max_group, "max_group")
     pc = probes.groupBy(*keys).agg(
         (F.floor((F.count(F.lit(1)) - 1) / salt_target) + 1)
         .cast("int").alias("_nsalt"))
@@ -255,15 +250,15 @@ def _norm_rows(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def _quantize_np(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row symmetric int8 codes + float64 scales — the SAME formula as
+def _quantize_np(v: np.ndarray) -> np.ndarray:
+    """Per-row symmetric int8 codes — the SAME formula as
     quantize_embeddings (q_i = floor(x_i / max|x| * 127)), so the DuckDB
-    twins re-derive the codes exactly. Zero rows → all-zero codes, scale 0."""
+    twins re-derive the codes exactly. Zero rows → all-zero codes."""
     s = np.abs(v).max(axis=1)
     safe = np.where(s > 0, s, 1.0)
     q = np.floor(v / safe[:, None] * 127).astype(np.int8)
     q[s == 0] = 0
-    return q, s
+    return q
 
 
 def _unpack(items) -> tuple[np.ndarray, np.ndarray]:
@@ -423,8 +418,8 @@ class IvfIndex:
 def _post_fn(bc, id_col: str, vec_col: str, probes: int,
              with_rank: bool = False):
     """mapInPandas fn: assign each vector to its `probes` nearest cells.
-    The posting rows carry int8 codes + a scale, not the float vector —
-    the cell exchange (and the persisted posting table) is ~4x slimmer;
+    The posting rows carry int8 codes only, not the float vector — the
+    cell exchange (and the persisted posting table) is ~4x slimmer;
     cell assignment still reads the full float vector. with_rank=True
     appends `cell_rank` (0 = nearest cell) so a SELF-query can derive
     the posting table from the probe table (one Python pass, not two)."""
@@ -435,15 +430,13 @@ def _post_fn(bc, id_col: str, vec_col: str, probes: int,
             vn = _norm_rows(v)
             sims = vn @ c.T
             cells = np.argsort(-sims, axis=1, kind="stable")[:, :probes]
-            q, s = _quantize_np(v)
-            codes = [qq.tobytes() for qq in q]
+            codes = [qq.tobytes() for qq in _quantize_np(v)]
             frames = []
             for j in range(min(probes, cells.shape[1])):
                 frame = {
                     id_col: p[id_col].to_numpy(),
                     "cell": cells[:, j].astype(np.int64),
                     "code": codes,
-                    "scale": s,
                 }
                 if with_rank:
                     frame["cell_rank"] = np.int32(j)
@@ -492,7 +485,7 @@ def ivf_build(emb: DataFrame, id_col: str = "vec_id",
     """
     bc, n_cells = _train_quantizer(emb, id_col, vec_col, n_cells,
                                    sample, iters, init)
-    schema = f"{id_col} long, cell long, code binary, scale double"
+    schema = f"{id_col} long, cell long, code binary"
     posted = emb.select(id_col, vec_col).mapInPandas(
         _post_fn(bc, id_col, vec_col, 1), schema=schema).persist()
     return IvfIndex(bc, posted, id_col, vec_col, n_cells)
@@ -534,8 +527,8 @@ def _train_quantizer(emb: DataFrame, id_col: str, vec_col: str,
     return spark.sparkContext.broadcast(cent), n_cells
 
 
-_IVF_META_SCHEMA = ("id_col string, vec_col string, n_cells int, "
-                    "buckets int, table string, nonce string")
+# the meta fields of an IVF index; io.save_index appends its own
+_IVF_META_SCHEMA = "id_col string, vec_col string, n_cells int"
 
 
 def ivf_save(index: IvfIndex, path: str, buckets: int | None = None,
@@ -553,59 +546,37 @@ def ivf_save(index: IvfIndex, path: str, buckets: int | None = None,
     pre-partitioned — zero exchange on the (large) index side, paid once
     at save time. Catalog caveat and plain-parquet fallback are the same
     as minhash_save (operators/dedup.py)."""
-    import os
-
     from .. import io as dq_io
 
-    spark = index.posted.sparkSession
-    # crash-atomicity protocol (io.write_index_nonce): nonce, data, meta
-    nonce = dq_io.write_index_nonce(spark, path)
-    if buckets:
-        name = table or dq_io.index_table_name("ivf_post", path)
-        (index.posted.write.bucketBy(buckets, "cell")
-         .sortBy("cell", index.id_col)
-         .option("path", os.path.join(path, "posting"))
-         .mode("overwrite").format("parquet").saveAsTable(name))
-    else:
-        name = None
-        index.posted.write.mode("overwrite").parquet(
-            os.path.join(path, "posting"))
     cent = index.centroids_bc.value
     rows = [(i, [float(x) for x in cent[i]]) for i in range(cent.shape[0])]
-    (spark.createDataFrame(rows, "cell long, centroid array<double>")
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(path, "centroids")))
-    dq_io.write_index_meta(
-        spark, path,
-        (index.id_col, index.vec_col, index.n_cells,
-         buckets or 0, name or "", nonce), _IVF_META_SCHEMA)
+    centroids = index.posted.sparkSession.createDataFrame(
+        rows, "cell long, centroid array<double>").coalesce(1)
+    dq_io.save_index(
+        index.posted, path, "posting",
+        (index.id_col, index.vec_col, index.n_cells), _IVF_META_SCHEMA,
+        buckets=buckets, table=table, key=("cell",),
+        sort=("cell", index.id_col), extra={"centroids": centroids})
 
 
 def ivf_load(spark, path: str) -> IvfIndex:
-    """Load a saved index: centroids re-broadcast, posting table read
-    lazily (persist() so repeated queries reuse it); a bucketed save is
-    read through its catalog table, falling back to plain parquet when
-    the catalog doesn't know it."""
+    """Load a saved index (io.load_index): centroids re-broadcast,
+    posting table read lazily (persist() so repeated queries reuse it).
+    Only (id, cell, code) are read, so an index saved with the former
+    per-row `scale` posting column loads and queries identically."""
     import os
 
     from .. import io as dq_io
 
-    meta = dq_io.read_index_meta(spark, path, _IVF_META_SCHEMA)
-    dq_io.check_index_nonce(spark, path, meta["nonce"])
+    meta, posted = dq_io.load_index(spark, path, "posting",
+                                    _IVF_META_SCHEMA)
     rows = (spark.read.parquet(os.path.join(path, "centroids"))
             .orderBy("cell").collect())
     cent = np.asarray([r["centroid"] for r in rows], dtype=np.float64)
     bc = spark.sparkContext.broadcast(cent)
-    posted = None
-    if meta["table"]:
-        try:
-            posted = spark.read.table(meta["table"])
-        except Exception:
-            posted = None
-    if posted is None:
-        posted = spark.read.parquet(os.path.join(path, "posting"))
-    return IvfIndex(bc, posted.persist(), meta["id_col"], meta["vec_col"],
-                    meta["n_cells"])
+    id_col = meta["id_col"]
+    return IvfIndex(bc, posted.select(id_col, "cell", "code").persist(),
+                    id_col, meta["vec_col"], meta["n_cells"])
 
 
 def ivf_query(index: IvfIndex, queries: DataFrame, k: int = 1,
@@ -624,7 +595,7 @@ def ivf_query(index: IvfIndex, queries: DataFrame, k: int = 1,
     """
     id_col, vec_col = index.id_col, index.vec_col
     nprobe = min(nprobe, index.n_cells)
-    schema = f"{id_col} long, cell long, code binary, scale double"
+    schema = f"{id_col} long, cell long, code binary"
     # localCheckpoint: _bounded_groups consumes the probe table twice
     # (count agg + join) — without it the centroid-matmul/quantize UDF
     # pass would run twice over every query vector
@@ -651,8 +622,7 @@ def ivf_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
     bc, n_cells = _train_quantizer(emb, id_col, vec_col, n_cells,
                                    sample, iters, init)
     nprobe = min(nprobe, n_cells)
-    schema = (f"{id_col} long, cell long, code binary, scale double, "
-              "cell_rank int")
+    schema = f"{id_col} long, cell long, code binary, cell_rank int"
     pr = emb.select(id_col, vec_col).mapInPandas(
         _post_fn(bc, id_col, vec_col, nprobe, with_rank=True),
         schema=schema).localCheckpoint()
@@ -711,9 +681,9 @@ def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
     candidates = bucket collisions in any table; cosine re-rank over int8
     codes by the exact-integer key d/sqrt(nb2) (_ann_rank).
 
-    Scale shape: each row emits `tables` (bucket, id, int8 code, scale)
-    tuples — the bucket exchange carries dim BYTES + one double per row
-    instead of dim floats (~4x shuffle cut; r02 advice #5); bucket bits are
+    Scale shape: each row emits `tables` (bucket, id, int8 code) tuples —
+    the bucket exchange carries dim BYTES per row instead of dim floats
+    (~4x shuffle cut; r02 advice #5); bucket bits are
     computed from the full float vector before quantization. The join is
     bucket-equality, so shuffle is linear in N and work is quadratic only
     within buckets (≈ N²/2^planes per table). Fully oracle-checkable:
@@ -740,8 +710,7 @@ def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
         pl = bc.value
         for p in batches:
             v = np.asarray(p[vec_col].tolist(), dtype=np.float64)
-            q, s = _quantize_np(v)
-            codes = [qq.tobytes() for qq in q]
+            codes = [qq.tobytes() for qq in _quantize_np(v)]
             out = []
             for t in range(pl.shape[0]):
                 bits = (v @ pl[t].T) > 0
@@ -751,7 +720,6 @@ def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
                     "table": np.int32(t),
                     "bucket": bucket,
                     "code": codes,
-                    "scale": s,
                 }))
             yield pd.concat(out, ignore_index=True)
 
@@ -760,8 +728,7 @@ def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
     # pass would run once per consumer
     bucketed = emb.select(id_col, vec_col).mapInPandas(
         bucketize,
-        schema=f"{id_col} long, table int, bucket long, "
-               "code binary, scale double",
+        schema=f"{id_col} long, table int, bucket long, code binary",
     ).localCheckpoint()
 
     # self-query: every posting row is a probe; the member side is the

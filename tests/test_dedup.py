@@ -284,7 +284,7 @@ def test_incremental_dedup_against_built_index(spark, docs_df, tmp_path):
     pairs agree with the self-sweep restricted to cross-slice pairs."""
     corpus = docs_df.filter("doc_id % 2 = 0")
     new = docs_df.filter("doc_id % 2 = 1")
-    index = dedup.minhash_build(corpus, persist=False)
+    index = dedup.minhash_build(corpus)
     got = {(r["new_doc"], r["corpus_doc"]): r["est_jaccard"] for r in
            dedup.incremental_dedup_pairs(index, new, threshold=0.5)
            .collect()}
@@ -298,7 +298,7 @@ def test_incremental_dedup_against_built_index(spark, docs_df, tmp_path):
             expect[(n_doc, c_doc)] = est
     assert got == expect and got  # non-vacuous: (0,1) pair exists
     # cross-job reuse: save → load → identical decision set
-    idx2 = dedup.minhash_build(corpus, persist=False)
+    idx2 = dedup.minhash_build(corpus)
     dedup.minhash_save(idx2, str(tmp_path / "mhidx"))
     loaded = dedup.minhash_load(spark, str(tmp_path / "mhidx"))
     again = {(r["new_doc"], r["corpus_doc"]) for r in
@@ -317,7 +317,7 @@ def test_index_load_detects_interrupted_save(spark, docs_df, tmp_path):
     from data_quality_check_spark import io as dq_io
 
     path = str(tmp_path / "mhidx")
-    idx = dedup.minhash_build(docs_df, persist=False)
+    idx = dedup.minhash_build(docs_df)
     dedup.minhash_save(idx, path)
     # completed save loads fine
     dedup.minhash_load(spark, path).sigs.unpersist()
@@ -392,7 +392,7 @@ def test_minhash_save_bucketed_zero_exchange_join_back(spark, docs_df,
     from pyspark.sql import functions as F
 
     corpus = docs_df.filter("doc_id % 2 = 0")
-    idx = dedup.minhash_build(corpus, persist=False)
+    idx = dedup.minhash_build(corpus)
     dedup.minhash_save(idx, str(tmp_path / "bidx"), buckets=8)
     loaded = dedup.minhash_load(spark, str(tmp_path / "bidx"))
 
@@ -535,7 +535,7 @@ def test_capped_bands_matches_inline_rank_and_caches(spark):
     docs = spark.createDataFrame(
         [(i, f"shared boilerplate text block number {i % 3}")
          for i in range(40)], "doc_id long, text string")
-    idx = dedup.minhash_build(docs, persist=False)
+    idx = dedup.minhash_build(docs)
     cap = 5
     got = {tuple(r) for r in idx.capped_bands(cap).collect()}
     w = Window.partitionBy("band", "band_hash").orderBy("doc_id")

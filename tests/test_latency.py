@@ -1,5 +1,6 @@
 """D10 latency histogram: bucket math vs numpy, exact bucket percentiles,
-and the measured (wall-clock) path through timed_scores."""
+and the measured (wall-clock) path through label_turns'
+measure_latency=True."""
 
 from __future__ import annotations
 
@@ -47,9 +48,16 @@ def test_percentiles_multi_dim_partitioning(spark):
 
 
 def test_timed_scores_measures_real_batches(spark, bc_models):
-    texts = [(f"some ordinary text number {i} with words",) for i in range(64)]
-    df = spark.createDataFrame(texts, "text string")
-    out = latency.timed_scores(df, "text", bc_models)
+    from data_quality_check_spark.plans import pipeline
+
+    rows = [(f"c{i % 8}", i // 8, "user",
+             f"some ordinary text number {i} with words", None, None)
+            for i in range(64)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    out = pipeline.label_turns(df, with_models=True, bc_models=bc_models,
+                               measure_latency=True)
     rows = out.select("lang", "batch_us").collect()
     assert len(rows) == 64
     assert all(r["batch_us"] > 0 for r in rows)     # real wall time

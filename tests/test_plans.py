@@ -120,8 +120,9 @@ def test_minhash_band_exchange_excludes_signature(spark):
 
 
 def test_lsh_bucket_exchange_carries_codes_not_floats(spark):
-    """r02 advice #5: the LSH bucket shuffle must carry int8 codes + one
-    scale double per row, never the float vector (O(N·tables·dim·8B) tax)."""
+    """r02 advice #5: the LSH bucket shuffle must carry int8 codes only,
+    never the float vector (O(N·tables·dim·8B) tax) nor a per-row scale
+    (no scorer reads one)."""
     import re
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -139,13 +140,14 @@ def test_lsh_bucket_exchange_carries_codes_not_floats(spark):
     # the salted-scorer plan adds a probe-count agg exchange that carries
     # ONLY (table, bucket, count) — even slimmer; every exchange moving
     # posting rows must carry int8 codes, and none may carry the floats
+    # or a scale
     assert any("code" in blk.split("Arguments:")[0]
-               and "scale" in blk.split("Arguments:")[0]
                for blk in bucket_exchanges)
     for blk in bucket_exchanges:
         inputs = blk.split("Arguments:")[0]
         assert "code" in inputs or "count" in inputs
         assert re.search(r"\bembedding#", inputs) is None
+        assert re.search(r"\bscale#", inputs) is None
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
@@ -161,8 +163,9 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
         F.concat(F.lit("c"), F.col("id") % 97).alias("conv_id"),
         F.col("id").cast("int").alias("turn_idx"),
         F.lit("x").alias("text"))
-    dq_io.write_bucketed(df, "btest.a", buckets=8)
-    dq_io.write_bucketed(df, "btest.b", buckets=8)
+    for name in ("a", "b"):
+        dq_io.write_bucketed(df, f"btest.{name}", str(tmp_path / name), 8,
+                             key=("conv_id",), sort=("conv_id", "turn_idx"))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -180,26 +183,96 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     assert n > 5000  # conv_id join multiplies within conversations
 
 
-def test_ann_member_cap_gets_partial_window_group_limit(spark):
-    """MAX_GROUP must stay <= spark.sql.optimizer.windowGroupLimitThreshold
-    so the member-cap rank is pre-trimmed MAP-SIDE (Partial
-    WindowGroupLimit) — a degenerate hot bucket then ships
-    cap * n_map_tasks rows, never its whole population."""
-    from pyspark.sql import functions as F
+def _assert_rank_cap_pretrims_and_warns(spark, monkeypatch, module, build):
+    """`build(spark, cap)` builds a plan whose rank cap `module` takes
+    from guards.rank_cap: at the default caps (<= the optimizer's
+    windowGroupLimitThreshold) every capped frame's executed plan holds a
+    Partial WindowGroupLimit (each map task pre-trims, so a hot key ships
+    cap * n_map_tasks rows, never its whole population), and a cap of
+    1001 warns."""
+    from data_quality_check_spark.operators import guards
 
-    from data_quality_check_spark.operators import similarity
+    capped = []
+
+    def spy(*args, **kwargs):
+        capped.append(guards.rank_cap(*args, **kwargs))
+        return capped[-1]
+
+    monkeypatch.setattr(module, "rank_cap", spy)
+    build(spark, None)
+    assert capped, "the operator must cap through guards.rank_cap"
+    for df in capped:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "WindowGroupLimit" in plan
+        assert "Partial" in plan.split("WindowGroupLimit", 1)[1][:200] \
+            or plan.count("WindowGroupLimit") >= 2
+    with pytest.warns(UserWarning, match="windowGroupLimitThreshold"):
+        build(spark, 1001)
+
+
+def test_ann_member_cap_gets_partial_window_group_limit(spark, monkeypatch):
+    """MAX_GROUP must stay <= spark.sql.optimizer.windowGroupLimitThreshold
+    so the ANN member-cap rank is pre-trimmed MAP-SIDE."""
+    from pyspark.sql import functions as F
 
     post = spark.range(10000).select(
         F.col("id").alias("vec_id"),
         (F.col("id") % 3).cast("int").alias("table"),
         (F.col("id") % 7).alias("bucket"),
-        F.lit(b"\x01").alias("code"), F.lit(1.0).alias("scale"))
-    g = similarity._bounded_groups(post, post, ["table", "bucket"],
-                                   "vec_id")
-    plan = g._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan
-    assert "Partial" in plan.split("WindowGroupLimit", 1)[1][:200] \
-        or plan.count("WindowGroupLimit") >= 2
+        F.lit(b"\x01").alias("code"))
+
+    def build(spark, cap):
+        kw = {} if cap is None else {"max_group": cap}
+        return similarity._bounded_groups(post, post, ["table", "bucket"],
+                                          "vec_id", **kw)
+
+    _assert_rank_cap_pretrims_and_warns(spark, monkeypatch, similarity,
+                                        build)
+
+
+def _rank_cap_cases():
+    """(id, module, build(spark, cap)) for the rank_cap callers besides
+    the ANN member pool; cap None = the operator's default."""
+    from data_quality_check_spark.operators import dedup, domains
+
+    def docs(spark):
+        return spark.read.parquet(f"{SF}/documents.parquet")
+
+    def kw(name, cap):
+        return {} if cap is None else {name: cap}
+
+    def domain(spark, cap):
+        d = spark.range(50).selectExpr(
+            "id AS doc_id", "concat('https://h', id % 4, '.com/p') AS url")
+        return domains.domain_caps(domains.with_host(d),
+                                   10 if cap is None else cap)
+
+    def incremental(spark, cap):
+        d = docs(spark)
+        index = dedup.minhash_build(d.filter("doc_id % 2 = 0"))
+        return dedup.incremental_dedup_pairs(
+            index, d.filter("doc_id % 2 = 1"),
+            **kw("max_band_members", cap))
+
+    return [
+        ("domain_caps", domains, domain),
+        ("minhash_lsh_pairs", dedup,
+         lambda spark, cap: dedup.minhash_lsh_pairs(
+             docs(spark), **kw("max_band_members", cap))),
+        ("simhash_pairs", dedup,
+         lambda spark, cap: dedup.simhash_pairs(
+             docs(spark), **kw("max_band_members", cap))),
+        ("incremental_dedup_pairs", dedup, incremental),
+    ]
+
+
+@pytest.mark.parametrize("module,build", [c[1:] for c in _rank_cap_cases()],
+                         ids=[c[0] for c in _rank_cap_cases()])
+def test_rank_cap_callers_get_partial_window_group_limit(
+        spark, monkeypatch, module, build):
+    """Every other guards.rank_cap caller gets the same map-side pre-trim
+    and the same over-threshold warning as the ANN member pool."""
+    _assert_rank_cap_pretrims_and_warns(spark, monkeypatch, module, build)
 
 
 def test_quality_pass_ids_equals_filtered_scores(spark):
@@ -237,8 +310,7 @@ def _barrier_cases():
 
     def incremental(spark, bc):
         d = docs(spark)
-        index = dedup.minhash_build(d.filter("doc_id % 2 = 0"),
-                                    persist=False)
+        index = dedup.minhash_build(d.filter("doc_id % 2 = 0"))
         return dedup.incremental_dedup_pairs(index,
                                              d.filter("doc_id % 2 = 1"))
 

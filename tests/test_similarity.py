@@ -83,7 +83,7 @@ def test_int_scorer_exact_at_max_partial_sums():
     ids = list(range(len(codes)))
     probe = [0, 1, 0, 1, 0, 1, 1, 1]
     pdf = pd.DataFrame({"vec_id": ids, "code": [c.tobytes() for c in codes],
-                        "scale": 1.0, "probe": probe})
+                        "probe": probe})
     out = similarity._score_group_int_fn("vec_id")(pdf)
     ints = [[int(x) for x in c] for c in codes]
     expected = {(q, m): (sum(a * b for a, b in zip(ints[q], ints[m])),
@@ -194,8 +194,7 @@ def test_scorer_group_inputs_bounded_before_materialization(spark):
     post = spark.range(n).select(
         F.col("id").alias("vec_id"),
         F.lit(0).alias("table"), F.lit(0).alias("bucket"),
-        F.lit(b"\x7f\x00\x01\x02").alias("code"),
-        F.lit(1.0).alias("scale"))
+        F.lit(b"\x7f\x00\x01\x02").alias("code"))
     g = similarity._bounded_groups(post, post, ["table", "bucket"],
                                    "vec_id", max_group=cap, salt_target=tgt)
     counts = (g.groupBy("table", "bucket", "salt", "probe").count()
@@ -293,6 +292,58 @@ def test_ivf_index_save_load_roundtrip(spark, emb, tmp_path):
     assert fresh == again and len(fresh) > 0
 
 
+def test_ivf_load_detects_interrupted_save(spark, emb, tmp_path):
+    """The IVF save follows the same nonce → data → meta protocol as the
+    MinHash one: a save that got only as far as its nonce write (fresh
+    nonce, stale meta) must not load."""
+    import pytest
+
+    from data_quality_check_spark import io as dq_io
+
+    path = str(tmp_path / "idx")
+    index = similarity.ivf_build(emb, n_cells=16, iters=0, init="by_id")
+    similarity.ivf_save(index, path)
+    index.posted.unpersist()
+    similarity.ivf_load(spark, path).posted.unpersist()
+    dq_io.write_index_nonce(spark, path)
+    with pytest.raises(ValueError, match="interrupted save"):
+        similarity.ivf_load(spark, path)
+
+
+def test_ivf_load_reads_postings_saved_with_scale(spark, emb, tmp_path):
+    """Postings once carried a per-row `scale` double (max |x|) next to
+    the int8 code. An index saved in that format must load to the
+    (id, cell, code) posting table and answer queries identically."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    index = similarity.ivf_build(emb, n_cells=16, iters=0, init="by_id")
+    fresh = {(r["vec_id"], r["neighbor_id"]) for r in
+             similarity.ivf_query(index, emb, k=1, nprobe=4).collect()}
+    path = str(tmp_path / "idx")
+    similarity.ivf_save(index, path)
+    index.posted.unpersist()
+    posting = os.path.join(path, "posting")
+    scale = emb.select(
+        "vec_id", F.array_max(F.transform(
+            F.col("embedding").cast("array<double>"),
+            lambda x: F.abs(x))).alias("scale"))
+    (spark.read.parquet(posting).join(scale, "vec_id")
+     .select("vec_id", "cell", "code", "scale")
+     .write.parquet(posting + "_with_scale"))
+    shutil.rmtree(posting)
+    os.rename(posting + "_with_scale", posting)
+    assert "scale" in spark.read.parquet(posting).columns
+    loaded = similarity.ivf_load(spark, path)
+    assert loaded.posted.columns == ["vec_id", "cell", "code"]
+    again = {(r["vec_id"], r["neighbor_id"]) for r in
+             similarity.ivf_query(loaded, emb, k=1, nprobe=4).collect()}
+    loaded.posted.unpersist()
+    assert fresh == again and len(fresh) > 0
+
+
 def test_ivf_save_bucketed_zero_exchange_member_side(spark, emb,
                                                      tmp_path):
     """A cell-bucketed ivf_save must feed the member-rank window (the
@@ -310,8 +361,7 @@ def test_ivf_save_bucketed_zero_exchange_member_side(spark, emb,
 
     w = Window.partitionBy("cell").orderBy("vec_id")
     ranked = (spark.read.table(
-        spark.read.schema(similarity._IVF_META_SCHEMA)
-        .json(str(tmp_path / "bidx" / "meta")).first()["table"])
+        spark.read.json(str(tmp_path / "bidx" / "meta")).first()["table"])
         .withColumn("_rk", F.row_number().over(w)))
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan

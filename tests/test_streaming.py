@@ -212,7 +212,7 @@ def test_incremental_dedup_stream_matches_batch_and_resumes(spark, tmp_path):
     ck = str(tmp_path / "ck")
     batch1.repartition(2).write.mode("append").parquet(src)
 
-    index = dedup.minhash_build(corpus, persist=False)
+    index = dedup.minhash_build(corpus)
 
     def run():
         st = (spark.readStream.schema(docs.schema)
