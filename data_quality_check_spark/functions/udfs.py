@@ -24,16 +24,13 @@ from ..models.scoring import score_batch
 from ..schema import SCORES_TYPE
 
 
-def broadcast_models(spark: SparkSession, langid_m=None, lm=None,
-                     quality_m=None):
-    """Train (or accept) the models and broadcast them once for the job."""
-    payload = {
-        "langid": langid_m if langid_m is not None else langid_model.train(),
-        "lm": lm if lm is not None else ngram_model.train(),
-        "quality": (quality_m if quality_m is not None
-                    else quality_model.train()),
-    }
-    return spark.sparkContext.broadcast(payload)
+def broadcast_models(spark: SparkSession):
+    """Train the models and broadcast them once for the job."""
+    return spark.sparkContext.broadcast({
+        "langid": langid_model.train(),
+        "lm": ngram_model.train(),
+        "quality": quality_model.train(),
+    })
 
 
 def make_scores_udf(bc, *, timed: bool = False):

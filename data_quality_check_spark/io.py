@@ -114,7 +114,6 @@ def _commit_manifest(output_dir: str, entry: dict) -> None:
 class JobReport:
     chunks_run: int
     chunks_skipped: int
-    files_processed: list[str]
 
 
 def _label_chunk(
@@ -127,7 +126,6 @@ def _label_chunk(
     bc_models,
     output_partitions: int | None,
     measure_latency: bool,
-    max_records_per_file: int | None,
     models_on_survivors: bool,
 ) -> dict:
     """Label one chunk and write its latency, turns and metrics dirs;
@@ -165,13 +163,8 @@ def _label_chunk(
         out, counts = pipeline.observe_labels(pipeline.stable_order(
             labeled.drop("input_file", "batch_us"), output_partitions),
             name=f"qf-{chunk_id}")
-        w = out.write.mode("overwrite")
-        if max_records_per_file:
-            # compaction control: output_partitions bounds file count
-            # from below (parallelism), maxRecordsPerFile from above
-            # (no gigantic files for downstream range readers)
-            w = w.option("maxRecordsPerFile", str(max_records_per_file))
-        w.parquet(os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
+        out.write.mode("overwrite").parquet(
+            os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
         metrics = pipeline.metrics_table(
             labeled, cfg, with_models=with_models)
         metrics.write.mode("overwrite").parquet(
@@ -200,10 +193,7 @@ def run_job(
     bc_models=None,
     files_per_chunk: int = 16,
     output_partitions: int | None = None,
-    fail_after_chunks: int | None = None,
-    fail_before_commit: int | None = None,
     measure_latency: bool = False,
-    max_records_per_file: int | None = None,
     models_on_survivors: bool = False,
 ) -> JobReport:
     """Run (or resume) the labeling job over `input_path`.
@@ -234,10 +224,10 @@ def run_job(
     flight finishes (releasing its cache) before the error propagates,
     and no later chunk starts.
 
-    `fail_after_chunks` / `fail_before_commit` are test-only fault
-    injection, checked on this thread: raise right after the Nth commit
-    (N chunks committed), or right before it, once the Nth chunk's data
-    writes are done (N-1 committed), to exercise both resume windows.
+    Tests reach both crash windows by patching `_commit_manifest`, which
+    runs on this thread: raising before the Nth commit's write (N-1
+    committed, the Nth chunk's data on disk) or right after it (N
+    committed).
     """
     files = list_input_files(spark, input_path)
     done = processed_files(output_dir)
@@ -248,7 +238,6 @@ def run_job(
 
     chunks = [todo[i:i + files_per_chunk]
               for i in range(0, len(todo), files_per_chunk)]
-    processed: list[str] = []
     # double buffering: one chunk's plan build overlaps the other's jobs
     with ThreadPoolExecutor(max_workers=2) as pool:
         def submit(chunk):
@@ -260,48 +249,41 @@ def run_job(
                 spark, chunk, output_dir, cfg, with_models=with_models,
                 bc_models=bc_models, output_partitions=output_partitions,
                 measure_latency=measure_latency,
-                max_records_per_file=max_records_per_file,
                 models_on_survivors=models_on_survivors)
 
         # chunk n+2 is submitted once chunk n has committed, so no chunk
         # ever waits in the pool's queue, and on any exception leaving
         # this block waits only for the one chunk still in flight
         futures = [submit(chunk) for chunk in chunks[:2]]
-        for n, chunk in enumerate(chunks, 1):
-            entry = futures[n - 1].result()
-            if fail_before_commit is not None and n >= fail_before_commit:
-                raise RuntimeError(
-                    f"injected failure before manifest commit of chunk {n}")
-            _commit_manifest(output_dir, entry)
-            processed.extend(chunk)
-            if fail_after_chunks is not None and n >= fail_after_chunks:
-                raise RuntimeError(f"injected failure after {n} chunks")
-            if n + 1 < len(chunks):
-                futures.append(submit(chunks[n + 1]))
+        for n in range(len(chunks)):
+            _commit_manifest(output_dir, futures[n].result())
+            if n + 2 < len(chunks):
+                futures.append(submit(chunks[n + 2]))
     return JobReport(chunks_run=len(chunks),
-                     chunks_skipped=len(files) - len(todo),
-                     files_processed=processed)
+                     chunks_skipped=len(files) - len(todo))
 
 
-def _read_committed(spark: SparkSession, output_dir: str,
-                    sub: str) -> DataFrame:
-    """Read ONLY manifest-committed chunk directories — orphan dirs from a
-    crash between data write and manifest commit are invisible (the
-    snapshot-isolation read path; Iceberg gives this for free)."""
-    ids = [e["chunk_id"] for e in read_manifest(output_dir)]
-    base = os.path.join(output_dir, sub)
+def _read_committed(spark: SparkSession, output_dir: str, sub: str,
+                    ids: list[str]) -> DataFrame:
+    """Read the `sub` dirs of the manifest-committed chunks `ids` ONLY —
+    orphan dirs from a crash between data write and manifest commit are
+    invisible (the snapshot-isolation read path; Iceberg gives this for
+    free)."""
     if not ids:
         raise FileNotFoundError(f"no committed chunks under {output_dir}")
+    base = os.path.join(output_dir, sub)
     paths = [os.path.join(base, f"chunk={i}") for i in ids]
     return spark.read.option("basePath", base).parquet(*paths)
 
 
 def read_output(spark: SparkSession, output_dir: str) -> DataFrame:
-    return _read_committed(spark, output_dir, "turns")
+    ids = [e["chunk_id"] for e in read_manifest(output_dir)]
+    return _read_committed(spark, output_dir, "turns", ids)
 
 
 def read_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
-    return _read_committed(spark, output_dir, "metrics")
+    ids = [e["chunk_id"] for e in read_manifest(output_dir)]
+    return _read_committed(spark, output_dir, "metrics", ids)
 
 
 def read_latency(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -310,15 +292,13 @@ def read_latency(spark: SparkSession, output_dir: str) -> DataFrame:
     chunk, so a mixed run (resume with different flags, CLI without
     --measure-latency) must not make the reader fail on missing paths.
     Manifest entries record `has_latency`."""
-    base = os.path.join(output_dir, "latency")
     ids = [e["chunk_id"] for e in read_manifest(output_dir)
            if e["has_latency"]]
     if not ids:
         raise FileNotFoundError(
             f"no committed chunks with latency data under {output_dir} "
             "(run with measure_latency=True)")
-    paths = [os.path.join(base, f"chunk={i}") for i in ids]
-    return spark.read.option("basePath", base).parquet(*paths)
+    return _read_committed(spark, output_dir, "latency", ids)
 
 
 # ---------------------------------------------------------------------------
@@ -355,7 +335,7 @@ def write_index_nonce(spark: SparkSession, path: str) -> str:
 
 
 def save_index(df: DataFrame, path: str, data: str, meta: tuple,
-               meta_schema: str, *, buckets: int | None, table: str | None,
+               meta_schema: str, *, buckets: int | None,
                key: tuple[str, ...], sort: tuple[str, ...],
                extra: dict[str, DataFrame] | None = None) -> None:
     """Save an index under `path`: the nonce, then `df` at path/<data>,
@@ -364,14 +344,14 @@ def save_index(df: DataFrame, path: str, data: str, meta: tuple,
     one-row Spark JSON dataset written through the same storage layer as
     the index tables, so save/load works wherever the data does (s3://,
     hdfs://, ...). With `buckets`, `df` is written bucketed on `key` and
-    sorted on `sort` as an external table registered as `table` (default
-    derived from `data` and the path)."""
+    sorted on `sort` as an external table whose catalog name derives
+    from `data` and the path."""
     spark = df.sparkSession
     nonce = write_index_nonce(spark, path)
     data_path = os.path.join(path, data)
     name = ""
     if buckets:
-        name = table or _index_table_name(data, path)
+        name = _index_table_name(data, path)
         write_bucketed(df, name, data_path, buckets, key, sort)
     else:
         df.write.mode("overwrite").parquet(data_path)

@@ -791,14 +791,13 @@ _META_SCHEMA = "k int, n_bands int"
 
 
 def minhash_save(index: MinHashIndex, path: str,
-                 buckets: int | None = None,
-                 table: str | None = None) -> None:
+                 buckets: int | None = None) -> None:
     """Persist the index across jobs: signatures + params, all written
     through Spark (no driver-local filesystem assumptions).
 
     `buckets`: write the signature table BUCKETED + SORTED on doc_id (an
-    external table at path/sigs registered as `table`, default derived
-    from the path) — the 10^12-doc shape: the candidate join-back keys on
+    external table at path/sigs, its catalog name derived from the
+    path) — the 10^12-doc shape: the candidate join-back keys on
     doc_id, and a bucketed index side joins with ZERO exchange on the
     index (pay the shuffle once at build time, never per batch;
     plan-asserted in tests/test_dedup.py). Bucketed METADATA lives in the
@@ -808,7 +807,7 @@ def minhash_save(index: MinHashIndex, path: str,
     from .. import io as dq_io
 
     dq_io.save_index(index.sigs, path, "sigs", (index.k, index.n_bands),
-                     _META_SCHEMA, buckets=buckets, table=table,
+                     _META_SCHEMA, buckets=buckets,
                      key=("doc_id",), sort=("doc_id",))
 
 

@@ -19,26 +19,22 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 WINDOW_GROUP_LIMIT_THRESHOLD = 1000
 
 
-def warn_window_cap(param: str, value: int,
-                    threshold: int = WINDOW_GROUP_LIMIT_THRESHOLD) -> None:
-    if value > threshold:
-        warnings.warn(
-            f"{param}={value} exceeds Spark's "
-            f"windowGroupLimitThreshold ({threshold}): the map-side "
-            "partial WindowGroupLimit will NOT fire, so each hot key "
-            "ships its full population to one partition's sort — raise "
-            "spark.sql.optimizer.windowGroupLimitThreshold to match, or "
-            f"keep {param} <= {threshold}",
-            stacklevel=4)
-
-
 def rank_cap(df: DataFrame, keys, order_col: str, cap: int,
              param: str) -> DataFrame:
     """Keep the `cap` first rows by `order_col` within each `keys` group
     (names or Columns): a `row_number() <= cap` filter, which Catalyst
     pre-trims map-side while cap stays within the threshold. `param`
     names the caller's cap option in the over-threshold warning."""
-    warn_window_cap(param, cap)
+    limit = WINDOW_GROUP_LIMIT_THRESHOLD
+    if cap > limit:
+        warnings.warn(
+            f"{param}={cap} exceeds Spark's windowGroupLimitThreshold "
+            f"({limit}): the map-side partial WindowGroupLimit will NOT "
+            "fire, so each hot key ships its full population to one "
+            "partition's sort — raise "
+            "spark.sql.optimizer.windowGroupLimitThreshold to match, or "
+            f"keep {param} <= {limit}",
+            stacklevel=3)
     w = Window.partitionBy(*keys).orderBy(order_col)
     return (df.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") <= cap).drop("_rk"))

@@ -8,10 +8,7 @@ stage — never one pass per column), then the wide row is melted into the
 canonical (column, stat...) report shape.
 
 Exact counts only, so the report is engine-reproducible (the DuckDB twin
-is generated from the same column list). At 100 TB exact count(distinct)
-per column is a real shuffle per column — callers profiling petabytes
-should switch `distinct_exact=False` to approx_count_distinct (HLL,
-one pass, ~2% error; rows-only checkable).
+is generated from the same column list).
 """
 
 from __future__ import annotations
@@ -19,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def profile_table(df: DataFrame, columns: list[str] | None = None,
-                  distinct_exact: bool = True) -> DataFrame:
+def profile_table(df: DataFrame,
+                  columns: list[str] | None = None) -> DataFrame:
     """(column, n, n_null, n_distinct, min_s, max_s) — min/max rendered as
     strings so one report schema covers every column type."""
     cols = columns or df.columns
@@ -28,10 +25,7 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
     for c in cols:
         col = F.col(c)
         aggs.append(F.count_if(col.isNull()).alias(f"_null_{c}"))
-        if distinct_exact:
-            aggs.append(F.countDistinct(col).alias(f"_dist_{c}"))
-        else:
-            aggs.append(F.approx_count_distinct(col).alias(f"_dist_{c}"))
+        aggs.append(F.countDistinct(col).alias(f"_dist_{c}"))
         aggs.append(F.min(col).cast("string").alias(f"_min_{c}"))
         aggs.append(F.max(col).cast("string").alias(f"_max_{c}"))
     wide = df.agg(*aggs)
@@ -50,7 +44,7 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
 
 
 def profile_table_sql(table: str, columns: list[str]) -> str:
-    """DuckDB twin generated from the same column list (exact variant)."""
+    """DuckDB twin generated from the same column list."""
     parts = []
     for c in columns:
         parts.append(f"""

@@ -531,8 +531,7 @@ def _train_quantizer(emb: DataFrame, id_col: str, vec_col: str,
 _IVF_META_SCHEMA = "id_col string, vec_col string, n_cells int"
 
 
-def ivf_save(index: IvfIndex, path: str, buckets: int | None = None,
-             table: str | None = None) -> None:
+def ivf_save(index: IvfIndex, path: str, buckets: int | None = None) -> None:
     """Persist a built index to disk: posting table + quantizer centroids
     + params. Build once OFFLINE, load in every downstream job — the
     cross-job form of the build-once/query-many API. Metadata is a
@@ -555,7 +554,7 @@ def ivf_save(index: IvfIndex, path: str, buckets: int | None = None,
     dq_io.save_index(
         index.posted, path, "posting",
         (index.id_col, index.vec_col, index.n_cells), _IVF_META_SCHEMA,
-        buckets=buckets, table=table, key=("cell",),
+        buckets=buckets, key=("cell",),
         sort=("cell", index.id_col), extra={"centroids": centroids})
 
 
@@ -675,7 +674,6 @@ def n_planes_for(n_vectors: int, target_bucket: int = TARGET_BUCKET) -> int:
 
 def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
              vec_col: str = "embedding", tables: int = N_TABLES,
-             planes: int | None = None,
              max_group: int = MAX_GROUP) -> DataFrame:
     """Approximate top-k: random-hyperplane buckets × `tables` hash tables;
     candidates = bucket collisions in any table; cosine re-rank over int8
@@ -701,9 +699,7 @@ def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
     if first is None:
         raise ValueError("lsh_topk: empty embedding table")
     dim = len(first[0])
-    if planes is None:
-        planes = n_planes_for(emb.count())
-    hp = _hyperplanes(dim, tables, planes)
+    hp = _hyperplanes(dim, tables, n_planes_for(emb.count()))
     bc = emb.sparkSession.sparkContext.broadcast(hp)
 
     def bucketize(batches):

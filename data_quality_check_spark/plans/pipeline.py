@@ -21,19 +21,13 @@ Scale design (100 TB / 10^12 turns):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import DEFAULT_RULESET, RuleSet
 from ..functions import rules
 from ..functions.scrub import scrub_column
 from ..functions.udfs import broadcast_models, make_scores_udf
 from ..operators.guards import barrier_filter
-
-FEATURE_NAMES = (
-    "n_chars", "n_words", "n_lines", "mean_word_len", "max_word_len",
-    "symbol_ratio", "stopword_frac", "alpha_frac", "dup_line_frac",
-    "bullet_frac", "ellipsis_frac",
-)
 
 
 def dup_flag_column(df: DataFrame, strategy: str = "broadcast"):
@@ -89,7 +83,6 @@ def label_turns(
     *,
     with_models: bool = True,
     bc_models=None,
-    keep_features: bool = False,
     dup_strategy: str = "broadcast",
     measure_latency: bool = False,
     models_on_survivors: bool = False,
@@ -152,16 +145,22 @@ def label_turns(
         )
         if measure_latency:
             out = out.withColumn("batch_us", F.col("_scores.batch_us"))
-    if keep_features:
-        out = out.withColumns({name: feats[name] for name in FEATURE_NAMES})
     final_cols = in_cols + ["drop_reasons", "keep", "text_scrubbed"]
     if with_models:
         final_cols += ["lang", "lang_conf", "ppl"]
         if measure_latency:
             final_cols += ["batch_us"]
-    if keep_features:
-        final_cols += list(FEATURE_NAMES)
     return out.select(*final_cols)
+
+
+def keep_counts() -> list[Column]:
+    """The keep/drop count triple over a labeled frame's `keep` column:
+    n_turns, n_kept, n_dropped — aggregates for agg() or observe()."""
+    return [
+        F.count(F.lit(1)).alias("n_turns"),
+        F.count_if(F.col("keep")).alias("n_kept"),
+        F.count_if(~F.col("keep")).alias("n_dropped"),
+    ]
 
 
 def observe_labels(labeled: DataFrame, name: str = "qf"):
@@ -178,13 +177,7 @@ def observe_labels(labeled: DataFrame, name: str = "qf"):
     from pyspark.sql import Observation
 
     obs = Observation(name)
-    out = labeled.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_turns"),
-        F.count_if(F.col("keep")).alias("n_kept"),
-        F.count_if(~F.col("keep")).alias("n_dropped"),
-    )
-    return out, obs
+    return labeled.observe(obs, *keep_counts()), obs
 
 
 def conversation_filter(labeled: DataFrame,
@@ -281,11 +274,6 @@ def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
         F.col("keep"),
         F.col("drop_reasons"),
     )
-    aggs = [
-        F.count(F.lit(1)).alias("n_turns"),
-        F.count_if(F.col("keep")).alias("n_kept"),
-        F.count_if(~F.col("keep")).alias("n_dropped"),
-    ]
     reason_entries = []
     for r in reasons:
         reason_entries.append(F.lit(r))
@@ -294,7 +282,8 @@ def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
         )
     metrics = (
         base.groupBy("partition_id", "input_file")
-        .agg(*aggs, F.create_map(*reason_entries).alias("reason_counts"))
+        .agg(*keep_counts(),
+             F.create_map(*reason_entries).alias("reason_counts"))
         .withColumn("ruleset_version", F.lit(cfg.version))
     )
     return metrics

@@ -27,13 +27,9 @@ from ..plans import pipeline
 from ..schema import TRANSCRIPT_SCHEMA
 
 
-def read_transcript_stream(spark: SparkSession, input_dir: str,
-                           max_files_per_trigger: int | None = None) -> DataFrame:
+def read_transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-stream source over a growing directory of transcript parquet."""
-    r = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return r.parquet(input_dir)
+    return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
 
 
 def label_stream(
@@ -91,11 +87,7 @@ def windowed_drop_counts(labeled: DataFrame, window: str = "1 hour",
     return (
         labeled.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, window).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.count_if(F.col("keep")).alias("n_kept"),
-            F.count_if(~F.col("keep")).alias("n_dropped"),
-        )
+        .agg(*pipeline.keep_counts())
         .select(F.col("w.start").alias("window_start"),
                 F.col("w.end").alias("window_end"),
                 "n_turns", "n_kept", "n_dropped")

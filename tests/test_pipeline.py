@@ -97,14 +97,6 @@ def test_observe_labels_inflight_counts(spark, transcripts_tiny):
     assert got["n_kept"] == direct
 
 
-def test_keep_features_columns(spark, transcripts_tiny):
-    lab = pipeline.label_turns(transcripts_tiny, with_models=False,
-                               keep_features=True)
-    assert set(pipeline.FEATURE_NAMES) <= set(lab.columns)
-    r = lab.filter("text IS NOT NULL").select("n_words", "n_chars").first()
-    assert r["n_chars"] > 0
-
-
 def test_lineage_covers_input_files(spark, tmp_path):
     src = str(tmp_path / "src")
     spark.createDataFrame(

@@ -6,6 +6,8 @@ lineage covering every input file exactly once."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +27,30 @@ def src(spark, tmp_path):
     return p
 
 
+@contextmanager
+def _crash_at_commit(n: int, *, after: bool):
+    """Kill run_job at its nth manifest commit: right before it (n-1
+    chunks committed, the nth chunk's data already written) or right
+    after it (n committed). The patched function runs where the real
+    commit does, on run_job's own thread inside the chunk pool's block."""
+    real = dq_io._commit_manifest
+    calls = 0
+
+    def commit(output_dir, entry):
+        nonlocal calls
+        calls += 1
+        if calls == n and not after:
+            raise RuntimeError(
+                f"injected failure before manifest commit of chunk {n}")
+        real(output_dir, entry)
+        if calls == n:
+            raise RuntimeError(f"injected failure after {n} chunks")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dq_io, "_commit_manifest", commit)
+        yield
+
+
 def _keys(spark, out_dir):
     return (dq_io.read_output(spark, out_dir)
             .select("conv_id", "turn_idx", "text").collect())
@@ -32,9 +58,10 @@ def _keys(spark, out_dir):
 
 def test_resume_after_injected_failure(spark, tmp_path, src):
     out = str(tmp_path / "out")
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with (_crash_at_commit(2, after=True),
+          pytest.raises(RuntimeError, match="injected failure")):
         dq_io.run_job(spark, src, out, with_models=False,
-                      files_per_chunk=2, fail_after_chunks=2)
+                      files_per_chunk=2)
     partial = _keys(spark, out)
     assert 0 < len(partial) < 200
 
@@ -84,9 +111,10 @@ def test_resume_after_crash_before_manifest_commit(spark, tmp_path, src):
     The orphan chunk dir must be invisible to readers and must be
     overwritten (not duplicated) by the re-run."""
     out = str(tmp_path / "out")
-    with pytest.raises(RuntimeError, match="before manifest commit"):
+    with (_crash_at_commit(2, after=False),
+          pytest.raises(RuntimeError, match="before manifest commit")):
         dq_io.run_job(spark, src, out, with_models=False,
-                      files_per_chunk=2, fail_before_commit=2)
+                      files_per_chunk=2)
     # one chunk committed, at least one orphaned on disk (the next chunk
     # may have been in flight too)
     assert len(dq_io.read_manifest(out)) == 1
@@ -116,14 +144,17 @@ def test_resume_after_crash_before_manifest_commit(spark, tmp_path, src):
     assert metric_files == files_in
 
 
-def test_max_records_per_file_bounds_output_files(spark, tmp_path, src):
+def test_output_partitions_sets_files_per_chunk(spark, tmp_path, src):
     import glob
+    import os
     out = str(tmp_path / "out")
-    dq_io.run_job(spark, src, out, with_models=False, files_per_chunk=100,
-                  output_partitions=1, max_records_per_file=50)
-    files = glob.glob(f"{out}/turns/chunk=*/part-*.parquet")
-    # 200 rows / <=50 per file -> at least 4 files even at 1 partition
-    assert len(files) >= 4
+    dq_io.run_job(spark, src, out, with_models=False, files_per_chunk=4,
+                  output_partitions=1)
+    entries = dq_io.read_manifest(out)
+    assert len(entries) == 2
+    for e in entries:
+        chunk_dir = os.path.join(out, "turns", f"chunk={e['chunk_id']}")
+        assert len(glob.glob(f"{chunk_dir}/part-*.parquet")) == 1
     assert dq_io.read_output(spark, out).count() == 200
 
 
@@ -220,9 +251,10 @@ def test_manifest_counts_match_metrics(spark, tmp_path):
 def test_failed_chunk_releases_its_cache(spark, tmp_path, src):
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    with pytest.raises(RuntimeError, match="before manifest commit"):
+    with (_crash_at_commit(1, after=False),
+          pytest.raises(RuntimeError, match="before manifest commit")):
         dq_io.run_job(spark, src, str(tmp_path / "out"), with_models=False,
-                      files_per_chunk=2, fail_before_commit=1)
+                      files_per_chunk=2)
     assert jsc.getPersistentRDDs().size() <= before
 
 
