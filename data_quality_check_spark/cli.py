@@ -86,7 +86,6 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from . import io as dq_io
-    from .functions.udfs import broadcast_models
 
     if args.no_resume:
         shutil.rmtree(args.output, ignore_errors=True)
@@ -97,6 +96,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "curate":
         from pyspark.sql import Observation, functions as F
 
+        from .functions.udfs import broadcast_models
         from .plans import curation
 
         docs = spark.read.parquet(args.input)
@@ -121,10 +121,10 @@ def main(argv: list[str] | None = None) -> int:
         return 0
     # fail before any work on an output dir whose manifest lacks counts
     dq_io.committed_turns(args.output)
-    bc = None if args.no_models else broadcast_models(spark)
+    # run_job broadcasts the models only when a chunk is left to label
     report = dq_io.run_job(
         spark, args.input, args.output,
-        with_models=not args.no_models, bc_models=bc,
+        with_models=not args.no_models,
         files_per_chunk=args.files_per_chunk,
         output_partitions=args.output_partitions,
         measure_latency=args.measure_latency,

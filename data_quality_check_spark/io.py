@@ -7,12 +7,14 @@ HashMap at 258-289 is exactly checkpoint state). The batch engine
 generalizes that into snapshot-style checkpointing:
 
   * input is a set of Parquet files;
-  * work is committed in CHUNKS of input files: each chunk is labeled ONCE
-    into a cache that feeds its labeled-turns write and its per-partition
-    lineage/metrics write; the turns write observes the chunk's turn and
-    keep/drop counts in flight, and a manifest entry carrying them is then
-    published ATOMICALLY (temp file + os.replace — the local stand-in for
-    an Iceberg snapshot commit, whose summary carries `added-records`);
+  * work is committed in CHUNKS of input files, which share one labeling
+    build (pipeline.Labeler) and one input schema, both made once per
+    job; each chunk is labeled ONCE into a cache that feeds its
+    labeled-turns write and its per-partition lineage/metrics write; the
+    turns write observes the chunk's turn and keep/drop counts in flight,
+    and a manifest entry carrying them is then published ATOMICALLY
+    (temp file + os.replace — the local stand-in for an Iceberg snapshot
+    commit, whose summary carries `added-records`);
   * two chunks are in flight at once — the driver builds one chunk's plan
     while the other's jobs run — but manifest entries are committed by the
     calling thread in chunk order, so the committed chunks are always a
@@ -38,6 +40,7 @@ from dataclasses import dataclass
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .config import DEFAULT_RULESET, RuleSet
 from .plans import pipeline
@@ -116,17 +119,24 @@ class JobReport:
     chunks_skipped: int
 
 
+def _read_chunk(spark: SparkSession, chunk: list[str],
+                schema: StructType) -> DataFrame:
+    """The chunk's files under the job's schema. A declared schema skips
+    the footer-reading job a bare read starts for inference, and the
+    scan's `_metadata.file_path` still resolves."""
+    return spark.read.schema(schema).parquet(*chunk)
+
+
 def _label_chunk(
     spark: SparkSession,
     chunk: list[str],
+    schema: StructType,
     output_dir: str,
+    labeler: pipeline.Labeler,
     cfg: RuleSet,
     *,
-    with_models: bool,
-    bc_models,
+    timed: bool,
     output_partitions: int | None,
-    measure_latency: bool,
-    models_on_survivors: bool,
 ) -> dict:
     """Label one chunk and write its latency, turns and metrics dirs;
     return its manifest entry, uncommitted. Runs on a pool thread, so the
@@ -135,16 +145,12 @@ def _label_chunk(
     chunk_id = hashlib.sha256("\n".join(chunk).encode()).hexdigest()[:16]
     spark.sparkContext.setLocalProperty("spark.job.description",
                                         f"chunk {chunk_id}")
-    df = spark.read.parquet(*chunk)
-    timed = measure_latency and with_models
     # ONE labeling pass per chunk: the latency, turns and metrics writes
     # all read this cache, so scan, features, scrub and the scoring UDF
     # run once (and batch_us describes the run that produced the
     # committed output)
-    labeled = pipeline.with_input_file(pipeline.label_turns(
-        df, cfg, with_models=with_models, bc_models=bc_models,
-        measure_latency=timed,
-        models_on_survivors=models_on_survivors)).persist()
+    labeled = pipeline.with_input_file(
+        labeler.label(_read_chunk(spark, chunk, schema))).persist()
     try:
         if timed:
             # D10 duration histogram: per-chunk scoring-latency
@@ -165,8 +171,7 @@ def _label_chunk(
             name=f"qf-{chunk_id}")
         out.write.mode("overwrite").parquet(
             os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
-        metrics = pipeline.metrics_table(
-            labeled, cfg, with_models=with_models)
+        metrics = labeler.metrics(labeled)
         metrics.write.mode("overwrite").parquet(
             os.path.join(output_dir, "metrics", f"chunk={chunk_id}"))
     finally:
@@ -206,6 +211,13 @@ def run_job(
                                      with the chunk's n_turns/n_kept/
                                      n_dropped
 
+    The chunks share what does not depend on their data, made once on
+    this thread before any chunk starts: the model broadcast, one
+    pipeline.Labeler (every labeling and metrics expression and the
+    scoring UDF) and the input schema, inferred from the first chunk's
+    files (one footer job per job, not per chunk; files whose schema
+    differs are read under it).
+
     Two chunks are in flight at once: each chunk's body (`_label_chunk`)
     runs on a 2-thread pool with the caller's local properties (job
     group, scheduler pool) and session tags, so the driver builds chunk
@@ -232,12 +244,17 @@ def run_job(
     files = list_input_files(spark, input_path)
     done = processed_files(output_dir)
     todo = [f for f in files if f not in done]
-    if with_models and bc_models is None and todo:
-        from .functions.udfs import broadcast_models
-        bc_models = broadcast_models(spark)
-
     chunks = [todo[i:i + files_per_chunk]
               for i in range(0, len(todo), files_per_chunk)]
+    if chunks:
+        if with_models and bc_models is None:
+            from .functions.udfs import broadcast_models
+            bc_models = broadcast_models(spark)
+        labeler = pipeline.Labeler(
+            cfg, with_models=with_models, bc_models=bc_models,
+            measure_latency=measure_latency,
+            models_on_survivors=models_on_survivors)
+        schema = spark.read.parquet(*chunks[0]).schema
     # double buffering: one chunk's plan build overlaps the other's jobs
     with ThreadPoolExecutor(max_workers=2) as pool:
         def submit(chunk):
@@ -246,10 +263,9 @@ def run_job(
             # then set on its own copy, never on the other chunk's
             return pool.submit(
                 inheritable_thread_target(spark)(_label_chunk),
-                spark, chunk, output_dir, cfg, with_models=with_models,
-                bc_models=bc_models, output_partitions=output_partitions,
-                measure_latency=measure_latency,
-                models_on_survivors=models_on_survivors)
+                spark, chunk, schema, output_dir, labeler, cfg,
+                timed=measure_latency and with_models,
+                output_partitions=output_partitions)
 
         # chunk n+2 is submitted once chunk n has committed, so no chunk
         # ever waits in the pool's queue, and on any exception leaving

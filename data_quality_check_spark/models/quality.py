@@ -74,6 +74,9 @@ def _counts_spark(df, text_col: str) -> np.ndarray:
     from pyspark.sql import functions as F
 
     def emit(batches):
+        # absolute and local: functions.udfs imports this module
+        from data_quality_check_spark.functions.udfs import guard_zip_rereads
+        guard_zip_rereads()
         import pandas as pd
 
         for p in batches:

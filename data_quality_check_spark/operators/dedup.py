@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.rules import WS, ws_words, ws_words_sql
+from ..functions.udfs import guard_zip_rereads
 from ..models import hashing
 from .guards import barrier_filter, rank_cap
 
@@ -384,6 +385,7 @@ def _sig_table(docs: DataFrame, k: int, bands: int) -> DataFrame:
     rows_per_band = k // bands
 
     def compute(batches):
+        guard_zip_rereads()
         for pdf in batches:
             sig = minhash_signatures_np(pdf["text"].tolist(), k)
             bh = np.stack([
@@ -959,6 +961,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     width = SIMHASH_BITS // n_bands
 
     def compute(batches):
+        guard_zip_rereads()
         for pdf in batches:
             sh = simhash_np(pdf["text"].tolist())
             base = pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(),

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..functions.udfs import guard_zip_rereads
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),      # image | audio | video
@@ -89,6 +91,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     payloads is inherent to variable-size binary decoding."""
 
     def run(batches):
+        guard_zip_rereads()
         for p in batches:
             feats = [fake_features(x).tolist() for x in p["payload"]]
             yield pd.DataFrame({

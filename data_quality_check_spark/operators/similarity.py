@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.udfs import guard_zip_rereads
 from .guards import rank_cap
 
 
@@ -183,6 +184,7 @@ def _score_group_int_fn(id_col: str):
     summation order, with or without FMA. Both sides are pre-bounded by
     _bounded_groups, so the group — and the matmul — is constant-sized."""
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        guard_zip_rereads()
         members = pdf[pdf["probe"] == 0]
         probes = pdf[pdf["probe"] == 1]
         if not len(members) or not len(probes):
@@ -298,6 +300,7 @@ def pairs_above_fast(emb: DataFrame, threshold: float = 0.95,
                        n_blocks * (n_blocks + 1) // 2)
 
     def scan(batches):
+        guard_zip_rereads()
         for p in batches:
             out_a, out_b = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
             for items_a, items_b, same in zip(
@@ -346,6 +349,7 @@ def brute_force_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
                        n_blocks * n_blocks)
 
     def local_topk(batches):
+        guard_zip_rereads()
         for p in batches:
             frames = []
             for q_items, c_items in zip(p["q_items"], p["c_items"]):
@@ -424,6 +428,7 @@ def _post_fn(bc, id_col: str, vec_col: str, probes: int,
     appends `cell_rank` (0 = nearest cell) so a SELF-query can derive
     the posting table from the probe table (one Python pass, not two)."""
     def post(batches):
+        guard_zip_rereads()
         c = bc.value
         for p in batches:
             v = np.asarray(p[vec_col].tolist(), dtype=np.float64)
@@ -703,6 +708,7 @@ def lsh_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
     bc = emb.sparkSession.sparkContext.broadcast(hp)
 
     def bucketize(batches):
+        guard_zip_rereads()
         pl = bc.value
         for p in batches:
             v = np.asarray(p[vec_col].tolist(), dtype=np.float64)

@@ -30,51 +30,154 @@ from ..functions.udfs import broadcast_models, make_scores_udf
 from ..operators.guards import barrier_filter
 
 
+def _dup_count(strategy: str) -> Column:
+    """The duplicate-key count dup_flag_column's frame carries."""
+    if strategy == "none":
+        return F.lit(1)
+    return F.coalesce(F.col("_dup_count"), F.lit(1))
+
+
+def _dup_key_exprs():
+    """The expressions of dup_flag_column's broadcast strategy: the key
+    count, its duplicate filter, the renamed keys and the join
+    condition."""
+    return (
+        F.count(F.lit(1)).alias("_dup_count"),
+        F.col("_dup_count") > 1,
+        [F.col("conv_id").alias("_dk_conv"),
+         F.col("turn_idx").alias("_dk_idx"), "_dup_count"],
+        # null-safe keys: the DuckDB/oracle twins group NULL keys together
+        F.col("conv_id").eqNullSafe(F.col("_dk_conv"))
+        & F.col("turn_idx").eqNullSafe(F.col("_dk_idx")),
+    )
+
+
+def _join_dup_keys(df: DataFrame, exprs) -> DataFrame:
+    count, dup, keys, on = exprs
+    dup_keys = (df.groupBy("conv_id", "turn_idx").agg(count)
+                .filter(dup).select(*keys))
+    return df.join(F.broadcast(dup_keys), on, "left")
+
+
 def dup_flag_column(df: DataFrame, strategy: str = "broadcast"):
     """(df', dup_count_col) marking duplicated (conv_id, turn_idx) keys.
 
     strategy='broadcast' (default, the 100 TB path): aggregate a 2-column
     projection — the shuffle carries only (conv_id, turn_idx), never text —
     then broadcast-join the (rare) duplicated keys back.
-    strategy='none' (streaming): no dup detection, every count is 1.
+    strategy='none' (streaming): no dup detection, every count is 1 — no
+    global view per micro-batch; dup handling is
+    dropDuplicates-within-watermark upstream or a batch sweep later.
     """
-    if strategy == "none":
-        # streaming path: no global view per micro-batch — dup handling is
-        # dropDuplicates-within-watermark upstream or a batch sweep later
-        return df, F.lit(1)
-    dup_keys = (
-        df.groupBy("conv_id", "turn_idx")
-        .agg(F.count(F.lit(1)).alias("_dup_count"))
-        .filter(F.col("_dup_count") > 1)
-        .select(F.col("conv_id").alias("_dk_conv"),
-                F.col("turn_idx").alias("_dk_idx"), "_dup_count")
-    )
-    # null-safe keys: the DuckDB/oracle twins group NULL keys together
-    joined = df.join(
-        F.broadcast(dup_keys),
-        F.col("conv_id").eqNullSafe(F.col("_dk_conv"))
-        & F.col("turn_idx").eqNullSafe(F.col("_dk_idx")),
-        "left",
-    )
-    return joined, F.coalesce(F.col("_dup_count"), F.lit(1))
+    if strategy != "none":
+        df = _join_dup_keys(df, _dup_key_exprs())
+    return df, _dup_count(strategy)
 
 
-def _featurize(df: DataFrame, dup_strategy: str = "broadcast"):
-    """The prelude label_turns and ruleset_diff share: dup flag, the shared
-    word/line arrays and every feature, each materialized ONCE per row in
-    its own projection (CollapseProject keeps multi-referenced non-cheap
-    aliases there, so split/translate run once instead of once per
-    consuming rule). Returns (df', dup_count, feats, input_cols)."""
+def _feature_projections() -> list[dict[str, Column]]:
+    """The two projections of the prelude label_turns and ruleset_diff
+    share: the word/line arrays, then every feature (`_f_<name>`) over
+    them. Each is materialized ONCE per row in its own projection
+    (CollapseProject keeps multi-referenced non-cheap aliases there, so
+    split/translate run once instead of once per consuming rule)."""
     text = F.col("text")
-    out, dup_count = dup_flag_column(df, dup_strategy)
-    out = out.withColumns(rules.split_columns(text))
-    feat_exprs = rules.feature_columns_from(
+    feats = rules.feature_columns_from(
         text, F.col("_words"), F.col("_lines"))
-    out = out.withColumns({f"_f_{k}": v for k, v in feat_exprs.items()})
-    feats = {k: F.col(f"_f_{k}") for k in feat_exprs}
+    return [rules.split_columns(text),
+            {f"_f_{k}": v for k, v in feats.items()}]
+
+
+def _featurize(df: DataFrame, dup_exprs,
+               projections: list[dict[str, Column]]) -> DataFrame:
+    """The dup flag (_dup_key_exprs(), or None for strategy 'none'), then
+    _feature_projections() in order."""
+    out = df if dup_exprs is None else _join_dup_keys(df, dup_exprs)
+    for cols in projections:
+        out = out.withColumns(cols)
+    return out
+
+
+def _rule_flags(cfg: RuleSet, dup_strategy: str,
+                projections: list[dict[str, Column]]):
+    """The validation + heuristic (reason, condition) pairs over the
+    columns _featurize adds."""
     cols = {c: F.col(c) for c in ("conv_id", "turn_idx", "role", "text",
                                   "tool", "ts")}
-    return out, dup_count, feats, cols
+    feats = {k.removeprefix("_f_"): F.col(k) for k in projections[1]}
+    return (rules.validation_flags(cols, cfg, _dup_count(dup_strategy))
+            + rules.heuristic_flags(feats, F.col("text"), cfg))
+
+
+class Labeler:
+    """label_turns and run_job's metrics_table with every expression
+    built ONCE, for applying to many frames: the dup-key join's, the
+    feature projections, the flags, drop_reasons, keep, the scrub, one
+    scoring UDF and the metrics aggregates. Building them is thousands of
+    py4j commands and most of a plan build; applying them to a frame
+    issues only its join/withColumn/select/agg calls, so run_job builds
+    one per job and every chunk reuses it (two pool threads may apply it
+    at once: the Columns are unresolved and never mutated). Plans are
+    identical to a fresh label_turns/metrics_table build.
+
+    The Columns belong to the session that built them: build a Labeler
+    per job, never cache one beyond its session. `bc_models` (a
+    broadcast_models() handle) is required when `with_models`."""
+
+    def __init__(self, cfg: RuleSet = DEFAULT_RULESET, *,
+                 with_models: bool = True, bc_models=None,
+                 dup_strategy: str = "broadcast",
+                 measure_latency: bool = False,
+                 models_on_survivors: bool = False):
+        text = F.col("text")
+        self._dup = None if dup_strategy == "none" else _dup_key_exprs()
+        self._projections = _feature_projections()
+        flags = _rule_flags(cfg, dup_strategy, self._projections)
+        # (name, column) in withColumn order after the prelude
+        steps: list[tuple[str, Column]] = []
+        if with_models:
+            scores = make_scores_udf(bc_models, timed=measure_latency)
+            if models_on_survivors:
+                # rule-only keep decision, evaluated BEFORE the model pass
+                steps.append(
+                    ("_rk", F.size(rules.reasons_array(flags)) == 0))
+                steps.append(("_scores", scores(F.when(F.col("_rk"), text))))
+                guard = F.col("_rk")
+            else:
+                steps.append(("_scores", scores(text)))
+                guard = F.lit(True)
+            flags = flags + [
+                ("lang_conf", guard & text.isNotNull()
+                 & (F.col("_scores.lang_conf") < cfg.min_lang_conf)),
+                ("perplexity", guard & text.isNotNull()
+                 & (F.col("_scores.ppl") > cfg.max_perplexity)),
+            ]
+        steps += [
+            ("drop_reasons", rules.reasons_array(flags)),
+            ("keep", F.size("drop_reasons") == 0),
+            ("text_scrubbed", scrub_column(text)),
+        ]
+        if with_models:
+            steps += [(c, F.when(guard, F.col(f"_scores.{c}")))
+                      for c in ("lang", "lang_conf", "ppl")]
+            if measure_latency:
+                steps.append(("batch_us", F.col("_scores.batch_us")))
+        self._steps = steps
+        self._out_cols = [name for name, _ in steps
+                          if not name.startswith("_")]
+        self._metrics = _metrics_columns(cfg, with_models,
+                                         input_files=True)
+
+    def label(self, df: DataFrame) -> DataFrame:
+        """label_turns(df, ...) with this Labeler's settings."""
+        out = _featurize(df, self._dup, self._projections)
+        for name, col in self._steps:
+            out = out.withColumn(name, col)
+        return out.select(*df.columns, *self._out_cols)
+
+    def metrics(self, labeled: DataFrame) -> DataFrame:
+        """metrics_table(labeled, cfg, with_models=...) of a frame that
+        with_input_file tagged."""
+        return _aggregate_metrics(labeled, *self._metrics)
 
 
 def label_turns(
@@ -102,55 +205,16 @@ def label_turns(
     reliable form) and emit NULL lang/lang_conf/ppl. Keep/drop decisions
     are IDENTICAL to the eager mode (model rules can only re-drop
     survivors); only the scored columns of already-dropped rows differ,
-    which is why the gate keeps the eager default."""
-    text = F.col("text")
-    in_cols = df.columns
-    out, dup_count, feats, cols = _featurize(df, dup_strategy)
-    flags = rules.validation_flags(cols, cfg, dup_count)
-    flags += rules.heuristic_flags(feats, text, cfg)
+    which is why the gate keeps the eager default.
 
-    if with_models:
-        if bc_models is None:
-            bc_models = broadcast_models(df.sparkSession)
-        scores = make_scores_udf(bc_models, timed=measure_latency)
-        if models_on_survivors:
-            # rule-only keep decision, evaluated BEFORE the model pass
-            rule_keep = F.size(rules.reasons_array(flags)) == 0
-            out = out.withColumn("_rk", rule_keep)
-            out = out.withColumn(
-                "_scores", scores(F.when(F.col("_rk"), text)))
-            guard = F.col("_rk")
-        else:
-            out = out.withColumn("_scores", scores(text))
-            guard = F.lit(True)
-        lang = F.when(guard, F.col("_scores.lang"))
-        lang_conf = F.when(guard, F.col("_scores.lang_conf"))
-        ppl = F.when(guard, F.col("_scores.ppl"))
-        flags = flags + [
-            ("lang_conf", guard & text.isNotNull()
-             & (F.col("_scores.lang_conf") < cfg.min_lang_conf)),
-            ("perplexity", guard & text.isNotNull()
-             & (F.col("_scores.ppl") > cfg.max_perplexity)),
-        ]
-
-    drop_reasons = rules.reasons_array(flags)
-    out = out.withColumn("drop_reasons", drop_reasons)
-    out = out.withColumn("keep", F.size("drop_reasons") == 0)
-    out = out.withColumn("text_scrubbed", scrub_column(text))
-    if with_models:
-        out = (
-            out.withColumn("lang", lang)
-            .withColumn("lang_conf", lang_conf)
-            .withColumn("ppl", ppl)
-        )
-        if measure_latency:
-            out = out.withColumn("batch_us", F.col("_scores.batch_us"))
-    final_cols = in_cols + ["drop_reasons", "keep", "text_scrubbed"]
-    if with_models:
-        final_cols += ["lang", "lang_conf", "ppl"]
-        if measure_latency:
-            final_cols += ["batch_us"]
-    return out.select(*final_cols)
+    Builds a Labeler for this one frame; label many frames with one
+    Labeler instead."""
+    if with_models and bc_models is None:
+        bc_models = broadcast_models(df.sparkSession)
+    return Labeler(cfg, with_models=with_models, bc_models=bc_models,
+                   dup_strategy=dup_strategy,
+                   measure_latency=measure_latency,
+                   models_on_survivors=models_on_survivors).label(df)
 
 
 def keep_counts() -> list[Column]:
@@ -261,32 +325,48 @@ def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
     One row per (partition, input file): turn counts, keep/drop counts and a
     per-reason histogram map, tagged with the ruleset version.
     `input_files=True` reads the lineage column with_input_file adds;
-    `input_files=False` tags every row "<memory>".
+    `input_files=False` tags every row "<memory>". Labeler.metrics is
+    the same table from expressions built once per job.
     """
+    return _aggregate_metrics(
+        labeled, *_metrics_columns(cfg, with_models,
+                                   input_files=input_files))
+
+
+def _metrics_columns(cfg: RuleSet, with_models: bool, *,
+                     input_files: bool):
+    """metrics_table's expressions: the per-row projection, the
+    aggregates and the ruleset version."""
     from ..config import REASONS
 
     reasons = [r for r in REASONS
                if with_models or r not in ("lang_conf", "perplexity")]
     file_col = F.col("input_file") if input_files else F.lit("<memory>")
-    base = labeled.select(
+    base = [
         F.spark_partition_id().alias("partition_id"),
         file_col.alias("input_file"),
         F.col("keep"),
         F.col("drop_reasons"),
-    )
+    ]
     reason_entries = []
     for r in reasons:
         reason_entries.append(F.lit(r))
         reason_entries.append(
             F.count_if(F.array_contains("drop_reasons", r))
         )
-    metrics = (
-        base.groupBy("partition_id", "input_file")
-        .agg(*keep_counts(),
-             F.create_map(*reason_entries).alias("reason_counts"))
-        .withColumn("ruleset_version", F.lit(cfg.version))
+    aggs = [*keep_counts(),
+            F.create_map(*reason_entries).alias("reason_counts")]
+    return base, aggs, F.lit(cfg.version)
+
+
+def _aggregate_metrics(labeled: DataFrame, base: list[Column],
+                       aggs: list[Column], version: Column) -> DataFrame:
+    return (
+        labeled.select(*base)
+        .groupBy("partition_id", "input_file")
+        .agg(*aggs)
+        .withColumn("ruleset_version", version)
     )
-    return metrics
 
 
 def ruleset_diff(df: DataFrame, cfg_old: RuleSet,
@@ -304,11 +384,10 @@ def ruleset_diff(df: DataFrame, cfg_old: RuleSet,
     Heuristic rules only: model-score thresholds diff by comparing the
     scored lang_conf/ppl columns of one label_turns pass.
     """
-    text = F.col("text")
-    out, dup_count, feats, cols = _featurize(df)
+    projections = _feature_projections()
+    out = _featurize(df, _dup_key_exprs(), projections)
     for tag, cfg in (("old", cfg_old), ("new", cfg_new)):
-        flags = rules.validation_flags(cols, cfg, dup_count)
-        flags += rules.heuristic_flags(feats, text, cfg)
+        flags = _rule_flags(cfg, "broadcast", projections)
         out = out.withColumn(f"_r_{tag}", rules.reasons_array(flags))
     # barrier: a pushed-down flip filter would re-expand every feature
     flips = (F.size("_r_old") == 0) != (F.size("_r_new") == 0)

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_RULESET, RuleSet
+from ..functions.udfs import guard_zip_rereads
 from ..plans import pipeline
 from ..schema import TRANSCRIPT_SCHEMA
 
@@ -114,6 +115,7 @@ def conversation_stats_stream(labeled: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
+        guard_zip_rereads()
         n_turns, n_kept, max_idx, last_ts = (
             state.get if state.exists else (0, 0, -1, 0)
         )

@@ -33,6 +33,37 @@ def test_cli_runs_and_resumes(spark, tmp_path, capsys):
     assert rep2["output_turns"] == 30
 
 
+def test_cli_resume_broadcasts_no_models(spark, tmp_path, capsys,
+                                         monkeypatch):
+    """The models are broadcast once, by run_job, and only while a chunk
+    is left: a resume of a fully committed output trains none."""
+    from data_quality_check_spark import cli
+    from data_quality_check_spark.functions import udfs
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    rows = [("c1", i, "user", f"turn {i} with plain ordinary words", None,
+             None) for i in range(12)]
+    (spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+     .repartition(2).write.parquet(src))
+    calls = []
+    real = udfs.broadcast_models
+
+    def counted(s):
+        calls.append(1)
+        return real(s)
+
+    monkeypatch.setattr(udfs, "broadcast_models", counted)
+    assert cli.main(["--input", src, "--output", out]) == 0
+    assert len(calls) == 1
+    assert cli.main(["--input", src, "--output", out]) == 0
+    assert len(calls) == 1
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (rep["chunks_run"], rep["output_turns"]) == (0, 12)
+
+
 def test_cli_curate_mode(spark, tmp_path, capsys):
     """curate mode: documents parquet in → curated parquet out, with
     quality filter + span dedup + domain caps + shard packing wired

@@ -3,6 +3,10 @@ skew repartition, lineage/metrics consistency, pushdown + codegen checks."""
 
 from __future__ import annotations
 
+import re
+from contextlib import contextmanager
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_quality_check_spark.plans import pipeline
@@ -237,3 +241,83 @@ def test_models_on_survivors_same_decisions(spark, bc_models):
             assert lazy[i]["drop_reasons"] == eager[i]["drop_reasons"]
         else:
             assert lazy[i]["lang"] is None and lazy[i]["ppl"] is None
+
+
+@contextmanager
+def _py4j_commands():
+    """Count the py4j commands this process sends while the block runs
+    (every thread's, through ClientServerConnection.send_command). The
+    garbage collector is drained first and paused, so the count holds no
+    deletes of JVM objects that earlier code dropped."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    real = ClientServerConnection.send_command
+    n = [0]
+
+    def send_command(self, command):
+        n[0] += 1
+        return real(self, command)
+
+    gc.collect()
+    gc.disable()
+    ClientServerConnection.send_command = send_command
+    try:
+        yield n
+    finally:
+        ClientServerConnection.send_command = real
+        gc.enable()
+
+
+def _plan(df) -> str:
+    """The optimized plan with expression ids, lambda numbering and
+    `_common_expr_N` numbering stripped (they differ between two builds
+    of the same plan)."""
+    s = df._jdf.queryExecution().optimizedPlan().toString()
+    s = re.sub(r"\blambda (\w+?)_\d+\b", r"lambda \1",
+               re.sub(r"#\d+L?", "", s))
+    first: dict[str, str] = {}
+    return re.sub(r"_common_expr_\d+",
+                  lambda m: first.setdefault(m[0], f"_ce{len(first)}"), s)
+
+
+def test_labeler_reuse_skips_the_expression_build(spark, transcripts_tiny,
+                                                  bc_models, tmp_path):
+    """A built Labeler applied to a second chunk issues at most half the
+    py4j commands of a fresh label_turns + metrics_table build, and gives
+    the same plans."""
+    src = str(tmp_path / "src")
+    transcripts_tiny.repartition(4).write.parquet(src)
+    files = sorted(spark.read.parquet(src).inputFiles())
+    first = spark.read.parquet(*files[:2])
+    second = spark.read.parquet(*files[2:])
+    labeler = pipeline.Labeler(bc_models=bc_models)
+    labeler.metrics(pipeline.with_input_file(labeler.label(first)))
+
+    with _py4j_commands() as fresh:
+        lab = pipeline.with_input_file(
+            pipeline.label_turns(second, bc_models=bc_models))
+        met = pipeline.metrics_table(lab)
+    with _py4j_commands() as reused:
+        lab2 = pipeline.with_input_file(labeler.label(second))
+        met2 = labeler.metrics(lab2)
+    assert reused[0] <= fresh[0] // 2, (reused[0], fresh[0])
+    assert _plan(lab2) == _plan(lab)
+    assert _plan(met2) == _plan(met)
+
+
+@pytest.mark.parametrize("kw", [
+    {"with_models": False},
+    {"measure_latency": True, "models_on_survivors": True},
+    {"dup_strategy": "none"},
+])
+def test_labeler_plans_equal_label_turns(spark, transcripts_tiny, bc_models,
+                                         kw):
+    """Every label_turns variant: a reused Labeler's plan is the plan of a
+    fresh build."""
+    labeler = pipeline.Labeler(bc_models=bc_models, **kw)
+    labeler.label(transcripts_tiny)
+    assert (_plan(labeler.label(transcripts_tiny))
+            == _plan(pipeline.label_turns(transcripts_tiny,
+                                          bc_models=bc_models, **kw)))

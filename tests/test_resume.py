@@ -176,6 +176,31 @@ def test_list_input_files_starts_no_job(spark, src):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def test_chunk_read_starts_no_job(spark, src):
+    """run_job infers the input schema once per job: a chunk read under it
+    starts no job (a bare read of the same files starts the footer job),
+    and the lineage column still resolves from the scan's `_metadata`."""
+    from data_quality_check_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    files = dq_io.list_input_files(spark, src)
+    schema = spark.read.parquet(*files[:2]).schema
+
+    def jobs(group, read):
+        sc.setJobGroup(group, "chunk read")
+        try:
+            fields = pipeline.with_input_file(read()).columns
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert "input_file" in fields
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("test-chunk-read",
+                lambda: dq_io._read_chunk(spark, files[2:4], schema)) == []
+    assert jobs("test-chunk-read-bare",
+                lambda: spark.read.parquet(*files[2:4])) != []
+
+
 def _last_execution_id(spark) -> int:
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
