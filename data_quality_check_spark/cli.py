@@ -110,8 +110,8 @@ def main(argv: list[str] | None = None) -> int:
             quality_model_bc=q_bc, min_quality=args.min_quality)
         # counted in the write's result stage instead of a re-read
         kept = Observation("curate")
-        (out.observe(kept, F.count(F.lit(1)).alias("n"))
-         .write.mode("overwrite").parquet(args.output))
+        out = out.observe(kept, F.count(F.lit(1)).alias("n"))
+        dq_io.parquet_writer(out).mode("overwrite").parquet(args.output)
         print(json.dumps({
             "mode": "curate",
             "input_docs": docs.count(),

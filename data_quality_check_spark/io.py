@@ -27,6 +27,13 @@ generalizes that into snapshot-style checkpointing:
 At 100 TB scale the chunk is the unit of fault recovery ABOVE Spark's own
 task retry: a lost executor re-runs tasks (spark.task.maxFailures), a lost
 driver re-runs only un-committed chunks.
+
+Every table the package commits is zstd Parquet (Iceberg's default codec
+since 1.4.0): each Parquet write goes through `parquet_writer` or its
+streaming twin `parquet_stream_writer`, which set the codec on the write
+itself, never on the session, so a caller's own writes keep theirs.
+Parquet records the codec per column chunk, so outputs committed by an
+older build (snappy) read back and resume next to new chunks.
 """
 
 from __future__ import annotations
@@ -39,13 +46,29 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (DataFrame, DataFrameWriter, SparkSession,
+                         functions as F)
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from .config import DEFAULT_RULESET, RuleSet
 from .plans import pipeline
 
 MANIFEST_DIR = "_manifest"
+PARQUET_CODEC = "zstd"
+
+
+def parquet_writer(df: DataFrame) -> DataFrameWriter:
+    """`df.write` as Parquet with the committed codec: the one way the
+    package writes a Parquet table (tests/test_write_codec.py scans for
+    any other)."""
+    return df.write.format("parquet").option("compression", PARQUET_CODEC)
+
+
+def parquet_stream_writer(df: DataFrame) -> DataStreamWriter:
+    """`df.writeStream` twin of parquet_writer."""
+    return (df.writeStream.format("parquet")
+            .option("compression", PARQUET_CODEC))
 
 
 def normalize_file_uri(p: str) -> str:
@@ -163,16 +186,16 @@ def _label_chunk(
                     F.spark_partition_id().alias("partition_id"),
                     "batch_us"),
                 "batch_us", ("partition_id",))
-            lat_rows.write.mode("overwrite").parquet(
+            parquet_writer(lat_rows).mode("overwrite").parquet(
                 os.path.join(output_dir, "latency", f"chunk={chunk_id}"))
         # counted after the shuffle, in the write's result stage
         out, counts = pipeline.observe_labels(pipeline.stable_order(
             labeled.drop("input_file", "batch_us"), output_partitions),
             name=f"qf-{chunk_id}")
-        out.write.mode("overwrite").parquet(
+        parquet_writer(out).mode("overwrite").parquet(
             os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
         metrics = labeler.metrics(labeled)
-        metrics.write.mode("overwrite").parquet(
+        parquet_writer(metrics).mode("overwrite").parquet(
             os.path.join(output_dir, "metrics", f"chunk={chunk_id}"))
     finally:
         labeled.unpersist()
@@ -203,8 +226,8 @@ def run_job(
 ) -> JobReport:
     """Run (or resume) the labeling job over `input_path`.
 
-    Output layout:
-      output_dir/turns/chunk=<id>/   labeled + scrubbed turns (parquet)
+    Output layout (every table zstd Parquet, see parquet_writer):
+      output_dir/turns/chunk=<id>/   labeled + scrubbed turns
       output_dir/metrics/chunk=<id>/ per-partition lineage + metrics rows
       output_dir/latency/chunk=<id>/ scoring-latency percentiles (timed)
       output_dir/_manifest/<id>.json committed-chunk manifest (atomic),
@@ -370,9 +393,10 @@ def save_index(df: DataFrame, path: str, data: str, meta: tuple,
         name = _index_table_name(data, path)
         write_bucketed(df, name, data_path, buckets, key, sort)
     else:
-        df.write.mode("overwrite").parquet(data_path)
+        parquet_writer(df).mode("overwrite").parquet(data_path)
     for sub, extra_df in (extra or {}).items():
-        extra_df.write.mode("overwrite").parquet(os.path.join(path, sub))
+        parquet_writer(extra_df).mode("overwrite").parquet(
+            os.path.join(path, sub))
     (spark.createDataFrame([(*meta, buckets or 0, name, nonce)],
                            f"{meta_schema}, {_INDEX_META_TAIL}")
      .coalesce(1).write.mode("overwrite").json(os.path.join(path, "meta")))
@@ -419,5 +443,5 @@ def write_bucketed(df: DataFrame, table: str, path: str, buckets: int,
     dimension co-location: pay the shuffle once at write time, never
     again per query. Bucket count should match the downstream
     parallelism target (one task per bucket per join)."""
-    (df.write.bucketBy(buckets, *key).sortBy(*sort).option("path", path)
-     .mode("overwrite").format("parquet").saveAsTable(table))
+    (parquet_writer(df).bucketBy(buckets, *key).sortBy(*sort)
+     .option("path", path).mode("overwrite").saveAsTable(table))

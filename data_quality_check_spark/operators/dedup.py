@@ -192,41 +192,48 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
 # Below this many (directed) edges the connected-component resolution
 # runs DRIVER-SIDE on the collected edge list (union-find) instead of the
 # distributed label-propagation loop: the edge table of a near-dup graph
-# is O(corpus · dup-rate · cap) ids — 4M edges ≈ 64 MB, a bounded,
-# documented collect (same guard discipline as apply_dedup's drop-set
+# is O(corpus · dup-rate · cap) ids — 4M long edges ≈ 64 MB collected
+# and ~0.3 GB peak in _union_find_min_labels, a bounded, documented
+# collect (same guard discipline as apply_dedup's drop-set
 # probe) — while the distributed loop costs 1 count-job + 2 shuffles PER
 # ROUND. Above the cap the loop runs unchanged. Both paths produce the
 # identical labeling (min component id), pinned by tests.
 DRIVER_CC_MAX_EDGES = 4_000_000
 
 
-def _union_find_min_labels(edges: list) -> dict:
-    """Driver-side union-find over (src, dst) pairs → {id: min-id-of-
-    component} — exactly resolve_groups' labeling convention."""
-    parent: dict = {}
+def _union_find_min_labels(edges: pd.DataFrame) -> pd.DataFrame:
+    """Driver-side connected components over an (src, dst) edge frame →
+    (doc_id, group_id) rows, group_id the min id of the component —
+    exactly resolve_groups' labeling convention.
 
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for s, d in edges:
-        if s not in parent:
-            parent[s] = s
-        if d not in parent:
-            parent[d] = d
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            parent[rd] = rs
-    mins: dict = {}
-    for x in parent:
-        r = find(x)
-        if r not in mins or x < mins[r]:
-            mins[r] = x
-    return {x: mins[find(x)] for x in parent}
+    The ids are factorized once (one hash pass, any hashable id type),
+    then components are found on the int64 codes: each round every tree
+    root hooks onto the smallest root across its edges, and pointer
+    jumping flattens the trees again, so every code points at its
+    tree's smallest code; a round that changes nothing ends the loop.
+    Each component's min ORIGINAL id comes from a groupby-min over the
+    root codes, since codes follow first appearance, not id order."""
+    m = len(edges)
+    codes, ids = pd.factorize(
+        pd.concat([edges["src"], edges["dst"]], ignore_index=True))
+    src, dst = codes[:m], codes[m:]
+    label = np.arange(len(ids))
+    while True:
+        hooked = label.copy()
+        np.minimum.at(hooked, label[src], label[dst])
+        np.minimum.at(hooked, label[dst], label[src])
+        while True:
+            jumped = hooked[hooked]
+            if np.array_equal(jumped, hooked):
+                break
+            hooked = jumped
+        if np.array_equal(hooked, label):
+            break
+        label = hooked
+    return pd.DataFrame({
+        "doc_id": ids,
+        "group_id": pd.Series(ids).groupby(label).transform("min")
+        .to_numpy()})
 
 
 def resolve_groups(pairs: DataFrame, a_col: str = "doc_a",
@@ -266,13 +273,10 @@ def resolve_groups(pairs: DataFrame, a_col: str = "doc_a",
         # is capped by the threshold, never by the edge count.
         pdf = edges.limit(driver_max_edges + 1).toPandas()
         if len(pdf) <= driver_max_edges:
-            labels = _union_find_min_labels(
-                list(zip(pdf["src"].tolist(), pdf["dst"].tolist())))
+            out = _union_find_min_labels(pdf)
             # typed like the input ids (long, int, string, ...), the
             # same schema the distributed path below produces
             id_type = edges.schema["src"].dataType.simpleString()
-            out = pd.DataFrame(sorted(labels.items()),
-                               columns=["doc_id", "group_id"])
             return pairs.sparkSession.createDataFrame(
                 out.astype(pdf["src"].dtype),
                 f"doc_id {id_type}, group_id {id_type}")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_RULESET, RuleSet
 from ..functions.udfs import guard_zip_rereads
+from ..io import parquet_stream_writer, parquet_writer
 from ..plans import pipeline
 from ..schema import TRANSCRIPT_SCHEMA
 
@@ -66,7 +67,7 @@ def start_parquet_sink(labeled: DataFrame, output_dir: str,
     """Append sink with exactly-once file-source → parquet semantics via the
     streaming checkpoint (restart-safe; the C5 mtime-map analog)."""
     w = (
-        labeled.writeStream.format("parquet")
+        parquet_stream_writer(labeled)
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -178,7 +179,7 @@ def incremental_dedup_stream(stream_docs: DataFrame, index,
     def process(batch_df: DataFrame, batch_id: int) -> None:
         pairs = dedup_ops.incremental_dedup_pairs(
             index, batch_df, threshold=threshold)
-        pairs.write.mode("overwrite").parquet(
+        parquet_writer(pairs).mode("overwrite").parquet(
             os.path.join(output_dir, f"batch={batch_id}"))
 
     return (stream_docs.writeStream.foreachBatch(process)

@@ -6,6 +6,7 @@ lineage covering every input file exactly once."""
 
 from __future__ import annotations
 
+from collections import Counter
 from contextlib import contextmanager
 
 import pytest
@@ -416,3 +417,102 @@ def test_failing_chunk_stops_pipeline_cleanly(spark, tmp_path, src):
     assert [e["chunk_id"] for e in dq_io.read_manifest(out)] == \
         _chunk_ids(spark, src, 2)[:1]
     assert jsc.getPersistentRDDs().size() <= before
+
+
+def _rewrite_snappy(chunk_dir: str) -> None:
+    """Rewrite a committed chunk dir's part files as snappy Parquet, the
+    codec of outputs committed before the tables were zstd (pyarrow;
+    INT96 timestamps as Spark writes them; each file renamed, its stale
+    .crc dropped)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    for f in glob.glob(os.path.join(chunk_dir, "*.parquet")):
+        table = pq.ParquetFile(f).read()
+        pq.write_table(table, f.replace(".zstd.", ".snappy."),
+                       compression="snappy",
+                       use_deprecated_int96_timestamps=True)
+        os.remove(f)
+        crc = os.path.join(chunk_dir, f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
+def _snappy_chunk(out: str) -> str:
+    """Rewrite the turns and metrics of the committed chunk listed first
+    in the manifest as snappy; return its id."""
+    import os
+
+    cid = dq_io.read_manifest(out)[0]["chunk_id"]
+    for sub in ("turns", "metrics"):
+        _rewrite_snappy(os.path.join(out, sub, f"chunk={cid}"))
+    return cid
+
+
+def _chunk_codecs(out: str) -> dict[str, set[str]]:
+    """Codecs of each committed chunk's turns and metrics files."""
+    import os
+
+    from test_write_codec import parquet_codecs
+
+    return {cid: parquet_codecs(os.path.join(out, "turns", f"chunk={cid}"))
+            | parquet_codecs(os.path.join(out, "metrics", f"chunk={cid}"))
+            for cid in (e["chunk_id"] for e in dq_io.read_manifest(out))}
+
+
+def _row_counts(df) -> Counter:
+    def freeze(v):
+        if isinstance(v, dict):
+            return tuple(sorted((k, freeze(x)) for k, x in v.items()))
+        if isinstance(v, (list, tuple)):
+            return tuple(map(freeze, v))
+        return v
+
+    return Counter(map(freeze, df.collect()))
+
+
+def test_snappy_committed_chunk_reads_and_reruns(spark, tmp_path, src):
+    """A chunk committed as snappy (by an older build) next to a zstd
+    one: the re-run is still a no-op, and read_output/read_metrics return
+    the same rows as before the rewrite."""
+    out = str(tmp_path / "out")
+    dq_io.run_job(spark, src, out, with_models=False, files_per_chunk=4)
+    turns = _row_counts(dq_io.read_output(spark, out))
+    metrics = _row_counts(dq_io.read_metrics(spark, out))
+    snappy = _snappy_chunk(out)
+    codecs = _chunk_codecs(out)
+    assert codecs.pop(snappy) == {"SNAPPY"}
+    assert list(codecs.values()) == [{"ZSTD"}]
+    report = dq_io.run_job(spark, src, out, with_models=False,
+                           files_per_chunk=4)
+    assert (report.chunks_run, report.chunks_skipped) == (0, 8)
+    assert _row_counts(dq_io.read_output(spark, out)) == turns
+    assert _row_counts(dq_io.read_metrics(spark, out)) == metrics
+    assert sum(turns.values()) == 200
+
+
+def test_resume_over_snappy_committed_chunk(spark, tmp_path, src):
+    """A crash after the first commit, that chunk then rewritten as
+    snappy: the resume commits the rest in zstd and the output holds
+    every row exactly once."""
+    out = str(tmp_path / "out")
+    with (_crash_at_commit(1, after=True),
+          pytest.raises(RuntimeError, match="injected failure")):
+        dq_io.run_job(spark, src, out, with_models=False,
+                      files_per_chunk=2)
+    assert len(dq_io.read_manifest(out)) == 1
+    snappy = _snappy_chunk(out)
+    report = dq_io.run_job(spark, src, out, with_models=False,
+                           files_per_chunk=2)
+    assert (report.chunks_run, report.chunks_skipped) == (3, 2)
+    codecs = _chunk_codecs(out)
+    assert codecs.pop(snappy) == {"SNAPPY"}
+    assert list(codecs.values()) == [{"ZSTD"}] * 3
+    keys = [(r["conv_id"], r["turn_idx"], r["text"])
+            for r in _keys(spark, out)]
+    assert len(keys) == len(set(keys)) == 200
+    assert dq_io.committed_turns(out) == 200
+    assert (dq_io.read_metrics(spark, out)
+            .agg(F.sum("n_turns")).first()[0]) == 200
