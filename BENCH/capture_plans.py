@@ -1,10 +1,15 @@
 """Capture the optimized logical plan and the formatted physical plan of
 gate queries into plans/r06/, normalized so before/after dumps compare
-with plain `diff`.
+with plain `diff`, and each gate's generated DuckDB oracle SQL next to
+its plan, as written (no normalization), so one `diff` covers plans and
+oracle text.
 
 Usage: python BENCH/capture_plans.py <suffix> [query ...]
   suffix: file name tail, e.g. 'before' or 'after'
   query:  gate names from queries()/extra_queries(); default: every gate
+
+Writes <gate>_<suffix>.txt (plans) and, for a gate with an oracle in
+oracle_sql()/extra_oracle_sql(), <gate>_<suffix>.sql.
 
 Normalization strips expression ids (`#123`), lambda-variable numbering
 (`lambda x_12` -> `lambda x`), exchange plan ids, RDD ids and uuid-named
@@ -159,11 +164,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(OUT_DIR, exist_ok=True)
     qs = {**entry.queries(), **entry.extra_queries()}
+    oracles = {**entry.oracle_sql(), **entry.extra_oracle_sql()}
     for name in sys.argv[2:] or list(qs):
         df = qs[name](spark, SF_DIR)
         with open(os.path.join(OUT_DIR, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(dump(df))
-        print(f"wrote {name}_{suffix}.txt", flush=True)
+        if name in oracles:
+            with open(os.path.join(OUT_DIR, f"{name}_{suffix}.sql"),
+                      "w") as fh:
+                fh.write(oracles[name])
+        print(f"wrote {name}_{suffix}", flush=True)
     spark.stop()
 
 

@@ -728,8 +728,7 @@ def _q_corpus_curation(spark, sf_dir):
     d = spark.sql(CURATION_FIXTURE_SQL)
     q = textstats.quality_pass_ids(d, CFG)
     s1 = d.join(q, "doc_id")
-    w = Window.partitionBy(
-        F.md5(dedup.normalize_text(F.col("text")))).orderBy("doc_id")
+    w = Window.partitionBy(dedup.fingerprint(F.col("text"))).orderBy("doc_id")
     s2 = (s1.withColumn("_rn", F.row_number().over(w))
           .filter("_rn = 1").drop("_rn"))
     s3 = sampling.stratified_sample(s2, "doc_id", "lang",

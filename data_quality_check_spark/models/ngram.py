@@ -61,7 +61,9 @@ def perplexity_pass(n: int, a, h3, seg3, vpos, model: dict) -> np.ndarray:
     """Score from a precomputed trigram pass (shared with langid).
 
     Stupid backoff: the bigram suffix (bytes p+1, p+2) of each trigram
-    window, hashed with the same polynomial as hashing.ngram_hashes(order=2).
+    window, gathered at vpos and hashed by the kernel's formula
+    (hashing.window_hash) — the bucket hashing.ngram_hashes(order=2)
+    gives the same window.
     """
     lp = np.where(
         model["seen3"][h3],
@@ -76,8 +78,4 @@ def perplexity_pass(n: int, a, h3, seg3, vpos, model: dict) -> np.ndarray:
 
 
 def _suffix_hash(a, vpos):
-    if vpos.size == 0:
-        return np.empty(0, dtype=np.int64)
-    h = a[vpos + 1] * 31 + a[vpos + 2]
-    h = (h * 2654435761) & 0xFFFFFFFF
-    return (h >> 7) & (hashing.N_BUCKETS - 1)
+    return hashing.window_hash([a[vpos + 1], a[vpos + 2]])

@@ -113,9 +113,14 @@ def bpe_train(docs: DataFrame, n_merges: int = 12,
     vocabulary — training is an action loop, not a lazy plan.
     """
     wc = _word_counts(docs, text_col).localCheckpoint()
-    if wc.count() <= driver_vocab_max:
-        rows = [(r["word"], r["cnt"]) for r in wc.collect()]
-        return _train_driver(rows, n_merges)
+    # probe and fetch in ONE job, through Arrow, as resolve_groups does: a
+    # count() first adds jobs, and a row-based collect() py4j-decodes
+    # every row; the driver holds at most driver_vocab_max + 1 words
+    head = wc.limit(driver_vocab_max + 1).toPandas()
+    if len(head) <= driver_vocab_max:
+        return _train_driver(
+            list(zip(head["word"].tolist(), head["cnt"].tolist())),
+            n_merges)
     vocab = wc.select(_spell(F.col("word")).alias("seq"), "cnt") \
         .localCheckpoint()
     merges: list[dict] = []

@@ -43,10 +43,16 @@ def normalize_text(col):
                             "^ | $", "")
 
 
+def fingerprint(col):
+    """Document fingerprint: md5 of the normalized text — the exact-dedup
+    key (DuckDB twin: md5 over the same normalization)."""
+    return F.md5(normalize_text(col))
+
+
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Groups of byte-identical (normalized) texts: fingerprint, group size,
     representative (min doc_id), member list. Only the digest shuffles."""
-    fp = F.md5(normalize_text(F.col(text_col)))
+    fp = fingerprint(F.col(text_col))
     return (
         docs.select(F.col("doc_id"), fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -329,6 +335,7 @@ MINHASH_K = 32          # permutations
 LSH_BANDS = 8           # bands of 4 rows each
 _MERSENNE = (1 << 61) - 1
 _CHAR_SHINGLE = 5
+_MAX_BYTES = 4096  # encode_batch max_bytes for signatures (both engines)
 
 
 def _perm_params(k: int = MINHASH_K) -> tuple[np.ndarray, np.ndarray]:
@@ -351,8 +358,8 @@ def minhash_signatures_np(texts: list, k: int = MINHASH_K) -> np.ndarray:
     """
     n = len(texts)
     a, b = _perm_params(k)
-    buf, starts, _ = hashing.encode_batch(texts, max_bytes=4096)
-    h, seg = hashing.ngram_hashes(buf, starts, _CHAR_SHINGLE, raw=True)
+    buf, starts, _ = hashing.encode_batch(texts, max_bytes=_MAX_BYTES)
+    h, seg, _ = hashing.ngram_hashes(buf, starts, _CHAR_SHINGLE, raw=True)
     out = np.full((n, k), _MERSENNE, dtype=np.int64)
     if h.size:
         # seg is sorted (windows are emitted doc by doc), so the segment
@@ -404,6 +411,13 @@ def _sig_table(docs: DataFrame, k: int, bands: int) -> DataFrame:
 
     return docs.select("doc_id", "text").mapInPandas(
         compute, schema=_SIG_SCHEMA)
+
+
+def _band_rows(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_hash): one row per band of each signature row —
+    all the banding joins ever shuffle."""
+    return sigs.select(
+        "doc_id", F.posexplode("band_hashes").alias("band", "band_hash"))
 
 
 # Hot-band guard for the LSH candidate self-joins: a degenerate band
@@ -488,12 +502,7 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.7,
     # bench sweeps call this repeatedly. Checkpoint blocks are reclaimed
     # with the lineage when the returned plan is garbage collected.
     sig_df = _sig_table(docs, k, bands).localCheckpoint()
-
-    bands_df = sig_df.select(
-        "doc_id",
-        F.posexplode("band_hashes").alias("band", "band_hash"),
-    )
-    cand = _capped_band_pairs(bands_df, ["band", "band_hash"],
+    cand = _capped_band_pairs(_band_rows(sig_df), ["band", "band_hash"],
                               max_band_members)
     return _agreeing_pairs(cand, sig_df, sig_df, ("doc_a", "doc_b"), k,
                            threshold)
@@ -765,8 +774,7 @@ class MinHashIndex:
 
     @property
     def bands(self) -> DataFrame:
-        return self.sigs.select(
-            "doc_id", F.posexplode("band_hashes").alias("band", "band_hash"))
+        return _band_rows(self.sigs)
 
     def capped_bands(self, max_members: int) -> DataFrame:
         """Rank-capped band table (the `max_members` smallest doc_ids per
@@ -841,12 +849,10 @@ def incremental_dedup_pairs(index: MinHashIndex, new_docs: DataFrame,
     the corpus otherwise multiplies every matching new doc by its whole
     population); signatures join back on the candidate pairs only."""
     new_sig = _sig_table(new_docs, index.k, index.n_bands).localCheckpoint()
-    new_bands = new_sig.select(
-        "doc_id", F.posexplode("band_hashes").alias("band", "band_hash"))
     # rank cap computed once per index, not once per batch
     cbands = index.capped_bands(max_band_members)
     cand = (
-        new_bands.alias("n").join(
+        _band_rows(new_sig).alias("n").join(
             cbands.alias("c"),
             (F.col("n.band") == F.col("c.band"))
             & (F.col("n.band_hash") == F.col("c.band_hash")))
@@ -856,73 +862,6 @@ def incremental_dedup_pairs(index: MinHashIndex, new_docs: DataFrame,
     )
     return _agreeing_pairs(cand, new_sig, index.sigs,
                            ("new_doc", "corpus_doc"), index.k, threshold)
-
-
-def incremental_minhash_sql(corpus_where: str, new_where: str,
-                            threshold: float = 0.5, k: int = MINHASH_K,
-                            bands: int = LSH_BANDS,
-                            table: str = "documents",
-                            max_band_members: int = MAX_BAND_MEMBERS
-                            ) -> str:
-    """DuckDB twin of minhash_build + incremental_dedup_pairs over two
-    WHERE-disjoint slices of one table."""
-    rows_per_band = k // bands
-    a, b = _perm_params(k)
-    perm_rows = ", ".join(
-        f"({i}, {int(a[i])}, {int(b[i])})" for i in range(k))
-    bh = "s[1]"
-    for j in range(1, rows_per_band):
-        bh = (f"(({bh} % 2147483648) * 1000003 + s[{j + 1}])"
-              f" % {_MERSENNE}")
-    return f"""
-WITH {_bytes_cte(table)},
-hs AS (
-  SELECT doc_id, CASE WHEN len(bts) >= {_CHAR_SHINGLE}
-    THEN list_transform(range(0, len(bts)-{_CHAR_SHINGLE - 1}),
-                        i -> {_byte_poly_sql(_CHAR_SHINGLE)})
-    ELSE [] END AS h
-  FROM bt
-),
-perms(p, a, b) AS (VALUES {perm_rows}),
-sigs AS (
-  SELECT doc_id, p,
-    coalesce(list_min(list_transform(h, x -> (a*x + b) % {_MERSENNE})),
-             {_MERSENNE}) AS sig
-  FROM hs, perms
-),
-bh AS (
-  SELECT doc_id, band, {bh} AS band_hash FROM (
-    SELECT doc_id, p // {rows_per_band} AS band,
-           list(sig ORDER BY p) AS s
-    FROM sigs GROUP BY doc_id, p // {rows_per_band}
-  )
-),
-cm AS (
-  SELECT *, row_number() OVER (PARTITION BY band, band_hash
-                               ORDER BY doc_id) AS rk
-  FROM (SELECT bh.* FROM bh JOIN {table} d USING (doc_id)
-        WHERE {corpus_where})
-),
-cand AS (
-  SELECT DISTINCT n.doc_id AS new_doc, c.doc_id AS corpus_doc
-  FROM (SELECT bh.* FROM bh JOIN {table} d USING (doc_id)
-        WHERE {new_where}) n
-  JOIN cm c
-    ON n.band = c.band AND n.band_hash = c.band_hash
-  WHERE c.rk <= {max_band_members}
-),
-agree AS (
-  SELECT c.new_doc, c.corpus_doc,
-    sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_agree
-  FROM cand c
-  JOIN sigs sa ON sa.doc_id = c.new_doc
-  JOIN sigs sb ON sb.doc_id = c.corpus_doc AND sb.p = sa.p
-  GROUP BY c.new_doc, c.corpus_doc
-)
-SELECT new_doc, corpus_doc,
-  CAST(floor(CAST(n_agree AS DOUBLE) / {k} * 1e6) AS BIGINT) AS est_u
-FROM agree WHERE CAST(n_agree AS DOUBLE) / {k} >= {threshold}
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -936,8 +875,8 @@ def simhash_np(texts: list) -> np.ndarray:
     """32-bit SimHash per text from char-trigram bucket hashes (vectorized:
     per-bit signed segment sums)."""
     n = len(texts)
-    buf, starts, _ = hashing.encode_batch(texts, max_bytes=4096)
-    hv, seg = hashing.ngram_hashes(buf, starts, 3, raw=True)
+    buf, starts, _ = hashing.encode_batch(texts, max_bytes=_MAX_BYTES)
+    hv, seg, _ = hashing.ngram_hashes(buf, starts, 3, raw=True)
     out = np.zeros(n, dtype=np.int64)
     for bit in range(SIMHASH_BITS):
         signed = (((hv >> bit) & 1) * 2 - 1).astype(np.float64)
@@ -1013,12 +952,14 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
 # direct product would overflow BIGINT (numpy wraps mod 2^64, which is
 # congruent mod 2^32 — the split reproduces exactly that).
 
-_MAX_BYTES = 4096  # encode_batch max_bytes for signatures
-
 
 def _byte_poly_sql(order: int) -> str:
     """Rolling polynomial + 32-bit mix over `order` consecutive bytes —
-    the SQL form of hashing.ngram_hashes(raw=True)."""
+    the SQL form of the one numpy kernel, hashing.ngram_hashes(raw=True)
+    (formula: hashing.window_hash). Each step is reduced mod 2^48 and the
+    mix goes through the 16-bit split so no BIGINT step overflows; both
+    leave the low 32 bits numpy's wrapping int64 gives. Change the two
+    together."""
     e = "bts[CAST(i+1 AS INT)]"
     for j in range(2, order + 1):
         e = f"(({e}) * 31 + bts[CAST(i+{j} AS INT)]) % 281474976710656"
@@ -1035,13 +976,12 @@ def _bytes_cte(table: str = "documents") -> str:
 )"""
 
 
-def minhash_pairs_sql(threshold: float = 0.5, k: int = MINHASH_K,
-                      bands: int = LSH_BANDS,
-                      table: str = "documents",
-                      max_band_members: int = MAX_BAND_MEMBERS) -> str:
-    """DuckDB twin of minhash_lsh_pairs: same signatures (permutation
-    constants embedded), same banding, same rank-capped candidate join,
-    same estimated-Jaccard filter — emits (doc_a, doc_b, est_u) where
+def _minhash_sql(k: int, bands: int, table: str, cand: str,
+                 ids: tuple[str, str], threshold: float) -> str:
+    """The MinHash SQL core shared by both twins: signatures (permutation
+    constants embedded), band hashes, then the `cand` CTEs (a `cand` of
+    (ids[0], ids[1]) pairs, plus whatever it needs) and the signature
+    agreement filter — emits (ids[0], ids[1], est_u) where
     est_u = floor(n_agree/k * 1e6), exact in both engines."""
     rows_per_band = k // bands
     a, b = _perm_params(k)
@@ -1051,6 +991,7 @@ def minhash_pairs_sql(threshold: float = 0.5, k: int = MINHASH_K,
     for j in range(1, rows_per_band):
         bh = (f"(({bh} % 2147483648) * 1000003 + s[{j + 1}])"
               f" % {_MERSENNE}")
+    x, y = ids
     return f"""
 WITH {_bytes_cte(table)},
 hs AS (
@@ -1074,7 +1015,28 @@ bh AS (
     FROM sigs GROUP BY doc_id, p // {rows_per_band}
   )
 ),
-mem AS (
+{cand},
+agree AS (
+  SELECT c.{x}, c.{y},
+    sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_agree
+  FROM cand c
+  JOIN sigs sa ON sa.doc_id = c.{x}
+  JOIN sigs sb ON sb.doc_id = c.{y} AND sb.p = sa.p
+  GROUP BY c.{x}, c.{y}
+)
+SELECT {x}, {y},
+  CAST(floor(CAST(n_agree AS DOUBLE) / {k} * 1e6) AS BIGINT) AS est_u
+FROM agree WHERE CAST(n_agree AS DOUBLE) / {k} >= {threshold}
+"""
+
+
+def minhash_pairs_sql(threshold: float = 0.5, k: int = MINHASH_K,
+                      bands: int = LSH_BANDS,
+                      table: str = "documents",
+                      max_band_members: int = MAX_BAND_MEMBERS) -> str:
+    """DuckDB twin of minhash_lsh_pairs: same signatures, same banding,
+    same rank-capped candidate join, same estimated-Jaccard filter."""
+    cand = f"""mem AS (
   SELECT doc_id, band, band_hash,
     row_number() OVER (PARTITION BY band, band_hash ORDER BY doc_id) AS rk
   FROM bh
@@ -1084,19 +1046,35 @@ cand AS (
                   greatest(a.doc_id, m.doc_id) AS doc_b
   FROM bh a JOIN mem m ON a.band = m.band AND a.band_hash = m.band_hash
   WHERE m.rk <= {max_band_members} AND a.doc_id <> m.doc_id
+)"""
+    return _minhash_sql(k, bands, table, cand, ("doc_a", "doc_b"),
+                        threshold)
+
+
+def incremental_minhash_sql(corpus_where: str, new_where: str,
+                            threshold: float = 0.5, k: int = MINHASH_K,
+                            bands: int = LSH_BANDS,
+                            table: str = "documents",
+                            max_band_members: int = MAX_BAND_MEMBERS
+                            ) -> str:
+    """DuckDB twin of minhash_build + incremental_dedup_pairs over two
+    WHERE-disjoint slices of one table."""
+    cand = f"""cm AS (
+  SELECT *, row_number() OVER (PARTITION BY band, band_hash
+                               ORDER BY doc_id) AS rk
+  FROM (SELECT bh.* FROM bh JOIN {table} d USING (doc_id)
+        WHERE {corpus_where})
 ),
-agree AS (
-  SELECT c.doc_a, c.doc_b,
-    sum(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS n_agree
-  FROM cand c
-  JOIN sigs sa ON sa.doc_id = c.doc_a
-  JOIN sigs sb ON sb.doc_id = c.doc_b AND sb.p = sa.p
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT doc_a, doc_b,
-  CAST(floor(CAST(n_agree AS DOUBLE) / {k} * 1e6) AS BIGINT) AS est_u
-FROM agree WHERE CAST(n_agree AS DOUBLE) / {k} >= {threshold}
-"""
+cand AS (
+  SELECT DISTINCT n.doc_id AS new_doc, c.doc_id AS corpus_doc
+  FROM (SELECT bh.* FROM bh JOIN {table} d USING (doc_id)
+        WHERE {new_where}) n
+  JOIN cm c
+    ON n.band = c.band AND n.band_hash = c.band_hash
+  WHERE c.rk <= {max_band_members}
+)"""
+    return _minhash_sql(k, bands, table, cand, ("new_doc", "corpus_doc"),
+                        threshold)
 
 
 def simhash_pairs_sql(max_hamming: int = 3,

@@ -20,9 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .sampling import HEX_DIGITS, _SPACE, key_hex_sql
-
-_FMT = f"0{HEX_DIGITS}x"
+from .sampling import HEX_DIGITS, _SPACE, _keep_cond, _key_hex, key_hex_sql
 
 
 def budget_threshold(total_tokens: int, budget: int) -> int:
@@ -45,12 +43,7 @@ def sample_to_budget(df: DataFrame, budget: int, key_col: str = "doc_id",
     dropped whole, so the realized total varies by ~one document)."""
     total = df.agg(F.sum(F.col(tokens_col).cast("long"))).collect()[0][0]
     thr = budget_threshold(int(total or 0), budget)
-    if thr >= _SPACE:
-        return df
-    if thr <= 0:
-        return df.filter(F.lit(False))
-    h = F.substring(F.md5(F.col(key_col).cast("string")), 1, HEX_DIGITS)
-    return df.filter(h < F.lit(format(thr, _FMT)))
+    return df.filter(_keep_cond(_key_hex(F.col(key_col)), thr))
 
 
 def mix_corpora(sources: dict[str, tuple[DataFrame, int]],

@@ -2,7 +2,8 @@
 
 Sampling at 100 TB must be (a) reproducible across runs and engines —
 never rand()-seeded per task, whose draw order depends on partitioning —
-and (b) stable under appends: a row's fate depends only on its own key. Both come from hashing the key with md5 (identical bytes in Spark,
+and (b) stable under appends: a row's fate depends only on its own key.
+Both come from hashing the key with md5 (identical bytes in Spark,
 DuckDB, and Python) and comparing a fixed-width HEX PREFIX against
 thresholds computed from the requested fractions. No shuffle at all:
 every decision is a per-row narrow expression, so the sample/split
@@ -31,9 +32,9 @@ def _bucket(frac: float) -> int:
     it CANNOT be rendered as a HEX_DIGITS-wide hex string (format() yields
     the 5-char '10000', which sorts BELOW most 4-char draws — 'ffff' >
     '10000' lexicographically — so a frac≈1.0 threshold would silently
-    keep only the '0...' prefix bucket, ~6%). Callers must short-circuit
-    bucket >= _SPACE to an always-true arm and bucket <= 0 to always-false
-    instead of comparing hex strings."""
+    keep only the '0...' prefix bucket, ~6%). _keep_cond and _keep_sql
+    short-circuit bucket >= _SPACE to always-true and bucket <= 0 to
+    always-false instead of comparing hex strings."""
     return min(_SPACE, max(0, round(frac * _SPACE)))
 
 
@@ -42,9 +43,29 @@ def _thresh_hex(bucket: int) -> str:
     return format(bucket, f"0{HEX_DIGITS}x")
 
 
+def _keep_cond(h: Column, bucket: int) -> Column:
+    """Keep condition draw < threshold for an integer bucket (_bucket,
+    mixing.budget_threshold), with the full/empty short-circuits. A
+    keep-all Filter(true) is pruned by the optimizer."""
+    if bucket >= _SPACE:
+        return F.lit(True)
+    if bucket <= 0:
+        return F.lit(False)
+    return h < F.lit(_thresh_hex(bucket))
+
+
 def key_hex_sql(key_expr: str) -> str:
     """DuckDB twin of _key_hex."""
     return f"substr(md5(CAST({key_expr} AS VARCHAR)), 1, {HEX_DIGITS})"
+
+
+def _keep_sql(h: str, bucket: int) -> str:
+    """DuckDB twin of _keep_cond."""
+    if bucket >= _SPACE:
+        return "TRUE"
+    if bucket <= 0:
+        return "FALSE"
+    return f"{h} < '{_thresh_hex(bucket)}'"
 
 
 def _sql_str(s: str) -> str:
@@ -59,12 +80,7 @@ def sample_fraction(df: DataFrame, key_col: str, frac: float) -> DataFrame:
     hex draw < thresh — the same rows every run, every engine, every
     partitioning. frac >= 1 - 1/(2·_SPACE) keeps everything (see _bucket:
     the full-space threshold has no comparable hex rendering)."""
-    b = _bucket(frac)
-    if b >= _SPACE:
-        return df
-    if b <= 0:
-        return df.filter(F.lit(False))
-    return df.filter(_key_hex(F.col(key_col)) < F.lit(_thresh_hex(b)))
+    return df.filter(_keep_cond(_key_hex(F.col(key_col)), _bucket(frac)))
 
 
 def split_column(key_col: str, weights: dict[str, float]) -> Column:
@@ -84,28 +100,10 @@ def split_column(key_col: str, weights: dict[str, float]) -> Column:
         cum += weights[name]
         arms.append((name, _bucket(cum)))
     for name, b in reversed(arms):
-        # cumulative bucket at/above the full space absorbs every row
-        # (hex rendering of _SPACE is uncomparable — see _bucket); at/below
-        # zero it matches nothing
-        if b >= _SPACE:
-            cond = F.lit(True)
-        elif b <= 0:
-            cond = F.lit(False)
-        else:
-            cond = h < F.lit(_thresh_hex(b))
-        expr = F.when(cond, F.lit(name)).otherwise(expr)
+        # cumulative bucket at/above the full space absorbs every row; at/
+        # below zero it matches nothing
+        expr = F.when(_keep_cond(h, b), F.lit(name)).otherwise(expr)
     return expr
-
-
-def _keep_cond(h: Column, frac: float) -> Column:
-    """Keep condition for one fraction with the full/empty short-circuits
-    (see _bucket: the full-space threshold has no comparable rendering)."""
-    b = _bucket(frac)
-    if b >= _SPACE:
-        return F.lit(True)
-    if b <= 0:
-        return F.lit(False)
-    return h < F.lit(_thresh_hex(b))
 
 
 def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
@@ -117,10 +115,10 @@ def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
     listed use default_frac. Same key-hash discipline as sample_fraction:
     zero shuffle, append-stable, engine-identical."""
     h = _key_hex(F.col(key_col))
-    keep = _keep_cond(h, default_frac)
+    keep = _keep_cond(h, _bucket(default_frac))
     for name, frac in fracs.items():
         keep = F.when(F.col(strata_col) == name,
-                      _keep_cond(h, frac)).otherwise(keep)
+                      _keep_cond(h, _bucket(frac))).otherwise(keep)
     return df.filter(keep)
 
 
@@ -130,18 +128,10 @@ def stratified_sample_sql(key_expr: str, strata_expr: str,
     """DuckDB boolean twin of stratified_sample (same thresholds, same
     short-circuits, same arm order)."""
     h = key_hex_sql(key_expr)
-
-    def cond(frac: float) -> str:
-        b = _bucket(frac)
-        if b >= _SPACE:
-            return "TRUE"
-        if b <= 0:
-            return "FALSE"
-        return f"{h} < '{_thresh_hex(b)}'"
-
-    arms = " ".join(f"WHEN {strata_expr} = {_sql_str(n)} THEN {cond(f)}"
-                    for n, f in fracs.items())
-    return f"CASE {arms} ELSE {cond(default_frac)} END"
+    arms = " ".join(
+        f"WHEN {strata_expr} = {_sql_str(n)} THEN {_keep_sql(h, _bucket(f))}"
+        for n, f in fracs.items())
+    return f"CASE {arms} ELSE {_keep_sql(h, _bucket(default_frac))} END"
 
 
 # literal-map size bound for pack_shards' per-partition offsets; above
@@ -222,12 +212,6 @@ def split_column_sql(key_expr: str, weights: dict[str, float]) -> str:
     arms = []
     for name in names[:-1]:
         cum += weights[name]
-        b = _bucket(cum)
-        if b >= _SPACE:
-            cond = "TRUE"
-        elif b <= 0:
-            cond = "FALSE"
-        else:
-            cond = f"{h} < '{_thresh_hex(b)}'"
-        arms.append(f"WHEN {cond} THEN {_sql_str(name)}")
+        arms.append(
+            f"WHEN {_keep_sql(h, _bucket(cum))} THEN {_sql_str(name)}")
     return "CASE " + " ".join(arms) + f" ELSE {_sql_str(names[-1])} END"

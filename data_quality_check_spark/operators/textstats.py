@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_RULESET, RuleSet
 from ..functions import rules
-from ..operators.dedup import normalize_text
+from ..operators.dedup import fingerprint
 from ..operators.guards import barrier_filter
 
 
@@ -158,7 +158,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     engines), used as the exact-dedup key."""
     return docs.select(
         "doc_id",
-        F.md5(normalize_text(F.col(text_col))).alias("fingerprint"),
+        fingerprint(F.col(text_col)).alias("fingerprint"),
     )
 
 

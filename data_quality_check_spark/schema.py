@@ -24,22 +24,3 @@ SCORES_TYPE = T.StructType([
     T.StructField("lang_conf", T.DoubleType()),
     T.StructField("ppl", T.DoubleType()),
 ])
-
-LABELED_EXTRA_FIELDS = [
-    T.StructField("keep", T.BooleanType()),
-    T.StructField("drop_reasons", T.ArrayType(T.StringType())),
-    T.StructField("text_scrubbed", T.StringType()),
-    T.StructField("lang", T.StringType()),
-    T.StructField("lang_conf", T.DoubleType()),
-    T.StructField("ppl", T.DoubleType()),
-]
-
-METRICS_SCHEMA = T.StructType([
-    T.StructField("partition_id", T.IntegerType()),
-    T.StructField("input_file", T.StringType()),
-    T.StructField("n_turns", T.LongType()),
-    T.StructField("n_kept", T.LongType()),
-    T.StructField("n_dropped", T.LongType()),
-    T.StructField("reason_counts", T.MapType(T.StringType(), T.LongType())),
-    T.StructField("ruleset_version", T.StringType()),
-])

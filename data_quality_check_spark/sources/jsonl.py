@@ -125,10 +125,6 @@ def build_struct(spec: tuple[FieldSpec, ...]) -> T.StructType:
     return T.StructType(out)
 
 
-JSON_SCHEMA = build_struct(TRANSCRIPT_SPEC)
-_FIELDS = tuple(f.name for f in TRANSCRIPT_SPEC)
-
-
 def unescape(col: Column) -> Column:
     """D2: if the payload is a double-encoded JSON string ("{\"a\":1}"),
     decode one level; otherwise pass through (json_validation.rs:151-163).

@@ -174,3 +174,38 @@ def test_word_cap_bounds_symbol_explosion(spark):
     merges = bpe.bpe_train(docs, n_merges=2)
     # the 5000-char blob is excluded, so no merge count reflects it
     assert all(m["cnt"] < 100 for m in merges)
+
+
+@pytest.mark.parametrize("parts", [1, 16])
+def test_driver_path_fetches_vocabulary_in_one_job(spark, monkeypatch,
+                                                   parts):
+    """After its eager checkpoint, a driver-path bpe_train probes the
+    vocabulary size and fetches it in ONE Spark job (no count() before
+    the fetch, no row-based collect), and the merge counts stay Python
+    ints."""
+    sc = spark.sparkContext
+    group = f"test-bpe-driver-fetch-{parts}"
+    real = bpe._word_counts
+
+    class _GroupAfterCheckpoint:
+        def __init__(self, df):
+            self.df = df
+
+        def localCheckpoint(self):
+            ck = self.df.localCheckpoint()
+            sc.setJobGroup(group, "bpe_train after its checkpoint")
+            return ck
+
+    monkeypatch.setattr(bpe, "_word_counts", lambda docs, col:
+                        _GroupAfterCheckpoint(real(docs, col)))
+    rows = [(i, w) for i, w in enumerate(
+        w for w, c in WORDS.items() for _ in range(c))]
+    docs = spark.createDataFrame(rows, "doc_id long, text string") \
+        .repartition(parts)
+    try:
+        got = bpe.bpe_train(docs, n_merges=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == _ref_train(WORDS, 8)
+    assert all(type(m["cnt"]) is int for m in got)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
