@@ -107,9 +107,7 @@ def _q_qf_pipeline(spark, sf_dir):
 
 
 def _q_qf_validate(spark, sf_dir):
-    t = transcripts.load(spark, sf_dir)
-    from pyspark.sql import Window
-    dup = F.count(F.lit(1)).over(Window.partitionBy("conv_id", "turn_idx"))
+    t, dup = pipeline.dup_flag_column(transcripts.load(spark, sf_dir))
     cols = {c: F.col(c) for c in ("conv_id", "turn_idx", "role", "text",
                                   "tool", "ts")}
     flags = rules.validation_flags(cols, CFG, dup)

@@ -10,13 +10,14 @@ the per-request rebuild inefficiency disappears by construction.
 Threshold comparison directions are documented field-by-field; every rule
 uses per-row float64 math so keep/drop decisions cannot flip with batch
 geometry or parallelism.
+
+Rule LISTS are not fields: all three engines read the stopwords and the
+toxic lexicon from `corpus` (STOPWORDS_ALL, TOXIC_TERMS).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from . import corpus
 
 
 @dataclass(frozen=True)
@@ -54,13 +55,6 @@ class RuleSet:
     max_perplexity: float = 10000.0  # drop if char-LM ppl > max
     # (calibrated: natural 4-lang seed text ≈ 1.4k–2.6k, random junk ≈ 58k,
     #  symbol soup ≈ 159k — see tests/test_models.py)
-
-    # --- scrub ---
-    toxic_terms: tuple[str, ...] = tuple(corpus.TOXIC_TERMS)
-
-    # stopwords used by the heuristic rule (union across langs so the rule
-    # stays language-independent and SQL-expressible)
-    stopwords: tuple[str, ...] = tuple(corpus.STOPWORDS_ALL)
 
 
 # Ordered drop-reason names; drop_reasons arrays are always emitted in this

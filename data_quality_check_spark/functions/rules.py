@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from .. import corpus
 from ..config import RuleSet
 
 # Shared regex constants (common Java/RE2/Python subset — explicit ASCII +
@@ -76,6 +77,19 @@ def ws_words_sql(expr: str) -> str:
     return f"list_filter(string_split_regex({expr}, '{WS}'), w -> w <> '')"
 
 
+def word_ngrams(words: Column, n: int) -> Column:
+    """The space-joined word n-grams of `words`, in order: zip_with over n
+    shifted slices (r6: ~20% faster than per-position slice+array_join).
+    Callers guard size(words) >= n themselves, and give `words` its OWN
+    projection first: inlined, the split re-runs per slice, ~12x slower."""
+    m = F.size(words) - (n - 1)
+    grams = F.slice(words, 1, m)
+    for j in range(2, n + 1):
+        grams = F.zip_with(grams, F.slice(words, j, m),
+                           lambda a, b: F.concat(a, F.lit(" "), b))
+    return grams
+
+
 def ws_token_count(text: Column) -> Column:
     """Number of whitespace words (0 for NULL text)."""
     return F.coalesce(F.size(ws_words(text)), F.lit(0))
@@ -107,7 +121,8 @@ def feature_columns_from(text: Column, words: Column,
         n_chars > 0, n_sym.cast("double") / n_chars.cast("double")
     ).otherwise(F.lit(0.0))
     n_stop = F.coalesce(
-        F.size(F.filter(words, lambda w: F.lower(w).isin(*_stops()))),
+        F.size(F.filter(
+            words, lambda w: F.lower(w).isin(*corpus.STOPWORDS_ALL))),
         F.lit(0),
     )
     stopword_frac = F.when(
@@ -160,12 +175,6 @@ def feature_columns_from(text: Column, words: Column,
         "bullet_frac": bullet_frac,
         "ellipsis_frac": ellipsis_frac,
     }
-
-
-def _stops() -> list:
-    from ..config import DEFAULT_RULESET
-
-    return list(DEFAULT_RULESET.stopwords)
 
 
 def validation_flags(df_cols: dict[str, Column], cfg: RuleSet,
@@ -230,7 +239,7 @@ def reasons_array(flags: list[tuple[str, Column]]) -> Column:
 
 def feature_sql(text: str = "text") -> dict[str, str]:
     """DuckDB SQL expression per feature, matching feature_columns()."""
-    stops = ", ".join(f"'{s}'" for s in _stops())
+    stops = ", ".join(f"'{s}'" for s in corpus.STOPWORDS_ALL)
     words = ws_words_sql(text)
     lines = f"string_split({text}, chr(10))"
     n_words = f"coalesce(len({words}), 0)"

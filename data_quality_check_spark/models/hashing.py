@@ -111,6 +111,14 @@ def count_table(texts, order: int) -> np.ndarray:
     return np.bincount(h, minlength=N_BUCKETS).astype(np.float64)
 
 
+def smoothed_log_probs(counts: np.ndarray) -> np.ndarray:
+    """Add-1/2 smoothed log-probabilities of a bucket count table,
+    log((c + 0.5) / (sum(c) + 0.5 * N_BUCKETS)) in that float64 order: the
+    one table formula langid, the LM's suffix-bigram backoff and the
+    quality classifier train with."""
+    return np.log((counts + 0.5) / (counts.sum() + 0.5 * N_BUCKETS))
+
+
 def segment_sum(values: np.ndarray, seg: np.ndarray, n: int) -> np.ndarray:
     """Sum `values` grouped by segment id into an array of length n."""
     return np.bincount(seg, weights=values, minlength=n)

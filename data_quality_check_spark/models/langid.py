@@ -32,10 +32,8 @@ def train(sentences: dict[str, list[str]] | None = None) -> dict:
     langs = sorted(sentences)
     table = np.zeros((len(langs), hashing.N_BUCKETS), dtype=np.float64)
     for i, lang in enumerate(langs):
-        counts = hashing.count_table(sentences[lang], ORDER)
-        table[i] = np.log(
-            (counts + 0.5) / (counts.sum() + 0.5 * hashing.N_BUCKETS)
-        )
+        table[i] = hashing.smoothed_log_probs(
+            hashing.count_table(sentences[lang], ORDER))
     return {"langs": np.array(langs, dtype=object), "table": table}
 
 

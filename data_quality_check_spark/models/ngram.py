@@ -38,12 +38,10 @@ def train(sentences: list[str] | None = None) -> dict:
         ]
     c3 = hashing.count_table(sentences, ORDER)
     c2 = hashing.count_table(sentences, ORDER - 1)
-    total3 = c3.sum()
-    total2 = c2.sum()
     # log P3 only valid where c3>0; store -inf elsewhere (never read there)
     with np.errstate(divide="ignore"):
-        lp3 = np.log(c3 / total3)
-    lp2s = np.log((c2 + 0.5) / (total2 + 0.5 * hashing.N_BUCKETS))
+        lp3 = np.log(c3 / c3.sum())
+    lp2s = hashing.smoothed_log_probs(c2)
     seen3 = c3 > 0
     return {"lp3": lp3, "lp2s": lp2s, "seen3": seen3}
 

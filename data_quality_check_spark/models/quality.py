@@ -56,11 +56,14 @@ def train(pos: list[str] | None = None,
         neg = corpus.QUALITY_NEGATIVES
     cp = hashing.count_table(pos, ORDER)
     cn = hashing.count_table(neg, ORDER)
-    w = (
-        np.log((cp + 0.5) / (cp.sum() + 0.5 * hashing.N_BUCKETS))
-        - np.log((cn + 0.5) / (cn.sum() + 0.5 * hashing.N_BUCKETS))
-    )
-    return {"w": w}
+    return _nb_weights(cp, cn)
+
+
+def _nb_weights(cp: np.ndarray, cn: np.ndarray) -> dict:
+    """The naive-Bayes log-odds weights of positive/negative bucket
+    counts: the model train and train_spark both return."""
+    return {"w": hashing.smoothed_log_probs(cp)
+            - hashing.smoothed_log_probs(cn)}
 
 
 def _counts_spark(df, text_col: str) -> np.ndarray:
@@ -104,11 +107,7 @@ def train_spark(pos_df, neg_df, text_col: str = "text") -> dict:
     — pinned by tests/test_models.py."""
     cp = _counts_spark(pos_df, text_col)
     cn = _counts_spark(neg_df, text_col)
-    w = (
-        np.log((cp + 0.5) / (cp.sum() + 0.5 * hashing.N_BUCKETS))
-        - np.log((cn + 0.5) / (cn.sum() + 0.5 * hashing.N_BUCKETS))
-    )
-    return {"w": w}
+    return _nb_weights(cp, cn)
 
 
 def train_from_sources(docs, pos_sources, neg_sources,

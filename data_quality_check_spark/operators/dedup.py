@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.rules import WS, ws_words, ws_words_sql
+from ..functions.rules import WS, word_ngrams, ws_words, ws_words_sql
 from ..functions.udfs import guard_zip_rereads
 from ..models import hashing
 from .guards import barrier_filter, rank_cap
@@ -71,28 +71,12 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def shingle_set(docs: DataFrame, n: int = 3) -> DataFrame:
     """Distinct (doc_id, shingle) word-n-gram set — the shared front end
     of Jaccard dedup and cross-corpus contamination. Short docs (< n
-    words) contribute their whole text as one shingle.
-
-    The words array is materialized in its OWN projection before the
-    shingle transform: the lambda slices it once per shingle, and
-    inlining the split+filter expression into every slice (what
-    CollapseProject does to a single-projection form) makes the explode
-    O(words²) per doc — measured ~12x slower (CLAUDE.md perf notes)."""
+    words) contribute their whole text as one shingle. The words array
+    gets its OWN projection before rules.word_ngrams slices it."""
     wdf = docs.select("doc_id",
                       ws_words(F.lower(F.col("text"))).alias("_ws"))
     words = F.col("_ws")
-    nw = F.size(words)
-    # shingle strings via zip_with over n SHIFTED slices of the words
-    # array (r6): each slice is evaluated once per row and the lambda
-    # does one concat per shingle — measured ~20% faster than the
-    # per-position slice+array_join transform, byte-identical output
-    # (verified exhaustively at sf0.1)
-    m = nw - (n - 1)
-    shingled = F.slice(words, 1, m)
-    for j in range(2, n + 1):
-        shingled = F.zip_with(shingled, F.slice(words, j, m),
-                              lambda a, b: F.concat(a, F.lit(" "), b))
-    shingles = F.when(nw >= n, shingled) \
+    shingles = F.when(F.size(words) >= n, word_ngrams(words, n)) \
         .otherwise(F.array(F.array_join(words, " ")))
     return wdf.select("doc_id", F.explode(shingles).alias("shingle")) \
         .distinct()
@@ -573,8 +557,8 @@ def dedup_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     )
-    norm = F.regexp_replace(F.regexp_replace(F.lower(F.col("line")),
-                                             "[ \t\r]+", " "), "^ | $", "")
+    # a line holds no newline, so this equals the SQL twin's normalization
+    norm = normalize_text(F.col("line"))
     # two consumers (first-occurrence agg + keep join): materialize the
     # explode+normalize+md5 work once instead of re-scanning the corpus
     hashed = lines.withColumn("_blank", norm == "") \

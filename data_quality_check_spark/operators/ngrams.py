@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.rules import WS, ws_words  # ONE whitespace class
+from ..functions.rules import WS, word_ngrams, ws_words
 
 
 def ngram_counts(docs: DataFrame, n: int = 2, text_col: str = "text",
@@ -29,17 +29,10 @@ def ngram_counts(docs: DataFrame, n: int = 2, text_col: str = "text",
     as (ngram, n_occurrences). Unlike dedup's shingle_set this counts
     every occurrence (no per-doc distinct) — it estimates a distribution,
     not a membership set."""
-    # Materialize the words array in its OWN projection first: the
-    # transform lambda indexes it per n-gram, and CollapseProject would
-    # otherwise inline the split+filter expression into every access —
-    # O(words²) per doc, measured 12x slower (CLAUDE.md perf notes).
+    # words in their OWN projection first (rules.word_ngrams)
     wdf = docs.select(ws_words(F.lower(F.col(text_col))).alias("_ws"))
     ws = F.col("_ws")
-    nw = F.size(ws)
-    grams = F.when(nw >= n, F.transform(
-        F.sequence(F.lit(0), nw - n),
-        lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
-    )).otherwise(F.array())
+    grams = F.when(F.size(ws) >= n, word_ngrams(ws, n)).otherwise(F.array())
     out = (wdf.select(F.explode(grams).alias("ngram"))
            .groupBy("ngram")
            .agg(F.count(F.lit(1)).alias("n_occurrences")))

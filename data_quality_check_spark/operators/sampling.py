@@ -170,7 +170,9 @@ def pack_shards(df: DataFrame, budget: int, id_col: str = "doc_id",
     for r in psums:
         offsets[int(r["_pid"])] = acc
         acc += int(r["_ps"])
-    if len(offsets) <= MAP_OFFSETS_MAX:
+    # no partitions (empty input): an empty map literal has no key type,
+    # so the empty offsets table joins instead
+    if 0 < len(offsets) <= MAP_OFFSETS_MAX:
         omap = F.create_map(*[x for pid, off in offsets.items()
                               for x in (F.lit(pid), F.lit(off))])
         parts = parts.withColumn("_off", omap[F.col("_pid")])

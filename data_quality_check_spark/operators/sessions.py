@@ -26,6 +26,19 @@ from pyspark.sql import DataFrame, Window, functions as F
 _DAY_S = 86400
 
 
+def _gap_runs(df: DataFrame, w, start: str, end: str, gap_s: int,
+              flag: str):
+    """The new-session flag and its running count over window `w`:
+    `flag` is 1 where a row has no predecessor or starts more than gap_s
+    after the predecessor's `end`. Returns (df with `flag`, the running
+    count Column, 1 at each partition's first row)."""
+    prev_end = F.lag(end).over(w)
+    new_s = F.when(prev_end.isNull() | ((F.col(start) - prev_end) > gap_s),
+                   F.lit(1)).otherwise(F.lit(0))
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return df.withColumn(flag, new_s), F.sum(flag).over(run)
+
+
 def sessionize(events: DataFrame, gap_s: int = 1800,
                user_col: str = "user_id", ts_col: str = "ts",
                id_col: str = "event_id", bounded: bool = True) -> DataFrame:
@@ -39,14 +52,8 @@ def sessionize(events: DataFrame, gap_s: int = 1800,
 
     if not bounded:
         w = Window.partitionBy(user_col).orderBy("_te", F.col(id_col))
-        new_s = F.when(
-            F.lag("_te").over(w).isNull()
-            | ((F.col("_te") - F.lag("_te").over(w)) > gap_s),
-            F.lit(1)).otherwise(F.lit(0))
-        run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        sess = (base.withColumn("_new", new_s)
-                .withColumn("session_idx",
-                            (F.sum("_new").over(run) - 1).cast("int")))
+        sess, runs = _gap_runs(base, w, "_te", "_te", gap_s, "_new")
+        sess = sess.withColumn("session_idx", (runs - 1).cast("int"))
         return sess.groupBy(user_col, "session_idx").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("_te").alias("start_epoch"),
@@ -58,13 +65,8 @@ def sessionize(events: DataFrame, gap_s: int = 1800,
     # (user, day); no single key ever holds more than one user-day
     day = base.withColumn("_day", F.floor(F.col("_te") / _DAY_S))
     wd = Window.partitionBy(user_col, "_day").orderBy("_te", F.col(id_col))
-    new_local = F.when(
-        F.lag("_te").over(wd).isNull()
-        | ((F.col("_te") - F.lag("_te").over(wd)) > gap_s),
-        F.lit(1)).otherwise(F.lit(0))
-    run_d = wd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = (day.withColumn("_new", new_local)
-             .withColumn("_lsess", F.sum("_new").over(run_d)))
+    local, runs = _gap_runs(day, wd, "_te", "_te", gap_s, "_new")
+    local = local.withColumn("_lsess", runs)
     day_sess = local.groupBy(user_col, "_day", "_lsess").agg(
         F.count(F.lit(1)).alias("_n"),
         F.min("_te").alias("_start"),
@@ -75,14 +77,8 @@ def sessionize(events: DataFrame, gap_s: int = 1800,
     # phase 2 — exact stitch over summary rows (per-user window, but the
     # input is one row per day-session): merge iff start - prev_end ≤ gap
     wu = Window.partitionBy(user_col).orderBy("_start")
-    new_glob = F.when(
-        F.lag("_end").over(wu).isNull()
-        | ((F.col("_start") - F.lag("_end").over(wu)) > gap_s),
-        F.lit(1)).otherwise(F.lit(0))
-    run_u = wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    glob = (day_sess.withColumn("_gnew", new_glob)
-            .withColumn("session_idx",
-                        (F.sum("_gnew").over(run_u) - 1).cast("int")))
+    glob, runs = _gap_runs(day_sess, wu, "_start", "_end", gap_s, "_gnew")
+    glob = glob.withColumn("session_idx", (runs - 1).cast("int"))
     return glob.groupBy(user_col, "session_idx").agg(
         F.sum("_n").alias("n_events"),
         F.min("_start").alias("start_epoch"),

@@ -79,16 +79,6 @@ def _block_agg(emb: DataFrame, id_col: str, vec_col: str,
     return agg, n_blocks
 
 
-def _grid_keys(spark, n_blocks: int, *, triangular: bool) -> DataFrame:
-    """(blk_a, blk_b) int pairs — full grid or upper triangle. Generated
-    distributedly (spark.range × spark.range): only ints are nested-loop
-    joined, never the packed vector blocks."""
-    ra = spark.range(n_blocks).select(F.col("id").cast("int").alias("blk_a"))
-    rb = spark.range(n_blocks).select(F.col("id").cast("int").alias("blk_b"))
-    keys = ra.crossJoin(rb)
-    return keys.filter("blk_a <= blk_b") if triangular else keys
-
-
 # Hot-bucket guard: member-pool cap per bucket/cell. EXACTLY 1000, not
 # 1024: Catalyst rewrites a `row_number() <= k` filter into a PARTIAL
 # WindowGroupLimit (each map task pre-trims to its local k smallest ids
@@ -118,11 +108,25 @@ SALT_TARGET = 4096
 GRID_ROWS_PER_TASK = 8
 
 
-def _bound_grid(grid: DataFrame, n_grid_rows: int,
-                rows_per_task: int = GRID_ROWS_PER_TASK) -> DataFrame:
-    """Round-robin the joined grid so each partition (⇒ each Arrow batch)
-    holds at most `rows_per_task` block-pair rows."""
-    return grid.repartition(max(1, -(-n_grid_rows // rows_per_task)))
+def _block_grid(agg: DataFrame, n_blocks: int, *,
+                triangular: bool) -> DataFrame:
+    """(blk_b, blk_a, items_a, items_b) for every block pair of
+    _block_agg's table, or only blk_a <= blk_b (triangular). The heavy
+    rows equi-join a spark.range × spark.range int grid (a theta-join
+    would BroadcastNestedLoopJoin the packed corpus), round-robined to
+    GRID_ROWS_PER_TASK block pairs per partition (⇒ per Arrow batch)."""
+    spark = agg.sparkSession
+    ra, rb = (spark.range(n_blocks).select(
+        F.col("id").cast("int").alias(f"blk_{s}")) for s in "ab")
+    keys = ra.crossJoin(rb)
+    n_rows = n_blocks * n_blocks
+    if triangular:
+        keys = keys.filter("blk_a <= blk_b")
+        n_rows = n_blocks * (n_blocks + 1) // 2
+    a, b = (agg.select(F.col("blk").alias(f"blk_{s}"),
+                       F.col("items").alias(f"items_{s}")) for s in "ab")
+    grid = keys.join(a, "blk_a").join(b, "blk_b")
+    return grid.repartition(max(1, -(-n_rows // GRID_ROWS_PER_TASK)))
 
 
 def _bounded_groups(members: DataFrame, probes: DataFrame,
@@ -289,15 +293,8 @@ def pairs_above_fast(emb: DataFrame, threshold: float = 0.95,
     per partition (≈ 2·rows·block_rows·dim·8 B per task). Exact is
     inherently O(N²/block); the 100 TB scale path is the LSH/IVF-bucketed
     candidate set."""
-    agg, n_blocks = _block_agg(emb, id_col, vec_col, block_rows)
-    a = agg.select(F.col("blk").alias("blk_a"), F.col("items").alias("items_a"))
-    b = agg.select(F.col("blk").alias("blk_b"), F.col("items").alias("items_b"))
-    # join the HEAVY block rows by equi-key against a tiny int-pair grid —
-    # a `blk_a <= blk_b` theta-join would BroadcastNestedLoopJoin the whole
-    # packed corpus; this way only B² ints are nested-loop joined
-    keys = _grid_keys(emb.sparkSession, n_blocks, triangular=True)
-    grid = _bound_grid(keys.join(a, "blk_a").join(b, "blk_b"),
-                       n_blocks * (n_blocks + 1) // 2)
+    grid = _block_grid(*_block_agg(emb, id_col, vec_col, block_rows),
+                       triangular=True)
 
     def scan(batches):
         guard_zip_rereads()
@@ -341,18 +338,14 @@ def brute_force_topk(emb: DataFrame, k: int = 1, id_col: str = "vec_id",
     """
     from pyspark.sql import Window
 
-    agg, n_blocks = _block_agg(emb, id_col, vec_col, block_rows)
-    q = agg.select(F.col("blk").alias("blk_a"), F.col("items").alias("q_items"))
-    c = agg.select(F.col("blk").alias("blk_b"), F.col("items").alias("c_items"))
-    keys = _grid_keys(emb.sparkSession, n_blocks, triangular=False)
-    grid = _bound_grid(keys.join(q, "blk_a").join(c, "blk_b"),
-                       n_blocks * n_blocks)
+    grid = _block_grid(*_block_agg(emb, id_col, vec_col, block_rows),
+                       triangular=False)
 
     def local_topk(batches):
         guard_zip_rereads()
         for p in batches:
             frames = []
-            for q_items, c_items in zip(p["q_items"], p["c_items"]):
+            for q_items, c_items in zip(p["items_a"], p["items_b"]):
                 qi, qm = _unpack(q_items)
                 ci, cm = _unpack(c_items)
                 sims = qm @ cm.T

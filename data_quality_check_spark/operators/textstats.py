@@ -219,7 +219,7 @@ def score_buckets(scored: DataFrame, n_buckets: int = 10,
     k = F.floor(F.col(score_col) * scale).cast("long")
     keyed = scored.select(F.col(id_col), k.alias("_k")).localCheckpoint()
     hist = keyed.groupBy("_k").agg(F.count(F.lit(1)).alias("_c"))
-    total = hist.agg(F.sum("_c")).collect()[0][0]
+    total = int(hist.agg(F.sum("_c")).collect()[0][0] or 0)
     buckets = hist.select(
         "_k",
         F.least(

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from datetime import datetime
 from typing import Any
 
+from . import corpus
 from .config import DEFAULT_RULESET, REASONS, RuleSet
 from .functions.rules import ALPHA_RE, BULLET_RE, ELLIPSIS_RE, SYMBOL_CLASS, WS
 from .functions.scrub import scrub_py
@@ -33,6 +34,7 @@ _SYM_RE = re.compile(SYMBOL_CLASS)
 _ALPHA_RE = re.compile(ALPHA_RE)
 _BULLET_RE = re.compile(BULLET_RE)
 _ELLIPSIS_RE = re.compile(ELLIPSIS_RE)
+_STOPS = frozenset(corpus.STOPWORDS_ALL)
 
 
 @dataclass
@@ -71,9 +73,8 @@ def features(text: str | None) -> dict[str, float]:
     max_wl = max((len(w) for w in words), default=0)
     n_sym = n_chars - len(_SYM_RE.sub("", text))
     symbol_ratio = n_sym / n_chars if n_chars else 0.0
-    stops = set(DEFAULT_RULESET.stopwords)
     stopword_frac = (
-        sum(1 for w in words if w.lower() in stops) / n_words
+        sum(1 for w in words if w.lower() in _STOPS) / n_words
         if n_words else 0.0
     )
     alpha_frac = (

@@ -324,9 +324,10 @@ def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
 
     One row per (partition, input file): turn counts, keep/drop counts and a
     per-reason histogram map, tagged with the ruleset version.
-    `input_files=True` reads the lineage column with_input_file adds;
-    `input_files=False` tags every row "<memory>". Labeler.metrics is
-    the same table from expressions built once per job.
+    `input_files=True` reads the lineage column with_input_file adds, in
+    the manifest's path form (`file:/x` → `/x`, one rewrite per metrics
+    row); `input_files=False` tags every row "<memory>". Labeler.metrics
+    is the same table from expressions built once per job.
     """
     return _aggregate_metrics(
         labeled, *_metrics_columns(cfg, with_models,
@@ -336,7 +337,7 @@ def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
 def _metrics_columns(cfg: RuleSet, with_models: bool, *,
                      input_files: bool):
     """metrics_table's expressions: the per-row projection, the
-    aggregates and the ruleset version."""
+    aggregates and the columns set after the groupBy."""
     from ..config import REASONS
 
     reasons = [r for r in REASONS
@@ -356,16 +357,20 @@ def _metrics_columns(cfg: RuleSet, with_models: bool, *,
         )
     aggs = [*keep_counts(),
             F.create_map(*reason_entries).alias("reason_counts")]
-    return base, aggs, F.lit(cfg.version)
+    after = {"ruleset_version": F.lit(cfg.version)}
+    if input_files:
+        after["input_file"] = F.regexp_replace("input_file", "^file:/+", "/")
+    return base, aggs, after
 
 
 def _aggregate_metrics(labeled: DataFrame, base: list[Column],
-                       aggs: list[Column], version: Column) -> DataFrame:
+                       aggs: list[Column],
+                       after: dict[str, Column]) -> DataFrame:
     return (
         labeled.select(*base)
         .groupBy("partition_id", "input_file")
         .agg(*aggs)
-        .withColumn("ruleset_version", version)
+        .withColumns(after)
     )
 
 

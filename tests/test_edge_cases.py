@@ -74,3 +74,29 @@ def test_run_job_empty_input(spark, tmp_path):
     rep = dq_io.run_job(spark, src, out, with_models=False)
     # an empty parquet dir still lists >=0 files; no crash, no output rows
     assert rep.chunks_run >= 0
+
+
+def test_pack_shards_empty(spark):
+    from data_quality_check_spark.operators import sampling
+
+    df = spark.createDataFrame([], "doc_id long, n_tokens long")
+    out = sampling.pack_shards(df, budget=100)
+    assert out.columns == ["doc_id", "n_tokens", "shard_id"]
+    assert out.count() == 0
+
+
+def test_curate_with_budget_empty(spark):
+    """An empty corpus, or one every stage drops, packs into no shards
+    instead of failing analysis on an empty offsets map."""
+    from data_quality_check_spark.plans import curation
+
+    docs = spark.createDataFrame([], "doc_id long, text string, lang string")
+    assert curation.curate_corpus(docs, budget=1000).count() == 0
+    junk = spark.createDataFrame([(1, "@@@ ### $$$", "en")],
+                                 "doc_id long, text string, lang string")
+    assert curation.curate_corpus(junk, budget=1000).count() == 0
+
+
+def test_score_buckets_empty(spark):
+    df = spark.createDataFrame([], "doc_id long, q_score double")
+    assert textstats.score_buckets(df).count() == 0

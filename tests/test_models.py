@@ -89,6 +89,35 @@ def test_models_are_broadcast_friendly():
     assert langid.predict(t, m2["langid"])[0][0] == "en"
 
 
+# sha256 of each trained table's bytes. Training is part of the score
+# parquet's contract: a change that moves one of these must bump
+# __spark_entry__._SCORES_VERSION and update the digest here.
+MODEL_DIGESTS = {
+    ("langid", "table"):
+        "d90adc1a8bbb5a76060c3d877eeb5f31d8c162a27362d01bbf9e696d24ae8853",
+    ("lm", "lp3"):
+        "2a49c03e1a84e0daf1c0ad50ea5a528d5fccd1700f1ff8f1833f6b7f4596bb57",
+    ("lm", "lp2s"):
+        "05f46856073e01ed2163807862b42c37cc55bde482fe02dc15174c3cd0fc3cd1",
+    ("lm", "seen3"):
+        "570675e94665adbdbfe18deeb3ac640772c969564441357c54a90ebb306fed65",
+    ("quality", "w"):
+        "a0d2015c013faec96e79d07b9abee798aac5b6eb5e5f0b7fd6f75320d7a767ea",
+}
+
+
+def test_trained_model_tables_are_pinned(models):
+    import hashlib
+
+    import __spark_entry__
+
+    assert __spark_entry__._SCORES_VERSION == "v2"
+    for (model, key), digest in MODEL_DIGESTS.items():
+        table = np.ascontiguousarray(models[model][key])
+        assert hashlib.sha256(table.tobytes()).hexdigest() == digest, \
+            (model, key)
+
+
 # --- learned quality classifier (models/quality.py, r4 verdict #2) -------
 
 def test_quality_separates_natural_from_junk(models):

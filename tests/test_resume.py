@@ -79,12 +79,12 @@ def test_resume_after_injected_failure(spark, tmp_path, src):
     manifest_files = [f for e in dq_io.read_manifest(out)
                       for f in e["input_files"]]
     assert sorted(manifest_files) == sorted(files_in)
+    # the metrics table holds the manifest's path form: the two join raw
     metric_files = {
-        dq_io.normalize_file_uri(r[0])
-        for r in dq_io.read_metrics(spark, out)
+        r[0] for r in dq_io.read_metrics(spark, out)
         .select("input_file").distinct().collect()
     }
-    assert metric_files == files_in
+    assert metric_files == set(manifest_files) == files_in
 
 
 def test_rerun_is_noop(spark, tmp_path, src):
@@ -138,8 +138,7 @@ def test_resume_after_crash_before_manifest_commit(spark, tmp_path, src):
     # metrics lineage also exactly-once
     files_in = set(dq_io.list_input_files(spark, src))
     metric_files = {
-        dq_io.normalize_file_uri(r[0])
-        for r in dq_io.read_metrics(spark, out)
+        r[0] for r in dq_io.read_metrics(spark, out)
         .select("input_file").distinct().collect()
     }
     assert metric_files == files_in
@@ -369,7 +368,7 @@ def test_chunk_jobs_keep_callers_job_group(spark, tmp_path, src):
 def _metric_sums(spark, out):
     sums: dict = {}
     for r in dq_io.read_metrics(spark, out).collect():
-        s = sums.setdefault(dq_io.normalize_file_uri(r["input_file"]), {})
+        s = sums.setdefault(r["input_file"], {})
         for k in ("n_turns", "n_kept", "n_dropped"):
             s[k] = s.get(k, 0) + r[k]
         for reason, n in r["reason_counts"].items():

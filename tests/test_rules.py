@@ -145,3 +145,39 @@ def test_reason_order_is_canonical():
     row = {"conv_id": "c", "turn_idx": 0, "role": "robot", "text": "@@@@ ####",
            "tool": None, "ts": None}
     assert oracle.label_turns([row], with_models=False)[0].drop_reasons == ordered
+
+
+def _cfg_reads(source: str) -> set[str]:
+    """The attribute names `source` reads as `cfg.<name>`."""
+    import ast
+    import textwrap
+
+    tree = ast.parse(textwrap.dedent(source))
+    return {n.attr for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name)
+            and n.value.id == "cfg"}
+
+
+def test_no_dead_ruleset_field():
+    """Every RuleSet field but `version` is a rule input: the Spark flags
+    (rules.py, or pipeline.py for the model rules) and the oracle both
+    read it as cfg.<field>, and the SQL flags read every field but the
+    two model thresholds. A field that no engine reads is a setting that
+    silently does nothing."""
+    import dataclasses
+    import inspect
+
+    from data_quality_check_spark.config import RuleSet
+    from data_quality_check_spark.plans import pipeline
+
+    def reads(*objs):
+        return set().union(*(_cfg_reads(inspect.getsource(o))
+                             for o in objs))
+
+    fields = {f.name for f in dataclasses.fields(RuleSet)} - {"version"}
+    spark = reads(rules.validation_flags, rules.heuristic_flags,
+                  pipeline.Labeler)
+    sql = reads(rules.validation_flags_sql, rules.heuristic_flags_sql)
+    assert sorted(fields - spark) == []
+    assert sorted(fields - sql) == ["max_perplexity", "min_lang_conf"]
+    assert sorted(fields - reads(oracle)) == []
